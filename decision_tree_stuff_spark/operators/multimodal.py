@@ -2,13 +2,15 @@
 
 Media travels as an opaque ``binary`` payload column plus a typed
 metadata struct — the schema, partitioning and Arrow-batched UDF
-plumbing are real and tested. PIXEL decode is REAL for the
-uncompressed formats (24-bit BMP and binary PPM — ``decode_pixels``
-as pure Spark byte expressions, ``decode_media`` per-payload in
-Python, r8); only COMPRESSED-codec decode (JPEG/PNG/GIF, audio,
-video) still raises ``NotImplementedError`` — those libraries are
-not in this container — with a deterministic fake feature extractor
-standing in so that pipeline shape is exercised end-to-end too.
+plumbing are real and tested. PIXEL decode is REAL: the
+uncompressed formats (BMP, PPM, PGM) decode in Spark byte
+expressions, PNG and GIF in one Arrow-batched stage over the stdlib
+decoders ``decode_png`` / ``decode_gif`` (``decode_pixels``); WAV and
+Y4M decode in Spark byte expressions too. ``decode_media`` (the
+per-payload codec-library entry point) still raises
+``NotImplementedError`` for JPEG and the other codec-bound formats,
+with a deterministic fake feature extractor standing in so that
+pipeline shape is exercised end-to-end too.
 
 Scale notes:
 * Payloads stay on executors — nothing here collects binary to the
@@ -16,17 +18,17 @@ Scale notes:
   queries (`meta.*` filters, kind counts) prune it via parquet column
   pruning, so keep payload in its own column, never inside a struct
   with hot metadata.
-* Feature extraction uses ``mapInPandas`` (Arrow batches) — the
-  Python boundary is batch-at-a-time, not row-at-a-time, and output
-  partitioning inherits the scan (no shuffle).
+* Feature extraction (``mapInPandas``) and PNG/GIF decode
+  (``mapInArrow``) cross the Python boundary batch-at-a-time, not
+  row-at-a-time, and output partitioning inherits the scan (no
+  shuffle).
 * Frame sampling is pure Spark (sequence + explode + binary
   substring): no UDF.
 """
 
 from __future__ import annotations
 
-import os
-from functools import lru_cache
+from functools import lru_cache, partial
 from typing import Iterator
 
 import pandas as pd
@@ -169,20 +171,6 @@ def decode_media(payload: bytes, fmt: str):
 
 
 _PNG_SIG = "89504E470D0A1A0A"  # \x89PNG\r\n\x1a\n
-
-
-def _png_bpp(ctype):
-    """Bytes per pixel for the supported 8-bit color types (r14 —
-    the full non-palette matrix): 0 gray, 2 RGB, 4 gray+alpha,
-    6 RGBA. Garbage-safe: anything else maps to 1 and the IHDR
-    check nulls the row."""
-    return (
-        F.when(ctype == 2, F.lit(3))
-        .when(ctype == 4, F.lit(2))
-        .when(ctype == 6, F.lit(4))
-        .otherwise(F.lit(1))
-        .cast("bigint")
-    )
 
 
 def _sig(payload, pos: int, ascii_tag: str):
@@ -1487,36 +1475,37 @@ def decode_png(
     palette: bool = False,
     depth16: bool = False,
 ):
-    """Python single-payload twin of the Spark ``_png_gray_decode``
-    branch: returns ``(w, h, rgb_pixels)`` (gray expanded to R=G=B,
-    flattened top-down) for a grayscale-8 stored-deflate PNG, raises
-    on anything else. stdlib only, and deliberately NOT
-    ``zlib.decompress`` for the deflate payload: the stored blocks are
-    parsed by hand under the SAME envelope the Spark path enforces
-    (single IDAT, ``_PNG_MAX_CHUNKS`` / ``_PNG_MAX_BLOCKS`` caps,
-    BTYPE=00 only) so the two paths accept and reject identically —
-    a Huffman-compressed PNG that zlib could inflate raises here just
-    like it nulls out in Spark (the r10 twin-parity rule).
-    ``zlib.crc32`` / ``zlib.adler32`` verify the checksums.
+    """Single-payload PNG decode — the decoder ``decode_pixels`` runs
+    per row in its Arrow-batched stage (the ``png_*`` flags map to
+    the keywords here). Returns ``(w, h, rgb_pixels)`` (gray expanded
+    to R=G=B, alpha dropped, flattened top-down) for an 8-bit PNG of
+    color type 0/2/4/6 in stored-deflate blocks with filter-0
+    scanlines; raises on anything else. stdlib only, and deliberately
+    NOT ``zlib.decompress`` for the deflate payload: the blocks are
+    parsed by hand under a bounded envelope (single IDAT,
+    ``_PNG_MAX_CHUNKS`` / ``_PNG_MAX_BLOCKS`` caps, only the enabled
+    block types), so a Huffman-compressed PNG that zlib could
+    inflate raises unless its flag is set. ``zlib.crc32`` /
+    ``zlib.adler32`` verify the checksums.
 
-    ``fixed_huffman`` (r12) mirrors the Spark opt-in: a single FINAL
-    fixed-Huffman block (BTYPE=01, ``_inflate_fixed_py``) decodes.
-    ``dynamic_huffman`` (r13) likewise: a single FINAL BTYPE=10 block
+    ``fixed_huffman`` (r12): a single FINAL fixed-Huffman block
+    (BTYPE=01, ``_inflate_fixed_py``) decodes. ``dynamic_huffman``
+    (r13) likewise: a single FINAL BTYPE=10 block
     (``_inflate_dyn_py``). Anything outside the enabled set — and
-    multi/non-final compressed blocks — still raises, just as it
-    nulls out in Spark.
+    multi/non-final compressed blocks — still raises.
 
-    ``palette`` (r14) mirrors the Spark ``png_palette`` opt-in:
-    color type 3 decodes — index bytes (one per pixel, filters
-    apply to them) looked up in THE PLTE chunk that precedes the
-    first IDAT (exactly one, length a multiple of 3 in [3, 768]);
-    any index >= the entry count raises, as it nulls out in Spark.
+    ``palette`` (r14): color type 3 decodes — index bytes (one per
+    pixel, filters apply to them) looked up in THE PLTE chunk that
+    precedes the first IDAT (exactly one, length a multiple of 3 in
+    [3, 768]); any index >= the entry count raises.
 
-    ``filters`` (r14) mirrors the Spark ``png_filters`` opt-in:
-    scanline filters 1-4 (Sub/Up/Average/Paeth) are reconstructed;
-    the flag also narrows the stored-envelope raw cap to
-    ``_PNG_FH_MAX_RAW`` (the Spark shared-fold bound) so the two
-    paths accept and reject identically in filtered mode too."""
+    ``filters`` (r14): scanline filters 1-4 (Sub/Up/Average/Paeth)
+    are reconstructed; the flag also narrows the stored-envelope raw
+    cap to ``_PNG_FH_MAX_RAW``.
+
+    ``depth16`` (r14): 16-bit samples of color types 0/2/4/6 decode
+    to their MSB (the standard 8-bit downsample); the LSBs still
+    pass through the filters and the Adler-32."""
     import struct as _struct
     import zlib as _zlib
 
@@ -1566,8 +1555,8 @@ def decode_png(
             break
         if ctag == b"IDAT":
             idat, n_idat = payload[pos + 8:pos + 8 + clen], n_idat + 1
-        # mirror _png_plte_walk: only PLTE chunks BEFORE the first
-        # IDAT are considered (the walk stops at IDAT, per spec order)
+        # only PLTE chunks BEFORE the first IDAT are considered
+        # (per the spec's chunk order)
         if ctag == b"PLTE" and n_idat == 0:
             if plte_data is None:
                 plte_data = payload[pos + 8:pos + 8 + clen]
@@ -1822,628 +1811,26 @@ def _decodable_payload_expr(id_col: str, formats: tuple) -> Column:
     )
 
 
-#: Bounded-walk limits shared by the Spark PNG decoder and its Python
-#: twin ``decode_png`` (the r10 advice rule: caps must agree on both
-#: paths, pinned by tests). Real single-image PNGs reach IEND within a
-#: handful of chunks; the stored-deflate stream of a ≤64 KB-per-block
-#: image fits a few blocks.
+#: Bounded-walk limits of ``decode_png`` (pinned by tests). Real
+#: single-image PNGs reach IEND within a handful of chunks; the
+#: stored-deflate stream of a ≤64 KB-per-block image fits a few
+#: blocks.
 _PNG_MAX_CHUNKS = 8
 _PNG_MAX_BLOCKS = 4
 
 
-def _be32u(payload, pos):
-    """Big-endian uint32 at 1-based offset ``pos`` as BIGINT — CRC-32
-    and Adler-32 words exceed the signed-int range ``_be32`` uses."""
-    return F.conv(F.hex(F.substring(payload, pos, 4)), 16, 10).cast(
-        "bigint"
-    )
-
-
-def _png_gray_decode(p, cw, bw, recon=None, plte=None, depth16=False):
-    """(ok, w, h, pixels) for a grayscale-8 stored-deflate PNG — the
-    pure-expression inverse of ``encode_png``, with REAL integrity
-    verification: IHDR + IDAT CRC-32s (``F.crc32``), zlib header
-    check, stored-block LEN/~LEN check, Adler-32 recomputed over the
-    decompressed stream, and per-scanline filter-0 check. Chunk and
-    stored-block walks are bounded ``aggregate`` folds
-    (``_PNG_MAX_CHUNKS`` / ``_PNG_MAX_BLOCKS`` — same caps as the
-    Python twin ``decode_png``), taken as STAGED COLUMNS ``cw`` /
-    ``bw`` (``_png_chunk_walk`` / ``_png_block_walk`` aliased in
-    upstream selects): the per-byte reader ``zraw`` references the
-    block table once per decompressed byte, so inlining the walks
-    would re-run them per byte (measured 43 s -> ~2 s at sf0.1 for
-    the staging; CollapseProject keeps multiply-referenced non-cheap
-    aliases staged). Supported envelope, all else nulls
-    out: bit depth 8, color type 0 (grayscale), no interlace, ONE
-    IDAT chunk, stored (BTYPE=00) deflate blocks only — Huffman-coded
-    blocks are the genuinely codec-bound case ``decode_media``
-    documents. Gray is expanded to R=G=B so ``pixels`` has the same
-    shape as every other format."""
-    w = _be32(p, 17)
-    h = _be32(p, 21)
-    # r13/r14: the full 8-bit non-palette color-type matrix — 0 gray
-    # (expanded to R=G=B), 2 RGB (copied through), 4 gray+alpha,
-    # 6 RGBA (alpha filtered-through but dropped from the flat-RGB
-    # output); bpp is total and garbage-safe
-    ctype = _u8(p, 26)
-    # r14 depth16: bytes/pixel doubles at bit depth 16 (big-endian
-    # samples; the reader takes each sample's FIRST byte = MSB, the
-    # standard 8-bit downsample); spb None keeps the 8-bit plans
-    # byte-identical when the flag is off
-    if depth16:
-        spb = (
-            F.when(_u8(p, 25) == 16, F.lit(2))
-            .otherwise(F.lit(1))
-            .cast("bigint")
-        )
-        bpp = _png_bpp(ctype) * spb
-    else:
-        spb = None
-        bpp = _png_bpp(ctype)
-    # clamp header-derived sizes BEFORE they feed any sequence/fold:
-    # on a non-PNG or corrupt payload these fields are garbage, and
-    # codegen subexpression elimination can evaluate the folds
-    # EAGERLY (outside the ok-chain's short-circuit) — an unclamped
-    # sequence(1, garbage) fails the task instead of nulling the row.
-    # The clamp is semantics-preserving: a stored-deflate stream of
-    # <= _PNG_MAX_BLOCKS blocks carries at most MAX_BLOCKS*65535 raw
-    # bytes, so any raw_n beyond that could never verify anyway
-    # (blocks_ok requires cum == raw_n).
-    _cap = F.lit(_PNG_MAX_BLOCKS * 65535).cast("bigint")
-    _raw0 = h.cast("bigint") * (w.cast("bigint") * bpp + 1)
-    _sane = _raw0.isNotNull() & (_raw0 > 0) & (_raw0 <= _cap)
-    # degenerate fallbacks: dims 1 (never 0 — pmod by 0 throws under
-    # ANSI when hoisted), raw_n 0 (folds iterate nothing real)
-    one = F.lit(1).cast("bigint")
-    wb = F.when(_sane, w.cast("bigint")).otherwise(one)
-    hb = F.when(_sane, h.cast("bigint")).otherwise(one)
-    raw_n = F.when(_sane, _raw0).otherwise(F.lit(0).cast("bigint"))
-    ihdr_ok = (
-        _sane
-        &
-        (F.length(p) >= 46)  # sig 8 + IHDR 25 + shortest IDAT/IEND tail
-        & (F.hex(F.substring(p, 1, 8)) == _PNG_SIG)
-        & (_be32(p, 9) == 13)
-        & _sig(p, 13, "IHDR")
-        & (
-            (_u8(p, 25) == 8)
-            if not depth16
-            else (
-                _u8(p, 25).isin(8, 16)
-                # palette + 16-bit is invalid per spec
-                & ~((ctype == 3) & (_u8(p, 25) == 16))
-            )
-        )
-        & (
-            ctype.isin(0, 2, 4, 6)  # 8-bit non-palette matrix (r14)
-            if plte is None
-            # r14 opt-in png_palette: +3 (paletted); PLTE
-            # validity/index bounds enforced by the reader
-            else ctype.isin(0, 2, 3, 4, 6)
-        )
-        & (_u8(p, 27) == 0)   # compression: deflate
-        & (_u8(p, 28) == 0)   # filter method 0
-        & (_u8(p, 29) == 0)   # no interlace
-        & (F.crc32(F.substring(p, 13, 17)) == _be32u(p, 30))
-        & (w > 0)
-        & (h > 0)
-    )
-
-    zs, zl = cw["zs"], cw["zl"]
-    chunks_ok = (
-        cw["done"] & cw["ok"] & (cw["n_idat"] == 1) & (zl >= 11)
-    )
-
-    # --- zlib envelope ----------------------------------------------
-    cmf = _u8(p, zs)
-    flg = _u8(p, zs + 1)
-    zhdr_ok = (
-        (F.pmod(cmf, F.lit(16)) == 8)                      # deflate
-        & (F.pmod(cmf * 256 + flg, F.lit(31)) == 0)        # FCHECK
-        & (F.pmod(F.floor(flg / 32).cast("int"), F.lit(2)) == 0)  # no FDICT
-    )
-
-    blocks = bw["blocks"]
-    blocks_ok = (
-        bw["final"]
-        & bw["ok"]
-        & (bw["cum"] == raw_n)
-        & (bw["bpos"] == zs + zl - 4)  # stream consumed, Adler follows
-    )
-
-    def zraw(i):
-        # byte i (1-based) of the decompressed stream, via its block.
-        # try_element_at, not element_at: on an INVALID png the block
-        # table can be empty while the folds below still run — codegen
-        # subexpression elimination hoists the shared Adler fold out
-        # of the ok-chain's short-circuit (r12, seen once the decode
-        # moved to its own PNG-only plan), and ANSI element_at would
-        # throw instead of letting the row null out.
-        blk = F.try_element_at(
-            F.filter(
-                blocks,
-                lambda b: (i > b["cum"]) & (i <= b["cum"] + b["len"]),
-            ),
-            F.lit(1),
-        )
-        return _u8(p, blk["start"] + (i - blk["cum"]) - 1)
-
-    # --- Adler-32 over the decompressed stream -----------------------
-    s1 = F.aggregate(
-        F.sequence(F.lit(1), raw_n),
-        F.lit(0).cast("bigint"),
-        lambda a, j: a + zraw(j),
-    )
-    sw = F.aggregate(
-        F.sequence(F.lit(1), raw_n),
-        F.lit(0).cast("bigint"),
-        lambda a, j: a + j.cast("bigint") * zraw(j),
-    )
-    adler_ok = (
-        F.pmod(raw_n + (raw_n + 1) * s1 - sw, F.lit(65521)) * 65536
-        + F.pmod(F.lit(1) + s1, F.lit(65521))
-    ) == _be32u(p, zs + zl - 4)
-
-    filters_ok, png_byte = _png_pixel_reader(
-        zraw, recon, wb, hb, bpp, ctype, p=p, plte=plte, spb=spb
-    )
-    pixels = F.transform(F.sequence(F.lit(0), wb * hb * 3 - 1), png_byte)
-    ok = (
-        ihdr_ok & chunks_ok & zhdr_ok & blocks_ok & adler_ok & filters_ok
-    )
-    return ok, w, h, pixels
-
-
-def _png_pixel_reader(
-    oraw, recon, wb, hb, bpp, ctype, p=None, plte=None, spb=None
-):
-    """(filters_ok, png_byte) shared by the three deflate-envelope
-    decoders. Default (``recon is None``, the pre-r14 plan shape):
-    scanlines must use filter 0 and output byte k reads straight out
-    of the decompressed stream ``oraw``. With the r14 staged
-    reconstruction column ``recon`` (``_png_unfilter`` output):
-    filter types 0-4 are accepted, the recon array must be complete
-    (exact size, no null entries — a null marks an unknown filter
-    type or a short stream), and pixels read from ``recon`` —
-    cheaper than the stream reads (one try_element_at on a staged
-    array vs the stored path's per-byte block-table probe).
-
-    Channel mapping (r14: the full 8-bit non-palette color-type
-    matrix 0/2/4/6): output byte k is pixel ``q = k//3`` channel
-    ``c = k%3``; its SOURCE byte inside pixel q's ``bpp`` group is
-    ``c`` for the color types (2/6) and 0 (the gray byte) for the
-    gray types (0/4) — alpha bytes participate in stride and filter
-    reconstruction but are dropped from the flat-RGB output
-    contract.
-
-    ``p``/``plte`` (r14, opt-in ``png_palette``): color type 3 —
-    the decompressed stream carries one INDEX byte per pixel
-    (bpp 1, filters apply to the index bytes) and output byte k is
-    palette entry ``idx*3 + c`` read STRAIGHT OUT OF THE PAYLOAD's
-    PLTE chunk data (``_png_plte_walk`` staged as ``plte``; the main
-    chunk walk has already CRC-verified the chunk). The returned
-    ``filters_ok`` additionally requires, for type-3 rows only: one
-    PLTE before IDAT, length a multiple of 3 in [3, 768], and EVERY
-    index < pl/3 — an out-of-range index must null the row, never
-    silently read bytes beyond the palette. When ``plte`` is None
-    the expressions are byte-identical to the pre-palette plans."""
-
-    def src_off(k):
-        # 0-based offset of output byte k's source in the recon
-        # stream: q*bpp + channel*spb (spb = bytes/sample; the first
-        # byte of a big-endian sample is its MSB)
-        q = F.floor(k / 3).cast("bigint")
-        c = F.pmod(k, F.lit(3))
-        ch = c if spb is None else c * spb
-        return q * bpp + F.when(
-            (ctype == 2) | (ctype == 6), ch
-        ).otherwise(F.lit(0))
-
-    if recon is None:
-        filters_ok = F.forall(
-            F.sequence(F.lit(0), hb - 1),
-            lambda r: oraw(r * (wb * bpp + 1) + 1) == 0,
-        )
-
-        def stream_at(i):
-            # decompressed data byte at 0-based offset i, mapped
-            # through the per-row filter bytes
-            r = F.floor(i / (wb * bpp)).cast("bigint")
-            m = F.pmod(i, wb * bpp)
-            return oraw(r * (wb * bpp + 1) + 2 + m)
-
-        def png_byte(k):
-            return stream_at(src_off(k))
-
-    else:
-        filters_ok = (
-            F.coalesce(
-                F.forall(
-                    F.sequence(F.lit(0), hb - 1),
-                    lambda r: oraw(r * (wb * bpp + 1) + 1).between(0, 4),
-                ),
-                F.lit(False),
-            )
-            & (F.size(recon).cast("bigint") == hb * wb * bpp)
-            & F.coalesce(
-                F.forall(recon, lambda v: v.isNotNull()), F.lit(False)
-            )
-        )
-
-        def stream_at(i):
-            return F.try_element_at(recon, (i + 1).cast("int"))
-
-        def png_byte(k):
-            return stream_at(src_off(k))
-
-    if plte is None:
-        return filters_ok, png_byte
-
-    # --- color type 3: palette indirection through the payload -----
-    ps, pl = plte["ps"], plte["pl"]
-    n_entries = F.floor(pl / 3).cast("bigint")
-    plte_ok = F.coalesce(
-        plte.isNotNull()
-        & plte["ok"]
-        & (plte["n_plte"] == 1)
-        & (F.pmod(pl, F.lit(3)) == 0)
-        & (pl >= 3)
-        & (pl <= 768),
-        F.lit(False),
-    )
-
-    def idx_at(q):
-        # pixel q's index byte: source offset q*bpp with bpp == 1
-        return stream_at(q)
-
-    idx_ok = F.coalesce(
-        F.forall(
-            F.sequence(F.lit(0), wb * hb - 1),
-            lambda q: F.coalesce(
-                idx_at(q).cast("bigint") < n_entries, F.lit(False)
-            ),
-        ),
-        F.lit(False),
-    )
-    pal_filters_ok = F.when(
-        ctype == 3, filters_ok & plte_ok & idx_ok
-    ).otherwise(filters_ok)
-
-    base_byte = png_byte
-
-    def pal_png_byte(k):
-        q = F.floor(k / 3).cast("bigint")
-        c = F.pmod(k, F.lit(3))
-        return F.when(
-            ctype == 3,
-            _u8(p, ps + idx_at(q).cast("bigint") * 3 + c),
-        ).otherwise(base_byte(k))
-
-    return pal_filters_ok, pal_png_byte
-
-
-def _png_chunk_walk(p):
-    """Bounded CRC-checking chunk walk (stage 1 of the PNG decode —
-    see ``_png_gray_decode``): one struct column
-    (pos, zs, zl, n_idat, ok, done) locating THE IDAT chunk."""
-    # --- chunk walk: find THE IDAT, CRC-checking every chunk --------
-    cinit = F.struct(
-        F.lit(34).cast("bigint").alias("pos"),
-        F.lit(None).cast("bigint").alias("zs"),   # IDAT data start
-        F.lit(None).cast("bigint").alias("zl"),   # IDAT data length
-        F.lit(0).alias("n_idat"),
-        F.lit(True).alias("ok"),
-        F.lit(False).alias("done"),
-    )
-
-    def cstep(acc, _):
-        pos = acc["pos"]
-        clen = _be32(p, pos).cast("bigint")
-        readable = (pos + 11 + clen) <= F.length(p)
-        crc_ok = F.crc32(F.substring(p, pos + 4, clen + 4)) == _be32u(
-            p, pos + 8 + clen
-        )
-        is_iend = _sig(p, pos + 4, "IEND")
-        is_idat = _sig(p, pos + 4, "IDAT")
-        bad = clen.isNull() | (clen < 0) | ~readable | ~crc_ok
-        adv = pos + 12 + clen
-        new = (
-            F.when(
-                bad,
-                F.struct(
-                    pos.alias("pos"),
-                    acc["zs"].alias("zs"),
-                    acc["zl"].alias("zl"),
-                    acc["n_idat"].alias("n_idat"),
-                    F.lit(False).alias("ok"),
-                    F.lit(True).alias("done"),
-                ),
-            )
-            .when(
-                is_iend,
-                F.struct(
-                    pos.alias("pos"),
-                    acc["zs"].alias("zs"),
-                    acc["zl"].alias("zl"),
-                    acc["n_idat"].alias("n_idat"),
-                    acc["ok"].alias("ok"),
-                    F.lit(True).alias("done"),
-                ),
-            )
-            .when(
-                is_idat,
-                F.struct(
-                    adv.alias("pos"),
-                    F.coalesce(acc["zs"], pos + 8).alias("zs"),
-                    F.coalesce(acc["zl"], clen).alias("zl"),
-                    (acc["n_idat"] + 1).alias("n_idat"),
-                    acc["ok"].alias("ok"),
-                    F.lit(False).alias("done"),
-                ),
-            )
-            .otherwise(
-                F.struct(
-                    adv.alias("pos"),
-                    acc["zs"].alias("zs"),
-                    acc["zl"].alias("zl"),
-                    acc["n_idat"].alias("n_idat"),
-                    acc["ok"].alias("ok"),
-                    F.lit(False).alias("done"),
-                )
-            )
-        )
-        return F.when(acc["done"], acc).otherwise(new)
-
-    return F.aggregate(
-        F.sequence(F.lit(1), F.lit(_PNG_MAX_CHUNKS)), cinit, cstep
-    )
-
-
-def _png_plte_walk(p):
-    """Bounded chunk walk locating THE PLTE chunk (r14, paletted
-    color-type-3 support — RFC 2083 §4.1.2): one struct column
-    (pos, ps, pl, n_plte, ok, done) where ``ps``/``pl`` are the
-    1-based data start and byte length of the first PLTE chunk seen
-    BEFORE the first IDAT — the spec orders PLTE strictly before
-    IDAT, so the walk stops (done) at IDAT or IEND and a PLTE after
-    IDAT is simply never recorded (n_plte stays 0 and the decoder
-    nulls the row, matching the Python twin's raise). CRC integrity
-    of every visited chunk is already enforced by the main
-    ``_png_chunk_walk`` (staged alongside this one), so this walk
-    only guards readability/advance; traversal order is identical."""
-    pinit = F.struct(
-        F.lit(34).cast("bigint").alias("pos"),
-        F.lit(None).cast("bigint").alias("ps"),   # PLTE data start
-        F.lit(None).cast("bigint").alias("pl"),   # PLTE data length
-        F.lit(0).alias("n_plte"),
-        F.lit(True).alias("ok"),
-        F.lit(False).alias("done"),
-    )
-
-    def pstep(acc, _):
-        pos = acc["pos"]
-        clen = _be32(p, pos).cast("bigint")
-        readable = (pos + 11 + clen) <= F.length(p)
-        is_stop = _sig(p, pos + 4, "IEND") | _sig(p, pos + 4, "IDAT")
-        is_plte = _sig(p, pos + 4, "PLTE")
-        bad = clen.isNull() | (clen < 0) | ~readable
-        adv = pos + 12 + clen
-        new = (
-            F.when(
-                bad,
-                F.struct(
-                    pos.alias("pos"),
-                    acc["ps"].alias("ps"),
-                    acc["pl"].alias("pl"),
-                    acc["n_plte"].alias("n_plte"),
-                    F.lit(False).alias("ok"),
-                    F.lit(True).alias("done"),
-                ),
-            )
-            .when(
-                is_stop,
-                F.struct(
-                    pos.alias("pos"),
-                    acc["ps"].alias("ps"),
-                    acc["pl"].alias("pl"),
-                    acc["n_plte"].alias("n_plte"),
-                    acc["ok"].alias("ok"),
-                    F.lit(True).alias("done"),
-                ),
-            )
-            .when(
-                is_plte,
-                F.struct(
-                    adv.alias("pos"),
-                    F.coalesce(acc["ps"], pos + 8).alias("ps"),
-                    F.coalesce(acc["pl"], clen).alias("pl"),
-                    (acc["n_plte"] + 1).alias("n_plte"),
-                    acc["ok"].alias("ok"),
-                    F.lit(False).alias("done"),
-                ),
-            )
-            .otherwise(
-                F.struct(
-                    adv.alias("pos"),
-                    acc["ps"].alias("ps"),
-                    acc["pl"].alias("pl"),
-                    acc["n_plte"].alias("n_plte"),
-                    acc["ok"].alias("ok"),
-                    F.lit(False).alias("done"),
-                )
-            )
-        )
-        return F.when(acc["done"], acc).otherwise(new)
-
-    return F.aggregate(
-        F.sequence(F.lit(1), F.lit(_PNG_MAX_CHUNKS)), pinit, pstep
-    )
-
-
-def _png_block_walk(p, cw):
-    """Bounded stored-deflate block walk (stage 2 — see
-    ``_png_gray_decode``): one struct column
-    (bpos, blocks, cum, final, ok) over the zlib stream located by the
-    staged chunk-walk column ``cw``."""
-    zs, zl = cw["zs"], cw["zl"]
-    binit = F.struct(
-        (zs + 2).alias("bpos"),
-        F.array().cast(
-            "array<struct<start:bigint,cum:bigint,len:bigint>>"
-        ).alias("blocks"),
-        F.lit(0).cast("bigint").alias("cum"),
-        F.lit(False).alias("final"),
-        F.lit(True).alias("ok"),
-    )
-
-    def bstep(acc, _):
-        bpos = acc["bpos"]
-        hbyte = _u8(p, bpos)
-        blen = _le16(p, bpos + 1).cast("bigint")
-        good = (
-            hbyte.isNotNull()
-            & (F.pmod(F.floor(hbyte / 2).cast("int"), F.lit(4)) == 0)
-            & (_le16(p, bpos + 3) == (F.lit(65535) - blen))
-            & ((bpos + 4 + blen) <= (zs + zl - 5))
-        )
-        new = F.when(
-            ~good,
-            F.struct(
-                bpos.alias("bpos"),
-                acc["blocks"].alias("blocks"),
-                acc["cum"].alias("cum"),
-                F.lit(True).alias("final"),
-                F.lit(False).alias("ok"),
-            ),
-        ).otherwise(
-            F.struct(
-                (bpos + 5 + blen).alias("bpos"),
-                F.concat(
-                    acc["blocks"],
-                    F.array(
-                        F.struct(
-                            (bpos + 5).alias("start"),
-                            acc["cum"].alias("cum"),
-                            blen.alias("len"),
-                        )
-                    ),
-                ).alias("blocks"),
-                (acc["cum"] + blen).alias("cum"),
-                (F.pmod(hbyte, F.lit(2)) == 1).alias("final"),
-                F.lit(True).alias("ok"),
-            )
-        )
-        return F.when(acc["final"] | ~acc["ok"], acc).otherwise(new)
-
-    return F.aggregate(
-        F.sequence(F.lit(1), F.lit(_PNG_MAX_BLOCKS)), binit, bstep
-    )
-
-
-def _png_stored_raw(p, cw, bw, raw_n):
-    """The stored-deflate decompressed stream as ONE array<int>
-    column (bytes 1..raw_n, 1-based stream order) — the
-    materialized form of ``_png_gray_decode``'s per-byte ``zraw``
-    reader, used by the r14 filter-reconstruction stage so all three
-    deflate envelopes hand the unfilter fold the same shape (the
-    FH/DH walks already materialize their ``out`` arrays).
-    ``raw_n`` must be caller-clamped (see ``_decode_pixels_png``)."""
-    blocks = bw["blocks"]
-
-    def zraw(i):
-        blk = F.try_element_at(
-            F.filter(
-                blocks,
-                lambda b: (i > b["cum"]) & (i <= b["cum"] + b["len"]),
-            ),
-            F.lit(1),
-        )
-        return _u8(p, blk["start"] + (i - blk["cum"]) - 1)
-
-    return F.transform(F.sequence(F.lit(1), raw_n), zraw)
-
-
-def _png_unfilter(raw, wb, hb, bpp):
-    """PNG scanline-filter RECONSTRUCTION (r14 — filters 0..4: None /
-    Sub / Up / Average / Paeth, the full RFC 2083 §6 set real libpng
-    output uses) as one bounded fold: ``raw`` is the staged
-    decompressed stream (array<int>, ``hb`` scanlines of 1 filter
-    byte + ``wb*bpp`` data bytes), the result is the array of
-    ``hb*wb*bpp`` reconstructed bytes in top-down row-major order
-    (filter bytes stripped). Sequential by construction — Recon(x)
-    depends on the already-reconstructed left/up/up-left neighbors —
-    so the fold accumulates the recon array and each step reads its
-    neighbors back out of the accumulator (lambda-var reads, O(1));
-    intermediates chain through ``_let`` so the step's expression
-    tree stays analyzable (the FH-walk lesson). An unknown filter
-    type or a too-short stream yields NULL entries, which the
-    caller's recon-validity check turns into a row null-out; the
-    Paeth predictor uses the standard |b−c| / |a−c| / |a+b−2c|
-    simplification of |p−x| with p = a+b−c."""
-    stride = wb * bpp
-    zero = F.lit(0).cast("bigint")
-
-    def step(acc, i):
-        r = F.floor(i / stride).cast("bigint")
-        x = F.pmod(i, stride)
-        ft = F.try_element_at(raw, (r * (stride + 1) + 1).cast("int"))
-        fx = F.try_element_at(
-            raw, (r * (stride + 1) + 2 + x).cast("int")
-        )
-        av = F.when(
-            x >= bpp,
-            F.try_element_at(acc, (i - bpp + 1).cast("int")).cast(
-                "bigint"
-            ),
-        ).otherwise(zero)
-        bv = F.when(
-            r > 0,
-            F.try_element_at(acc, (i - stride + 1).cast("int")).cast(
-                "bigint"
-            ),
-        ).otherwise(zero)
-        cv = F.when(
-            (r > 0) & (x >= bpp),
-            F.try_element_at(
-                acc, (i - stride - bpp + 1).cast("int")
-            ).cast("bigint"),
-        ).otherwise(zero)
-
-        def recon(a):
-            def recon_b(b):
-                def recon_c(c):
-                    pa = F.abs(b - c)
-                    pb = F.abs(a - c)
-                    pc = F.abs(a + b - 2 * c)
-                    paeth = (
-                        F.when((pa <= pb) & (pa <= pc), a)
-                        .when(pb <= pc, b)
-                        .otherwise(c)
-                    )
-                    pred = (
-                        F.when(ft == 0, zero)
-                        .when(ft == 1, a)
-                        .when(ft == 2, b)
-                        .when(ft == 3, F.floor((a + b) / 2))
-                        .when(ft == 4, paeth)
-                    )  # ft outside 0..4 (or null) -> null entry
-                    return F.pmod(fx + pred, F.lit(256)).cast("int")
-
-                return _let(cv, recon_c)
-
-            return _let(bv, recon_b)
-
-        return F.concat(acc, F.array(_let(av, recon)))
-
-    return F.aggregate(
-        F.sequence(F.lit(0), hb * stride - 1),
-        F.array().cast("array<int>"),
-        step,
-    )
-
-
 #: formats decode_pixels can dispatch on
 _DECODE_FORMATS = ("bmp", "bmp8", "ppm", "pgm", "png", "gif")
+
+#: leading payload bytes that route a row to the codec stage
+_CODEC_SIGS = {"png": b"\x89PNG\r\n\x1a\n", "gif": b"GIF8"}
+
+_IMAGE_FIELDS = [
+    StructField("img_format", StringType()),
+    StructField("width", IntegerType()),
+    StructField("height", IntegerType()),
+    StructField("pixels", ArrayType(IntegerType())),
+]
 
 
 def decode_pixels(
@@ -2456,9 +1843,12 @@ def decode_pixels(
     png_palette: bool = False,
     png_16bit: bool = False,
 ) -> DataFrame:
-    """REAL pixel decode of uncompressed formats, pure Spark: returns
-    (media_id, img_format, width, height, pixels) where ``pixels`` is
-    the flattened TOP-DOWN row-major RGB byte array.
+    """REAL pixel decode: returns (media_id, img_format, width,
+    height, pixels) where ``pixels`` is the flattened TOP-DOWN
+    row-major RGB byte array; a rejected or null payload yields one
+    row whose other four columns are null.
+
+    The uncompressed formats decode in Spark byte expressions:
 
     * BMP: dispatched on the 'BM' magic; data offset, dimensions,
       bpp and compression are read from the actual header (only
@@ -2474,103 +1864,42 @@ def decode_pixels(
       tools); P6 data is already top-down RGB, P5 grayscale is
       expanded to R=G=B so ``pixels`` has one shape for every format.
 
-    * PNG 8-bit with STORED-deflate zlib (r11, ``_png_gray_decode``;
-      r13 RGB; r14 gray+alpha and RGBA — the full non-palette
-      color-type matrix 0/2/4/6): signature + IHDR dispatch,
-      CRC/Adler verified, gray expanded to R=G=B, alpha decoded
-      through the stride/filters then dropped from the flat-RGB
-      output. Huffman-compressed PNGs null out here unless the
-      opt-in walk flags below are set.
+    PNG and GIF decode in ONE Arrow-batched Python stage
+    (``mapInArrow``) that runs the stdlib decoders ``decode_png`` and
+    ``decode_gif`` once per payload; any exception a decoder raises
+    becomes a null row, so one corrupt payload never fails the job.
+    Python here is a measured choice: the same envelope decoded in
+    Catalyst expressions was over 20x slower (README.md, "Media
+    decode").
 
-    JPEG/GIF (and compressed PNG) pixel decode still requires
-    ``decode_media``'s codec libraries — header metadata for those is
-    available via ``with_image_header_meta``.
-
-    Plan shape (r12, the e6_pixel_decode attribution fix): formats
-    are DISPATCHED BEFORE the projection — a cheap signature filter
-    splits the input into a PNG branch and a non-PNG branch, each
-    with its own small projection, unioned back. r11 carried the PNG
-    chunk/block-walk expressions inside every caller's single
-    projection behind a per-row guard; the guard skips the folds at
-    runtime, but the expression tree itself cost non-PNG callers
-    ~1.5× (same-session interleaved A/B on BMP/PPM-only input,
-    SCALING_r12.md §1 — r10 body 1.95 s vs r11 body 2.88 s at
-    sf0.1). With the split, a BMP/PPM/PGM-only input's plan contains
-    no PNG expressions at all (byte-identical to the r10 plan modulo
-    one cheap signature Filter), and the PNG branch's walks run
-    unguarded on rows that are all PNGs. The price is that the
-    source is scanned once per branch — for a parquet media table
-    that is a second pruned pass over the payload column; the
-    per-row interpreted-expression overhead the fat single plan paid
-    on EVERY row at any scale measured larger.
+    * PNG: signature + IHDR dispatch, CRC-32 and Adler-32 verified,
+      8-bit color types 0/2/4/6 with filter-0 scanlines in stored
+      deflate blocks; gray expands to R=G=B and alpha is dropped.
+      The ``png_*`` flags widen the envelope (``decode_png``'s
+      keyword of the same name): ``png_fixed_huffman`` and
+      ``png_dynamic_huffman`` accept one final fixed- or
+      dynamic-Huffman deflate block, ``png_filters`` reconstructs
+      scanline filters 1-4, ``png_palette`` decodes color type 3
+      through the PLTE chunk and ``png_16bit`` decodes 16-bit
+      samples to their MSB.
+    * GIF (r14): LZW decode of one full-screen image through the
+      global or local color table, interlace included
+      (``decode_gif``). GIF rides the EXPLICIT ``formats`` contract
+      only: ``formats=None`` never decodes GIF.
 
     ``formats`` (r12) is the caller's format-inventory CONTRACT: a
     pipeline that knows its media table holds only certain formats
-    (usually recorded per-partition in the catalog) passes the
-    subset, and the plan contains ONLY those branches — no signature
-    filter, no union, no second source pass: ``formats`` without
-    'png' is the r10 single-projection shape pruned further to the
-    declared formats; ``('png',)`` is the PNG plan alone. Pruning is
-    PER-FORMAT (r13 — r12 dispatched png vs non-png only, so e.g.
-    ``('bmp',)`` still decoded ppm rows, contradicting this
-    contract): rows whose actual format falls outside the declared
-    set null out because their branch is absent from the dispatch
-    chain, and the undeclared formats' decode expressions are absent
-    from the plan. The declaration prunes the plan, it never
-    mis-decodes. Default ``None`` keeps full auto-dispatch.
-
-    ``png_fixed_huffman`` (r12) additionally decodes PNGs whose zlib
-    stream is one final FIXED-Huffman deflate block (RFC 1951
-    §3.2.6) — real LZ77 with back-references, the first class of
-    real-world PNGs beyond stored blocks. Opt-in (the walk fold
-    would otherwise sit in every PNG caller's plan — the
-    e6_pixel_decode lesson).
-
-    ``png_dynamic_huffman`` (r13 — the r12 verdict's #1 remaining
-    gap) additionally decodes PNGs whose zlib stream is one final
-    DYNAMIC-Huffman deflate block (RFC 1951 §3.2.7, BTYPE=10 — what
-    real-world encoders actually emit, zlib included): the
-    transmitted code-length code, both canonical Huffman tables and
-    the LZ77 symbol stream are all decoded in pure expressions via
-    the count-based canonical walk (no tree materialized; see
-    ``_dh_decode_sym``). Validated against zlib's own compressor
-    output in tests. Same opt-in reasoning; scope: one final block,
-    raw ≤ 64 KiB (``_PNG_FH_MAX_RAW``).
-
-    ``png_filters`` (r14 — the r13 verdict's #1 remaining gap)
-    additionally reconstructs PNGs whose scanlines use filters 1–4
-    (Sub / Up / Average / Paeth, RFC 2083 §6 — what real libpng
-    output uses per-line adaptively), across ALL enabled deflate
-    envelopes: the decompressed stream is staged once
-    (stored-block table / FH walk / DH walk, dispatched on the 3-bit
-    block header) and one bounded reconstruction fold
-    (``_png_unfilter``) undoes the filters; gray and RGB both.
-    Opt-in for the same plan-cost reason; default keeps the
-    filter-0-only plans byte-identical to r13. Scope under the flag:
-    raw ≤ ``_PNG_FH_MAX_RAW`` for every envelope (the shared
-    unfilter stage's fold bound; unfiltered stored-block decode
-    keeps its larger multi-block cap).
-
-    GIF (r14): declaring ``'gif'`` in ``formats`` adds REAL GIF
-    (LZW) decode — extension-skipping block walk, LZW data sub-block
-    table, one bounded fold per LZW code with the dictionary as
-    (start, len) windows into the output stream, and a bounds-checked
-    global-color-table lookup. GIF rides the EXPLICIT formats
-    contract only: the ``formats=None`` auto-dispatch keeps the r12
-    png/non-png split so existing default plans stay byte-identical.
-
-    ``png_palette`` (r14 — completes the 8-bit color-type matrix
-    0/2/3/4/6) additionally decodes PALETTED (color type 3) PNGs:
-    the stream carries one index byte per pixel (filters apply at
-    the 1-byte stride), RGB comes from the payload's PLTE chunk —
-    located by a bounded pre-IDAT chunk walk (``_png_plte_walk``),
-    CRC-verified by the shared chunk walk, length/multiplicity
-    validated, and every index bounds-checked against the entry
-    count (out-of-range nulls the row). Works across all enabled
-    deflate envelopes and both filter modes. Same opt-in reasoning;
-    default keeps prior plans byte-identical.
+    passes the subset, and the plan contains ONLY those formats'
+    decoders. Rows whose actual format falls outside the declared
+    set null out. When both codec and uncompressed formats are
+    declared, a signature filter splits the input into the codec
+    stage and the expression projection, unioned back (the source
+    is scanned once per branch). Default ``None`` decodes every
+    format but GIF.
     """
-    if formats is not None:
+    if formats is None:
+        fs = set(_DECODE_FORMATS) - {"gif"}
+    else:
         fs = set(formats)
         unknown = fs - set(_DECODE_FORMATS)
         if unknown:
@@ -2578,342 +1907,100 @@ def decode_pixels(
                 f"decode_pixels: unknown formats {sorted(unknown)}; "
                 f"supported: {_DECODE_FORMATS}"
             )
-        if "gif" in fs:
-            # GIF rides the EXPLICIT formats contract only (r14): the
-            # auto-dispatch default keeps the r12 png/non-png split so
-            # existing formats=None plans stay byte-identical
-            rest = fs - {"gif"}
-            if not rest:
-                return _decode_pixels_gif(media, payload_col)
-            has_gif = F.coalesce(
-                F.hex(F.substring(F.col(payload_col), 1, 4))
-                == "47494638",
-                F.lit(False),
-            )
-            gif = _decode_pixels_gif(
-                media.where(has_gif), payload_col
-            )
-            others = decode_pixels(
-                media.where(~has_gif),
-                payload_col,
-                formats=tuple(sorted(rest)),
-                png_fixed_huffman=png_fixed_huffman,
-                png_dynamic_huffman=png_dynamic_huffman,
-                png_filters=png_filters,
-                png_palette=png_palette,
-                png_16bit=png_16bit,
-            )
-            return others.unionByName(gif)
-        if "png" not in fs:
-            return _decode_pixels_nonpng(media, payload_col, formats=fs)
-        if fs == {"png"}:
-            return _decode_pixels_png(
-                media,
-                payload_col,
-                fixed_huffman=png_fixed_huffman,
-                dynamic_huffman=png_dynamic_huffman,
-                filters=png_filters,
-                palette=png_palette,
-                depth16=png_16bit,
-            )
+    decoders = {}
+    if "png" in fs:
+        decoders["png"] = partial(
+            decode_png,
+            fixed_huffman=png_fixed_huffman,
+            dynamic_huffman=png_dynamic_huffman,
+            filters=png_filters,
+            palette=png_palette,
+            depth16=png_16bit,
+        )
+    if "gif" in fs:
+        decoders["gif"] = decode_gif
+    rest = fs - set(decoders)
+    if not decoders:
+        return _decode_pixels_uncompressed(media, payload_col, rest)
+
+    def image_rows(payload):
+        for fmt, decode in decoders.items():
+            if payload is not None and payload.startswith(_CODEC_SIGS[fmt]):
+                try:
+                    return [(fmt, *decode(payload))]
+                except Exception:  # the null row is the reject report
+                    break
+        return [(None, None, None, None)]
+
+    if not rest:
+        return _decode_stage(media, payload_col, _IMAGE_FIELDS, image_rows)
     p = F.col(payload_col)
-    # null payloads must route to the non-PNG branch (where they null
-    # out), not vanish: coalesce the signature test to false
-    has_png_sig = F.coalesce(
-        F.hex(F.substring(p, 1, 8)) == _PNG_SIG, F.lit(False)
+    is_codec = F.lit(False)
+    for fmt in decoders:
+        sig = _CODEC_SIGS[fmt]
+        is_codec = is_codec | (
+            F.hex(F.substring(p, 1, len(sig))) == sig.hex().upper()
+        )
+    # null payloads must route to the expression branch (where they
+    # null out), not vanish: coalesce the signature test to false
+    is_codec = F.coalesce(is_codec, F.lit(False))
+    plain = _decode_pixels_uncompressed(
+        media.where(~is_codec), payload_col, rest
     )
-    non_png = _decode_pixels_nonpng(
-        media.where(~has_png_sig),
-        payload_col,
-        formats=(set(formats) - {"png"}) if formats is not None else None,
+    coded = _decode_stage(
+        media.where(is_codec), payload_col, _IMAGE_FIELDS, image_rows
     )
-    png = _decode_pixels_png(
-        media.where(has_png_sig),
-        payload_col,
-        fixed_huffman=png_fixed_huffman,
-        dynamic_huffman=png_dynamic_huffman,
-        filters=png_filters,
-        palette=png_palette,
-        depth16=png_16bit,
+    return plain.unionByName(coded)
+
+
+def _decode_stage(media: DataFrame, payload_col: str, fields, decode_rows):
+    """One Arrow-batched Python stage over ``(media_id, payload)``:
+    ``decode_rows(payload)`` returns the output tuples (aligned with
+    ``fields``) of one payload, each emitted after that row's
+    ``media_id``. Narrow, no shuffle: output partitioning inherits
+    the input's."""
+    import sys
+
+    from pyspark import cloudpickle
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    # Python workers need not have this package on their path: ship
+    # the decoders by value, not as references to this module
+    cloudpickle.register_pickle_by_value(sys.modules[__name__])
+    schema = StructType(
+        [StructField("media_id", media.schema["media_id"].dataType)]
+        + list(fields)
     )
-    return non_png.unionByName(png)
+    arrow_schema = to_arrow_schema(schema)
 
+    def run(batches):
+        import pyarrow as pa
 
-#: Expression-construction backend for the PNG decode plan. "column"
-#: (default) is the per-node py4j/ColumnNode build; "sql" assembles
-#: each staged walk as one SQL text via strexpr and hands it to ONE
-#: ``F.expr`` per staged column. MEASURED NEGATIVE (SCALING_r14.md
-#: §6): the sql path cuts construction from ~3.8 s to ~0.05 s (it
-#: eliminates ~31k py4j round trips) but ``F.expr`` parse is LAZY —
-#: paid inside each select's eager analysis — and ANTLR on the
-#: ~515 KB deeply-nested program costs ~18 s, 3-7x the ColumnNode
-#: analysis it replaces (full-flag build+selects: column 8.2 s vs
-#: sql 22.6 s, same session). Kept in-tree gated at zero
-#: default-plan cost with a byte-identity differential test, the DH
-#: peek-walk precedent. Overridable for A/B via env.
-_PNG_EXPR_BACKEND = os.environ.get("SPARK_GRAFT_PNG_EXPR", "column")
-
-
-def _decode_pixels_png(
-    media: DataFrame,
-    payload_col: str,
-    fixed_huffman: bool = False,
-    dynamic_huffman: bool = False,
-    filters: bool = False,
-    palette: bool = False,
-    depth16: bool = False,
-) -> DataFrame:
-    """The PNG-only decode plan: every input row carries the PNG
-    signature, so the walk folds are staged as columns (each
-    multiply-referenced downstream — CollapseProject keeps them
-    staged; see _png_gray_decode for why inlining would re-execute
-    the walks per decompressed byte). With ``fixed_huffman`` the
-    fixed-Huffman symbol walk (``_png_fixed_walk``) is additionally
-    staged, guarded by the cheap 3-bit block-header check so
-    stored-block rows never run it — opt-in precisely because of the
-    r12 e6_pixel_decode lesson (expressions in a plan cost even the
-    rows that skip them at runtime). ``dynamic_huffman`` (r13) stages
-    the four BTYPE=10 columns (header / code-lengths walk / tables /
-    symbol walk, see the section note above ``_dh_decode_sym``) under
-    the same guard pattern — the low-3-bits check routes stored and
-    FH rows around every dynamic fold.
-
-    ``filters`` (r14) stages two more columns shared by EVERY
-    enabled envelope: ``__praw``, the decompressed stream as one
-    array (stored-block reader materialized / FH walk out / DH walk
-    out, dispatched on the 3-bit block header), and ``__prc``, the
-    ``_png_unfilter`` reconstruction fold over it. The decoders then
-    read pixels from ``__prc`` and accept filter types 0-4 instead
-    of requiring 0; scope under the flag is raw <= _PNG_FH_MAX_RAW
-    for every envelope (the shared fold bound).
-
-    Expression construction vs plan assembly are split (r14,
-    ``_png_plan_exprs``) so the expression program can be built under
-    either backend: the default ``column`` backend is the per-node
-    py4j/ColumnNode build; the gated ``sql`` backend assembles the
-    walks as ONE SQL text per staged column via :mod:`strexpr`.
-    Tests pin the two backends byte-identical; the sql path is a
-    measured NEGATIVE for wall time (see ``_PNG_EXPR_BACKEND``) —
-    it exists as the reproducible record of that measurement and as
-    a construction-path differential oracle."""
-    backend = _PNG_EXPR_BACKEND
-    if backend == "sql":
-        import sys
-
-        from . import strexpr
-
-        with strexpr.string_backend(sys.modules[__name__]):
-            staged_e, finals_e = _png_plan_exprs(
-                payload_col, fixed_huffman, dynamic_huffman, filters, palette, depth16
+        for batch in batches:
+            rows = [
+                (mid, *row)
+                for mid, payload in zip(
+                    batch.column(0).to_pylist(), batch.column(1).to_pylist()
+                )
+                for row in decode_rows(payload)
+            ]
+            cols = list(zip(*rows)) or [()] * len(arrow_schema)
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(c, type=f.type) for c, f in zip(cols, arrow_schema)],
+                schema=arrow_schema,
             )
-        staged_e = [(n, strexpr.to_col(e)) for n, e in staged_e]
-        finals = [strexpr.to_col(e) for e in finals_e]
-    else:
-        staged_e, finals = _png_plan_exprs_cached(
-            payload_col, fixed_huffman, dynamic_huffman, filters, palette, depth16
-        )
-    df = media
-    for n, e in staged_e:
-        df = df.select("*", e.alias(n))
-    if os.environ.get("SPARK_GRAFT_PNG_SPLIT", "0") == "1":
-        # r15 A/B knob (verdict task 3): materialize the staged walk
-        # columns before the pixel-assembly select, splitting the one
-        # giant expression tree each task evaluates into two smaller
-        # ones. localCheckpoint (lazy) — computed per invocation
-        # inside the timed plan, nothing crosses runs.
-        df = df.localCheckpoint(eager=False)
-    return df.select("media_id", *finals)
+
+    return media.select("media_id", payload_col).mapInArrow(run, schema)
 
 
-@lru_cache(maxsize=32)
-def _png_plan_exprs_cached(
-    payload_col: str,
-    fixed_huffman: bool,
-    dynamic_huffman: bool,
-    filters: bool,
-    palette: bool,
-    depth16: bool,
-):
-    """Memoized Column-backend PNG expression program (r14
-    optimization round): the program is a pure function of its flag
-    signature — no data, schema or session state enters construction
-    — and costs ~4-11 s of py4j round trips per build, measured at
-    its floor twice (SCALING_r13.md §1, SCALING_r14.md §6). Caching
-    the immutable Column trees makes repeat plan builds free;
-    analysis, codegen and execution are untouched, and every
-    invocation still computes from the parquet inputs. The
-    sql/strexpr backend path calls ``_png_plan_exprs`` directly under
-    its F-swap context manager and must never share this cache (the
-    cached trees are py4j Columns, not strexpr fragments)."""
-    staged, finals = _png_plan_exprs(
-        payload_col, fixed_huffman, dynamic_huffman, filters, palette, depth16
-    )
-    return tuple(staged), tuple(finals)
-
-
-def _png_plan_exprs(
-    payload_col: str,
-    fixed_huffman: bool = False,
-    dynamic_huffman: bool = False,
-    filters: bool = False,
-    palette: bool = False,
-    depth16: bool = False,
-):
-    """The PNG decode EXPRESSION PROGRAM, backend-agnostic: returns
-    ``(staged, finals)`` where ``staged`` is an ordered list of
-    ``(column_name, expr)`` (later stages reference earlier ones by
-    column name) and ``finals`` are the four aliased output
-    expressions ``img_format / width / height / pixels``.  Every
-    expression is built through the module-global ``F``, so the same
-    code produces Column trees (py4j) or :class:`strexpr.S` fragment
-    trees (string backend) depending on what ``F`` is bound to at
-    call time."""
-    p = F.col(payload_col)
-    staged = [("__pcw", _png_chunk_walk(p))]
-    staged.append(("__pbw", _png_block_walk(p, F.col("__pcw"))))
-    if palette:
-        # PLTE located only for type-3 rows; other color types (and
-        # garbage payloads) skip the fold at runtime
-        staged.append(
-            ("__ppl", F.when(_u8(p, 26) == 3, _png_plte_walk(p)))
-        )
-    plte = F.col("__ppl") if palette else None
-    if fixed_huffman or dynamic_huffman or filters:
-        w = _be32(p, 17)
-        h = _be32(p, 21)
-        _bpp = _png_bpp(_u8(p, 26))
-        if depth16:
-            _bpp = _bpp * (
-                F.when(_u8(p, 25) == 16, F.lit(2))
-                .otherwise(F.lit(1))
-                .cast("bigint")
-            )
-        _raw0 = h.cast("bigint") * (w.cast("bigint") * _bpp + 1)
-        _sane = (
-            _raw0.isNotNull()
-            & (_raw0 > 0)
-            & (_raw0 <= F.lit(_PNG_FH_MAX_RAW).cast("bigint"))
-        )
-        raw_n = F.when(_sane, _raw0).otherwise(F.lit(0).cast("bigint"))
-    if fixed_huffman:
-        fh_sig = _sane & (
-            F.pmod(_u8(p, F.col("__pcw")["zs"] + 2), F.lit(8)) == 3
-        )
-        staged.append(
-            (
-                "__pfw",
-                F.when(fh_sig, _png_fixed_walk(p, F.col("__pcw"), raw_n)),
-            )
-        )
-    if dynamic_huffman:
-        dh_sig = _sane & (
-            F.pmod(_u8(p, F.col("__pcw")["zs"] + 2), F.lit(8)) == 5
-        )
-        staged.append(
-            ("__pdh", F.when(dh_sig, _png_dh_header(p, F.col("__pcw"))))
-        )
-        staged.append(
-            (
-                "__pdl",
-                F.when(
-                    dh_sig,
-                    _png_dh_lens_walk(p, F.col("__pcw"), F.col("__pdh")),
-                ),
-            )
-        )
-        staged.append(
-            (
-                "__pdt",
-                F.when(
-                    dh_sig, _png_dh_tabs(F.col("__pdh"), F.col("__pdl"))
-                ),
-            )
-        )
-        staged.append(
-            (
-                "__pdw",
-                F.when(
-                    dh_sig,
-                    _png_dyn_walk(
-                        p, F.col("__pcw"), raw_n, F.col("__pdt")
-                    ),
-                ),
-            )
-        )
-    recon = None
-    if filters:
-        # the decompressed stream, one staged array column for every
-        # enabled envelope: the 3-bit block header routes each row to
-        # its envelope's reader (stored blocks may be non-final ->
-        # low3 in {0,1}; one final FH block -> 3; one final DH -> 5).
-        low3 = F.pmod(_u8(p, F.col("__pcw")["zs"] + 2), F.lit(8))
-        praw = F.when(
-            _sane & (low3 <= 1),
-            _png_stored_raw(
-                p, F.col("__pcw"), F.col("__pbw"), raw_n
-            ),
-        )
-        if fixed_huffman:
-            praw = praw.when(low3 == 3, F.col("__pfw")["out"])
-        if dynamic_huffman:
-            praw = praw.when(low3 == 5, F.col("__pdw")["out"])
-        one = F.lit(1).cast("bigint")
-        wbf = F.when(_sane, w.cast("bigint")).otherwise(one)
-        hbf = F.when(_sane, h.cast("bigint")).otherwise(one)
-        staged.append(("__praw", praw))
-        staged.append(
-            ("__prc", _png_unfilter(F.col("__praw"), wbf, hbf, _bpp))
-        )
-        recon = F.col("__prc")
-    png_ok, png_w, png_h, png_pixels = _png_gray_decode(
-        p, F.col("__pcw"), F.col("__pbw"), recon=recon, plte=plte,
-        depth16=depth16,
-    )
-    fmt = F.when(png_ok, "png")
-    width = F.when(png_ok, png_w)
-    height = F.when(png_ok, png_h)
-    pixels = F.when(png_ok, png_pixels)
-    if fixed_huffman:
-        fh_ok, fh_w, fh_h, fh_pixels = _png_gray_decode_fh(
-            p, F.col("__pcw"), F.col("__pfw"), recon=recon, plte=plte,
-            depth16=depth16,
-        )
-        fmt = fmt.when(fh_ok, "png")
-        width = width.when(fh_ok, fh_w)
-        height = height.when(fh_ok, fh_h)
-        pixels = pixels.when(fh_ok, fh_pixels)
-    if dynamic_huffman:
-        dh_ok, dh_w, dh_h, dh_pixels = _png_gray_decode_dh(
-            p, F.col("__pcw"), F.col("__pdw"), recon=recon, plte=plte,
-            depth16=depth16,
-        )
-        fmt = fmt.when(dh_ok, "png")
-        width = width.when(dh_ok, dh_w)
-        height = height.when(dh_ok, dh_h)
-        pixels = pixels.when(dh_ok, dh_pixels)
-    finals = [
-        fmt.alias("img_format"),
-        width.cast("int").alias("width"),
-        height.cast("int").alias("height"),
-        pixels.alias("pixels"),
-    ]
-    return staged, finals
-
-
-def _decode_pixels_nonpng(
-    media: DataFrame, payload_col: str, formats=None
+def _decode_pixels_uncompressed(
+    media: DataFrame, payload_col: str, formats
 ) -> DataFrame:
     """The uncompressed-format decode plan (BMP-24 / BMP-8 paletted /
-    PPM / PGM) — the r10 projection body: no PNG expressions anywhere
-    in this plan.
-
-    ``formats`` (r13, advice fix — the contract was previously
-    png/non-png granular only): when a proper subset of the
-    uncompressed formats is declared, the dispatch chain is built
-    from ONLY those formats' branches — undeclared formats null out
-    (their ``ok`` predicate never enters the chain) and their decode
-    expressions are absent from the plan entirely, per-format, not
-    just per-branch."""
+    PPM / PGM) — one projection. The dispatch chain is built from
+    ONLY the declared ``formats``' branches (r13): undeclared formats
+    null out (their ``ok`` predicate never enters the chain) and their
+    decode expressions are absent from the plan."""
     p = F.col(payload_col)
     is_bmp = (F.length(p) >= 54) & (F.hex(F.substring(p, 1, 2)) == "424D")
     is_ppm = (F.length(p) >= 9) & (F.hex(F.substring(p, 1, 3)) == "50360A")
@@ -3032,17 +2119,15 @@ def _decode_pixels_nonpng(
         ("ppm", p_ok, p_w, p_h, ppm_pixels),
         ("pgm", g_ok, g_w, g_h, pgm_pixels),
     ]
-    if formats is not None:
-        fs = set(formats)
-        branches = [b for b in branches if b[0] in fs]
+    branches = [b for b in branches if b[0] in formats]
 
     def chain(val_of):
         out = None
         for name, ok, w, h, px in branches:
             v = val_of(name, w, h, px)
             out = F.when(ok, v) if out is None else out.when(ok, v)
-        # empty declared set (e.g. formats=('png',) routed here by a
-        # caller bug) degenerates to all-null columns, never a decode
+        # an empty declared set (e.g. formats=()) degenerates to
+        # all-null columns, never a decode
         return out if out is not None else F.lit(None)
 
     fmt = chain(lambda name, w, h, px: F.lit(name))
@@ -3155,10 +2240,9 @@ def synthesize_header_media(
 # --- fixed-Huffman deflate PNG (r12) ------------------------------------
 #
 # RFC 1951 §3.2.6: deflate block type 01 uses a SPEC-FIXED Huffman
-# alphabet (no dynamic code-length tree), so a bounded bit-walk fold
-# can decode it without any codec library — the first class of
-# real-world PNGs beyond stored blocks. Dynamic-Huffman (BTYPE=10)
-# remains legitimately env-blocked (`decode_media`).
+# alphabet (no dynamic code-length tree) — the first class of
+# real-world PNGs beyond stored blocks. ``encode_png_fixed`` emits it
+# and ``_inflate_fixed_py`` decodes it.
 #
 # Fixed literal/length codes (MSB-first):
 #   0..143   -> 8 bits, code = lit + 0x30      (00110000..10111111)
@@ -3178,9 +2262,9 @@ _FH_DIST_BASE = [1, 2, 3, 4, 5, 7, 9, 13, 17, 25, 33, 49, 65, 97,
                  3073, 4097, 6145, 8193, 12289, 16385, 24577]
 _FH_DIST_EXTRA = [0, 0, 0, 0, 1, 1, 2, 2, 3, 3, 4, 4, 5, 5, 6, 6, 7,
                   7, 8, 8, 9, 9, 10, 10, 11, 11, 12, 12, 13, 13]
-#: FH decode is scoped to streams whose raw size fits one stored
+#: Huffman decode is scoped to streams whose raw size fits one stored
 #: block's worth of bytes — same bound the stored path enforces per
-#: block; keeps the symbol fold bounded on garbage headers.
+#: block; keeps decode bounded on garbage headers.
 _PNG_FH_MAX_RAW = 65535
 
 
@@ -3193,327 +2277,15 @@ def _pow2(k):
     )
 
 
-def _fh_bit(p, zs, i):
-    """Bit ``i`` (0-based) of the deflate data that starts at 1-based
-    byte offset ``zs + 2`` — LSB-first within each byte (RFC 1951)."""
-    byte = _u8(p, zs + 2 + F.floor(i / 8).cast("bigint"))
-    return F.pmod(
-        F.floor(byte / _pow2(F.pmod(i, F.lit(8)))).cast("int"), F.lit(2)
-    )
-
-
-def _fh_val(p, zs, i, n):
-    """``n`` extra bits at bit pos ``i`` as an LSB-first integer
-    (n dynamic, 0..13; n = 0 reads nothing)."""
-    return F.when(
-        n > 0,
-        F.aggregate(
-            F.sequence(F.lit(0).cast("bigint"), n.cast("bigint") - 1),
-            F.lit(0).cast("bigint"),
-            lambda a, j: a
-            + _fh_bit(p, zs, i + j).cast("bigint") * _pow2(j),
-        ),
-    ).otherwise(F.lit(0).cast("bigint"))
-
-
-def _fh_code(p, zs, i, n: int):
-    """``n`` bits at bit pos ``i`` read MSB-first (Huffman code
-    order); n is a Python literal."""
-    e = F.lit(0)
-    for j in range(n):
-        e = e * 2 + _fh_bit(p, zs, i + j)
-    return e
-
-
 def _let(value, body):
     """Bind ``value`` as a LAMBDA VARIABLE for ``body`` — the
     one-element ``transform`` trick. Beyond the usual evaluate-once
     property, this keeps the expression TREE small: every plain
-    Column reference copies its whole subtree, and the FH symbol
-    step references its intermediates (sym, bit positions, lengths)
-    so many times that naive inlining blew the ANALYZER's heap
-    (tree-size explosion, not a runtime cost). A lambda-var
-    reference is one node."""
+    Column reference copies its whole subtree, so an encoder that
+    references an intermediate many times would otherwise blow up
+    the ANALYZER's heap (tree-size explosion, not a runtime cost).
+    A lambda-var reference is one node."""
     return F.element_at(F.transform(F.array(value), body), 1)
-
-
-def _png_fixed_walk(p, cw, raw_n):
-    """Fixed-Huffman symbol walk (stage 2-FH): one struct column
-    ``(bp, out, done, ok)`` — ``bp`` the bit position after the walk,
-    ``out`` the decompressed byte array. One fold step per SYMBOL
-    (≤ raw_n literals/copies + EOB); LZ77 copies, including
-    OVERLAPPING ones, are expressed as cyclic repetition of the last
-    ``D`` bytes (``out[len − D + (j mod D)]`` — byte-by-byte copy
-    semantics in closed form). Any malformed code, over-long output
-    or out-of-window distance flips ``ok`` and stops. Null-safe under
-    eager subexpression hoisting (try_element_at reads, clamped table
-    indices, caller-clamped ``raw_n``); intermediates are chained
-    through ``_let`` lambda bindings to keep the step's tree
-    analyzable."""
-    zs = cw["zs"]
-    lenb = F.array(*[F.lit(v) for v in _FH_LEN_BASE])
-    lene = F.array(*[F.lit(v) for v in _FH_LEN_EXTRA])
-    distb = F.array(*[F.lit(v) for v in _FH_DIST_BASE])
-    diste = F.array(*[F.lit(v) for v in _FH_DIST_EXTRA])
-    init = F.struct(
-        F.lit(3).cast("bigint").alias("bp"),
-        F.array().cast("array<int>").alias("out"),
-        F.lit(False).alias("done"),
-        F.lit(True).alias("ok"),
-    )
-
-    def step(acc, _):
-        bp = acc["bp"]
-        out = acc["out"]
-
-        def with_sym(hdr):
-            # hdr: (sym, nb, sok) — decoded symbol, its bit cost,
-            # code validity
-            sym, nb, sok = hdr["sym"], hdr["nb"], hdr["sok"]
-            osz = F.size(out).cast("bigint")
-            fail = F.struct(
-                bp.alias("bp"), out.alias("out"),
-                F.lit(True).alias("done"), F.lit(False).alias("ok"),
-            )
-
-            def with_len(lp):
-                L, bp2 = lp["L"], lp["bp2"]
-
-                def with_dist(dp):
-                    D, bp3 = dp["D"], dp["bp3"]
-                    dist_ok = (
-                        (dp["dc"] <= 29) & (D >= 1) & (D <= osz)
-                        & (L >= 3) & (L <= 258)
-                    )
-                    copied = F.transform(
-                        F.sequence(F.lit(0).cast("bigint"), L - 1),
-                        lambda j: F.try_element_at(
-                            out, (osz - D + F.pmod(j, D) + 1).cast("int")
-                        ),
-                    )
-                    return F.when(
-                        dist_ok,
-                        F.struct(
-                            bp3.alias("bp"),
-                            F.concat(out, copied).alias("out"),
-                            F.lit(False).alias("done"),
-                            acc["ok"].alias("ok"),
-                        ),
-                    ).otherwise(fail)
-
-                dc = _fh_code(p, zs, bp2, 5)
-                dci = F.least(dc, F.lit(29)).cast("int")
-                dext = F.element_at(diste, dci + 1)
-                return _let(
-                    F.struct(
-                        dc.alias("dc"),
-                        (
-                            F.element_at(distb, dci + 1).cast("bigint")
-                            + _fh_val(p, zs, bp2 + 5, dext)
-                        ).alias("D"),
-                        (bp2 + 5 + dext.cast("bigint")).alias("bp3"),
-                    ),
-                    with_dist,
-                )
-
-            li = F.greatest(
-                F.least(sym - 257, F.lit(28)), F.lit(0)
-            ).cast("int")
-            lext = F.element_at(lene, li + 1)
-            len_branch = _let(
-                F.struct(
-                    (
-                        F.element_at(lenb, li + 1).cast("bigint")
-                        + _fh_val(p, zs, bp + nb, lext)
-                    ).alias("L"),
-                    (bp + nb + lext.cast("bigint")).alias("bp2"),
-                ),
-                with_len,
-            )
-            return (
-                F.when(sym.isNull() | ~sok | (osz > raw_n), fail)
-                .when(
-                    sym == 256,
-                    F.struct(
-                        (bp + 7).alias("bp"), out.alias("out"),
-                        F.lit(True).alias("done"), acc["ok"].alias("ok"),
-                    ),
-                )
-                .when(
-                    sym < 256,
-                    F.struct(
-                        (bp + nb).alias("bp"),
-                        F.concat(
-                            out, F.array(sym.cast("int"))
-                        ).alias("out"),
-                        F.lit(False).alias("done"),
-                        acc["ok"].alias("ok"),
-                    ),
-                )
-                .when((sym >= 257) & (sym <= 285), len_branch)
-                .otherwise(fail)
-            )
-
-        def decode_sym(codes):
-            v7, v8, v9 = codes["v7"], codes["v8"], codes["v9"]
-            is7 = v7 <= 23
-            is8lit = (v8 >= 48) & (v8 <= 191)
-            is8hi = (v8 >= 192) & (v8 <= 199)
-            is9 = (v9 >= 400) & (v9 <= 511)
-            return F.struct(
-                (
-                    F.when(is7, v7 + 256)
-                    .when(is8lit, v8 - 48)
-                    .when(is8hi, v8 + 88)
-                    .otherwise(v9 - 256)
-                ).alias("sym"),
-                F.when(is7, F.lit(7))
-                .when(is8lit | is8hi, F.lit(8))
-                .otherwise(F.lit(9))
-                .cast("bigint")
-                .alias("nb"),
-                (is7 | is8lit | is8hi | is9).alias("sok"),
-            )
-
-        def with_codes(v7c):
-            v7 = v7c["v7"]
-            return _let(
-                _let(
-                    F.struct(
-                        v7.alias("v7"),
-                        (v7 * 2 + _fh_bit(p, zs, bp + 7)).alias("v8"),
-                    ),
-                    lambda c8: F.struct(
-                        c8["v7"].alias("v7"),
-                        c8["v8"].alias("v8"),
-                        (
-                            c8["v8"] * 2 + _fh_bit(p, zs, bp + 8)
-                        ).alias("v9"),
-                    ),
-                ),
-                lambda codes: _let(decode_sym(codes), with_sym),
-            )
-
-        new = _let(
-            F.struct(_fh_code(p, zs, bp, 7).alias("v7")), with_codes
-        )
-        return F.when(acc["done"], acc).otherwise(new)
-
-    return F.aggregate(
-        F.sequence(F.lit(1), F.greatest(raw_n + 1, F.lit(1))), init, step
-    )
-
-
-def _png_gray_decode_fh(p, cw, fw, recon=None, plte=None, depth16=False):
-    """(ok, w, h, pixels) for a grayscale-8 PNG whose zlib stream is
-    ONE final fixed-Huffman deflate block (BTYPE=01) — the FH sibling
-    of ``_png_gray_decode``, consuming the staged symbol walk ``fw``
-    (``_png_fixed_walk``) instead of the stored-block table. Envelope
-    checks mirror the stored path (IHDR + CRC, single IDAT, zlib
-    header); integrity is REAL: Adler-32 recomputed over the
-    DECOMPRESSED bytes, per-scanline filter-0 check, exact output
-    length, and the walk must end on EOB within the stream's bit
-    budget. Scope: raw size ≤ ``_PNG_FH_MAX_RAW`` (the fold bound);
-    dynamic-Huffman blocks fail the 3-bit header check and null out
-    (codec-bound, documented)."""
-    w = _be32(p, 17)
-    h = _be32(p, 21)
-    ctype = _u8(p, 26)
-    # r14 depth16: bytes/pixel doubles at bit depth 16 (big-endian
-    # samples; the reader takes each sample's FIRST byte = MSB, the
-    # standard 8-bit downsample); spb None keeps the 8-bit plans
-    # byte-identical when the flag is off
-    if depth16:
-        spb = (
-            F.when(_u8(p, 25) == 16, F.lit(2))
-            .otherwise(F.lit(1))
-            .cast("bigint")
-        )
-        bpp = _png_bpp(ctype) * spb
-    else:
-        spb = None
-        bpp = _png_bpp(ctype)
-    _cap = F.lit(_PNG_FH_MAX_RAW).cast("bigint")
-    _raw0 = h.cast("bigint") * (w.cast("bigint") * bpp + 1)
-    _sane = _raw0.isNotNull() & (_raw0 > 0) & (_raw0 <= _cap)
-    one = F.lit(1).cast("bigint")
-    wb = F.when(_sane, w.cast("bigint")).otherwise(one)
-    hb = F.when(_sane, h.cast("bigint")).otherwise(one)
-    raw_n = F.when(_sane, _raw0).otherwise(F.lit(0).cast("bigint"))
-    ihdr_ok = (
-        _sane
-        & (F.length(p) >= 46)
-        & (F.hex(F.substring(p, 1, 8)) == _PNG_SIG)
-        & (_be32(p, 9) == 13)
-        & _sig(p, 13, "IHDR")
-        & (
-            (_u8(p, 25) == 8)
-            if not depth16
-            else (
-                _u8(p, 25).isin(8, 16)
-                # palette + 16-bit is invalid per spec
-                & ~((ctype == 3) & (_u8(p, 25) == 16))
-            )
-        )
-        & (
-            ctype.isin(0, 2, 4, 6)  # 8-bit non-palette matrix (r14)
-            if plte is None
-            # r14 opt-in png_palette: +3 (paletted); PLTE
-            # validity/index bounds enforced by the reader
-            else ctype.isin(0, 2, 3, 4, 6)
-        )
-        & (_u8(p, 27) == 0)
-        & (_u8(p, 28) == 0)
-        & (_u8(p, 29) == 0)
-        & (F.crc32(F.substring(p, 13, 17)) == _be32u(p, 30))
-        & (w > 0)
-        & (h > 0)
-    )
-    zs, zl = cw["zs"], cw["zl"]
-    chunks_ok = cw["done"] & cw["ok"] & (cw["n_idat"] == 1) & (zl >= 11)
-    cmf = _u8(p, zs)
-    flg = _u8(p, zs + 1)
-    zhdr_ok = (
-        (F.pmod(cmf, F.lit(16)) == 8)
-        & (F.pmod(cmf * 256 + flg, F.lit(31)) == 0)
-        & (F.pmod(F.floor(flg / 32).cast("int"), F.lit(2)) == 0)
-    )
-    # BFINAL=1 + BTYPE=01: low three bits of the first deflate byte
-    btype_fh = F.pmod(_u8(p, zs + 2), F.lit(8)) == 3
-    out = fw["out"]
-    walk_ok = (
-        fw["done"]
-        & fw["ok"]
-        & (F.size(out).cast("bigint") == raw_n)
-        & (fw["bp"] <= (zl - 6) * 8)  # data bytes = zl - 2 hdr - 4 adler
-    )
-
-    def oraw(j):  # byte j (1-based) of the decompressed stream
-        return F.try_element_at(out, j.cast("int"))
-
-    s1 = F.aggregate(
-        F.sequence(F.lit(1), raw_n),
-        F.lit(0).cast("bigint"),
-        lambda a, j: a + oraw(j),
-    )
-    sw = F.aggregate(
-        F.sequence(F.lit(1), raw_n),
-        F.lit(0).cast("bigint"),
-        lambda a, j: a + j.cast("bigint") * oraw(j),
-    )
-    adler_ok = (
-        F.pmod(raw_n + (raw_n + 1) * s1 - sw, F.lit(65521)) * 65536
-        + F.pmod(F.lit(1) + s1, F.lit(65521))
-    ) == _be32u(p, zs + zl - 4)
-    filters_ok, png_byte = _png_pixel_reader(
-        oraw, recon, wb, hb, bpp, ctype, p=p, plte=plte, spb=spb
-    )
-    pixels = F.transform(F.sequence(F.lit(0), wb * hb * 3 - 1), png_byte)
-    ok = (
-        ihdr_ok & chunks_ok & zhdr_ok & btype_fh & walk_ok & adler_ok
-        & filters_ok
-    )
-    return ok, w, h, pixels
 
 
 def encode_png_fixed(media_id, w, h) -> Column:
@@ -3640,12 +2412,13 @@ def encode_png_fixed(media_id, w, h) -> Column:
 
 
 def _inflate_fixed_py(data: bytes):
-    """Hand-rolled fixed-Huffman inflate for ONE final block (the
-    Python side of the r12 FH path — deliberately NOT
-    ``zlib.decompress``, so both paths enforce the identical
-    envelope). ``data`` is the deflate byte stream (zlib header and
-    Adler both stripped). Returns ``(raw_bytes, end_bit_pos)``;
-    raises on any malformed code, length, or distance."""
+    """Hand-rolled fixed-Huffman inflate for ONE final block
+    (``decode_png(fixed_huffman=True)``) — deliberately NOT
+    ``zlib.decompress``, so the envelope stays bounded: multi-block
+    streams and outputs beyond ``_PNG_FH_MAX_RAW`` raise. ``data``
+    is the deflate byte stream (zlib header and Adler both
+    stripped). Returns ``(raw_bytes, end_bit_pos)``; raises on any
+    malformed code, length, or distance."""
     bitpos = 3  # past BFINAL + BTYPE (caller checked them)
 
     def bit(i):
@@ -3711,35 +2484,16 @@ def _inflate_fixed_py(data: bytes):
 # --- dynamic-Huffman deflate PNG (r13) ------------------------------------
 #
 # RFC 1951 §3.2.7 — BTYPE=10, the block type virtually every real PNG
-# encoder emits (the r12 verdict's #1 remaining gap). Architecture is
-# the r12 fixed-Huffman machinery plus the one genuinely new piece: a
-# COUNT-BASED CANONICAL HUFFMAN WALK (`_dh_decode_sym`, the classic
-# zlib/puff.c `decode()` — per bit length l, a code of length l is
-# recognized from (counts[l], first_l, index_l) alone, so no tree is
-# ever materialized: the "decode table" is two small arrays derived
-# from the code-lengths vector). Stages, each a column so the
-# analyzer sees small trees and each is evaluated once:
+# encoder emits. ``_inflate_dyn_py`` decodes it with a COUNT-BASED
+# CANONICAL HUFFMAN WALK (the classic zlib/puff.c ``decode()`` — per
+# bit length l, a code of length l is recognized from (counts[l],
+# first_l, index_l) alone, so no tree is ever materialized).
 #
-#   __pdh  header: HLIT/HDIST/HCLEN + the 19 code-length-code lengths
-#          — CLOSED FORM, no fold: the transmit order is a fixed
-#          permutation, so symbol s's 3-bit field sits at literal
-#          offset 17 + 3·inv_order[s] when transmitted at all.
-#   __pdl  code-lengths walk: one fold step per CL SYMBOL (≤ 320 —
-#          HLIT+257+HDIST+1 is the emitted-length cap and every step
-#          emits ≥ 1), each step = a ≤7-step count walk + the 16/17/18
-#          repeat semantics.
-#   __pdt  tables: counts[1..15] + canonically sorted symbols for the
-#          lit/len and distance alphabets (array ops over ≤ 320 ints),
-#          plus Kraft over-subscription checks.
-#   __pdw  symbol walk: `_png_fixed_walk`'s exact structure with the
-#          fixed-table peek replaced by two count walks (lit/len then
-#          distance); LZ77 copy semantics shared verbatim.
-#
-# Scope bounds: raw size ≤ _PNG_FH_MAX_RAW (same fold bound as FH);
-# ONE final BTYPE=10 block (multi-block streams null out, documented
-# like FH). Incomplete codes are accepted (RFC permits e.g. the
-# 1-bit single-distance code); over-subscribed codes and invalid
-# symbols flip ok and null out.
+# Scope bounds: raw size ≤ _PNG_FH_MAX_RAW (same bound as FH); ONE
+# final BTYPE=10 block (multi-block streams raise, like FH).
+# Incomplete codes are accepted (RFC permits e.g. the 1-bit
+# single-distance code); over-subscribed codes and invalid symbols
+# raise.
 
 #: RFC 1951 §3.2.7 code-length-code transmit order
 _DH_CL_ORDER = [16, 17, 18, 0, 8, 7, 9, 6, 10, 5, 11, 4, 12, 3, 13,
@@ -3748,708 +2502,6 @@ _DH_CL_INV = [0] * 19
 for _i, _s in enumerate(_DH_CL_ORDER):
     _DH_CL_INV[_s] = _i
 del _i, _s
-
-
-def _dh_decode_sym(p, zs, bp, counts, syms, maxbits: int):
-    """ONE canonical-Huffman symbol starting at bit ``bp``: the
-    count-based walk (zlib/puff `decode()`): reading MSB-first, after
-    l bits the running code is compared against the window of
-    length-l codes — ``code_l − first_l < counts[l]`` ⇔ the symbol is
-    ``syms[index_l + (code_l − first_l)]`` where ``first_{l+1} =
-    (first_l + counts[l])·2`` and ``index_{l+1} = index_l +
-    counts[l]`` (canonical codes of one length are consecutive and
-    sorted in symbol order — exactly how ``_png_dh_tabs`` sorts).
-    Returns struct ``(sym, nb)``; an invalid/over-long code leaves
-    ``sym`` null. ``counts`` is 1-indexed (length ``maxbits``);
-    ``syms`` is the canonical symbol array."""
-    init = F.struct(
-        F.lit(0).cast("bigint").alias("code"),
-        F.lit(0).cast("bigint").alias("first"),
-        F.lit(0).cast("bigint").alias("index"),
-        F.lit(None).cast("int").alias("sym"),
-        F.lit(0).cast("bigint").alias("nb"),
-    )
-
-    def st(acc, l):
-        def with_c(t):
-            code2, cnt = t["code2"], t["cnt"].cast("bigint")
-            hit = (code2 - acc["first"]) < cnt
-            return F.when(
-                hit,
-                F.struct(
-                    code2.alias("code"),
-                    acc["first"].alias("first"),
-                    acc["index"].alias("index"),
-                    F.try_element_at(
-                        syms,
-                        (acc["index"] + code2 - acc["first"] + 1).cast(
-                            "int"
-                        ),
-                    ).alias("sym"),
-                    l.cast("bigint").alias("nb"),
-                ),
-            ).otherwise(
-                F.struct(
-                    code2.alias("code"),
-                    ((acc["first"] + cnt) * 2).alias("first"),
-                    (acc["index"] + cnt).alias("index"),
-                    acc["sym"].alias("sym"),
-                    acc["nb"].alias("nb"),
-                )
-            )
-
-        return F.when(acc["sym"].isNotNull(), acc).otherwise(
-            _let(
-                F.struct(
-                    (
-                        acc["code"] * 2
-                        + _fh_bit(p, zs, bp + l.cast("bigint") - 1)
-                    ).alias("code2"),
-                    F.coalesce(
-                        F.try_element_at(counts, l.cast("int")), F.lit(0)
-                    ).alias("cnt"),
-                ),
-                with_c,
-            )
-        )
-
-    walked = F.aggregate(F.sequence(F.lit(1), F.lit(maxbits)), init, st)
-    return F.struct(walked["sym"].alias("sym"), walked["nb"].alias("nb"))
-
-
-def _pow2w(k):
-    """2^k for dynamic k up to 15 (the Huffman-code width) — the
-    ``_pow2`` literal-table trick, one wider (its 14 entries stop at
-    the max EXTRA-bits count). The index is clamped: the no-hit path
-    feeds k = −1, and ANSI ``element_at`` at index 0 throws even
-    though the consuming branch is guarded (the eager
-    subexpression-hoisting trap)."""
-    return F.element_at(
-        F.array(*[F.lit(1 << i) for i in range(16)]),
-        F.greatest(k.cast("int"), F.lit(0)) + 1,
-    ).cast("bigint")
-
-
-def _dh_prefix_tables(counts, maxbits: int):
-    """Per-image STAGED prefix tables for the peek-based symbol
-    decode (r14 — the r13 pre-noted byte-arithmetic variant):
-    ``lims[l] = Σ_{j≤l} counts[j]·2^(maxbits−j)`` (the first
-    ``maxbits``-bit value NOT covered by codes of length ≤ l — the
-    zlib ``first``/``count`` walk's limit collapsed into one
-    monotone array) and ``cums[l] = Σ_{j≤l} counts[j]`` (the symbol-
-    table offset). One ``maxbits``-step fold once per image; the
-    per-symbol decode then needs no stateful walk at all (see
-    ``_dh_decode_sym_peek``)."""
-    init = F.struct(
-        F.array().cast("array<bigint>").alias("lims"),
-        F.array().cast("array<bigint>").alias("cums"),
-        F.lit(0).cast("bigint").alias("lim"),
-        F.lit(0).cast("bigint").alias("cum"),
-    )
-
-    def st(acc, l):
-        c = F.coalesce(
-            F.try_element_at(counts, l.cast("int")), F.lit(0)
-        ).cast("bigint")
-        lim2 = acc["lim"] + c * _pow2w(F.lit(maxbits) - l)
-        cum2 = acc["cum"] + c
-        return F.struct(
-            F.concat(acc["lims"], F.array(lim2)).alias("lims"),
-            F.concat(acc["cums"], F.array(cum2)).alias("cums"),
-            lim2.alias("lim"),
-            cum2.alias("cum"),
-        )
-
-    folded = F.aggregate(
-        F.sequence(F.lit(1), F.lit(maxbits)), init, st
-    )
-    return folded["lims"], folded["cums"]
-
-
-def _dh_decode_sym_peek(p, zs, bp, lims, cums, syms, maxbits: int):
-    """ONE canonical-Huffman symbol starting at bit ``bp`` via the
-    PEEK variant (r14 A/B against the stateful count walk
-    ``_dh_decode_sym``): read ``maxbits`` bits once as a flat
-    MSB-first sum (over-reads past the stream coalesce to 0 — they
-    can only sit below the true code's ``lims`` hit, and the walk's
-    final bit-budget check still catches genuine overruns), then the
-    code length is ``maxbits + 1 − #{l : peek < lims[l]}`` (``lims``
-    is monotone, so the hit set is a suffix) and the symbol is one
-    arithmetic index into ``syms`` — no per-bit struct fold. Returns
-    the same ``(sym, nb)`` struct; an invalid/over-long code (no
-    ``lims`` hit) leaves ``sym`` null."""
-    peek = F.lit(0).cast("bigint")
-    for k in range(maxbits):
-        peek = peek + F.coalesce(
-            _fh_bit(p, zs, bp + k), F.lit(0)
-        ).cast("bigint") * F.lit(1 << (maxbits - 1 - k)).cast("bigint")
-
-    def with_peek(pk):
-        def with_l(l):
-            # l = 1 reads prefix slot 0, which doesn't exist (both
-            # prefixes are 0 there) — and try_element_at THROWS on a
-            # literal-zero index (INVALID_INDEX_OF_ZERO), so the index
-            # is clamped to 1 and the l = 1 case guarded by the when
-            zero = F.lit(0).cast("bigint")
-            prev_i = F.greatest(l - 1, F.lit(1)).cast("int")
-            lim_prev = F.when(
-                l > 1,
-                F.coalesce(F.try_element_at(lims, prev_i), zero),
-            ).otherwise(zero)
-            cum_prev = F.when(
-                l > 1,
-                F.coalesce(F.try_element_at(cums, prev_i), zero),
-            ).otherwise(zero)
-            pos = cum_prev + F.floor(
-                (pk - lim_prev) / _pow2w(F.lit(maxbits) - l)
-            ).cast("bigint")
-            sym = F.when(
-                l <= maxbits,
-                F.try_element_at(syms, (pos + 1).cast("int")),
-            ).otherwise(F.lit(None).cast("int"))
-            return F.struct(
-                sym.cast("int").alias("sym"),
-                F.when(l <= maxbits, l.cast("bigint"))
-                .otherwise(F.lit(0).cast("bigint"))
-                .alias("nb"),
-            )
-
-        return _let(
-            (
-                F.lit(maxbits + 1)
-                - F.size(F.filter(lims, lambda lm: pk < lm))
-            ).cast("bigint"),
-            with_l,
-        )
-
-    return _let(peek, with_peek)
-
-
-#: symbol-decode implementation for the dynamic-Huffman DATA walk:
-#: "fold" = the stateful count walk (_dh_decode_sym), "peek" = the
-#: staged-prefix-table arithmetic decode (_dh_decode_sym_peek).
-#: Module-level so the r14 A/B (scripts/dh_walk_ab_r14.py) can flip
-#: it between plan builds. MEASURED (SCALING_r14.md §2, same-session
-#: interleaved at sf0.1, hashes identical): fold 27.2 s vs peek
-#: 28.2 s — the second negative result on this line (r13's
-#: bit-reversal peek lost 1.6x), so "fold" stays the default and the
-#: per-symbol-walk optimization line is closed.
-DH_SYM_IMPL = "fold"
-
-
-def _kraft_ok(counts, maxbits: int):
-    """No over-subscription: left_0 = 1, left_l = left_{l-1}·2 −
-    counts[l] must never go negative (incomplete codes — left > 0 at
-    the end — are accepted; RFC 1951 permits e.g. the one-distance-
-    code-in-one-bit case and the walk itself rejects unused space)."""
-    folded = F.aggregate(
-        F.sequence(F.lit(1), F.lit(maxbits)),
-        F.struct(
-            F.lit(1).cast("bigint").alias("left"),
-            F.lit(True).alias("ok"),
-        ),
-        lambda acc, l: _let(
-            acc["left"] * 2
-            - F.coalesce(
-                F.try_element_at(counts, l.cast("int")), F.lit(0)
-            ).cast("bigint"),
-            lambda left2: F.struct(
-                left2.alias("left"),
-                (acc["ok"] & (left2 >= 0)).alias("ok"),
-            ),
-        ),
-    )
-    return folded["ok"]
-
-
-def _canon_tables(lens, maxbits: int):
-    """(counts, syms) for a code-lengths array: counts[l] = #codes of
-    length l (1-indexed array of ``maxbits``); syms = symbols with a
-    code, sorted canonically by (length, symbol)."""
-    counts = F.transform(
-        F.sequence(F.lit(1), F.lit(maxbits)),
-        lambda l: F.size(F.filter(lens, lambda x: x == l)),
-    )
-    # try_element_at + a 1-based walk: an EMPTY lens array makes
-    # sequence(0, size-1) = sequence(0, -1) = [0, -1] (Spark infers a
-    # descending step), and plain element_at then throws under ANSI —
-    # the eager-evaluation trap; null lens drop out of the filter
-    pairs = F.filter(
-        F.transform(
-            F.sequence(F.lit(0), F.greatest(F.size(lens) - 1, F.lit(0))),
-            lambda s: F.struct(
-                F.try_element_at(lens, (s + 1).cast("int")).alias("len"),
-                s.alias("sym"),
-            ),
-        ),
-        lambda e: (e["len"] >= 1) & (e["len"] <= maxbits),
-    )
-    syms = F.transform(F.array_sort(pairs), lambda e: e["sym"])
-    return counts, syms
-
-
-def _png_dh_header(p, cw):
-    """Stage 2-DH-a: closed-form header parse. Struct ``(hlit, hdist,
-    bp0, cl_counts, cl_syms, ok)`` — ``bp0`` is the bit position of
-    the first code-length SYMBOL (after the 3-bit block header, the
-    5+5+4 counts and the (HCLEN+4)·3-bit code-length-code lengths)."""
-    zs = cw["zs"]
-    hlit = _fh_val(p, zs, F.lit(3).cast("bigint"), F.lit(5)).cast("int")
-    hdist = _fh_val(p, zs, F.lit(8).cast("bigint"), F.lit(5)).cast("int")
-    hclen = _fh_val(p, zs, F.lit(13).cast("bigint"), F.lit(4)).cast("int")
-    inv = F.array(*[F.lit(v) for v in _DH_CL_INV])
-    cl_lens = F.transform(
-        F.sequence(F.lit(0), F.lit(18)),
-        lambda s: _let(
-            F.element_at(inv, s + 1),
-            lambda pos: F.when(
-                pos < hclen + 4,
-                _fh_val(
-                    p,
-                    zs,
-                    (F.lit(17) + pos * 3).cast("bigint"),
-                    F.lit(3),
-                ).cast("int"),
-            ).otherwise(F.lit(0)),
-        ),
-    )
-    counts, syms = _canon_tables(cl_lens, 7)
-    return F.struct(
-        hlit.alias("hlit"),
-        hdist.alias("hdist"),
-        (F.lit(17) + (hclen + 4).cast("bigint") * 3).alias("bp0"),
-        counts.alias("cl_counts"),
-        syms.alias("cl_syms"),
-        (_kraft_ok(counts, 7) & (F.size(syms) >= 1)).alias("ok"),
-    )
-
-
-#: emitted-lengths cap: HLIT+257 ≤ 288 lit/len + HDIST+1 ≤ 32 dist
-_DH_MAX_LENS = 320
-
-
-def _png_dh_lens_walk(p, cw, hdr):
-    """Stage 2-DH-b: decode the HLIT+257+HDIST+1 code lengths. One
-    fold step per CODE-LENGTH SYMBOL (each emits ≥ 1 length, so ≤
-    ``_DH_MAX_LENS`` steps); each step is a ≤7-bit count walk over
-    the code-length alphabet plus the 16 (repeat prev ×3-6) / 17
-    (zeros ×3-10) / 18 (zeros ×11-138) repeat semantics. Struct
-    ``(bp, lens, ok, done)``; overshooting repeats, a 16 with no
-    previous length, or an invalid code flip ``ok``."""
-    zs = cw["zs"]
-    target = (hdr["hlit"] + 257 + hdr["hdist"] + 1).cast("int")
-    init = F.struct(
-        hdr["bp0"].cast("bigint").alias("bp"),
-        F.array().cast("array<int>").alias("lens"),
-        hdr["ok"].alias("ok"),
-        (~hdr["ok"]).alias("done"),
-    )
-
-    def step(acc, _):
-        bp, lens = acc["bp"], acc["lens"]
-        fail = F.struct(
-            bp.alias("bp"), lens.alias("lens"),
-            F.lit(False).alias("ok"), F.lit(True).alias("done"),
-        )
-
-        def with_sym(cs):
-            sym, nb = cs["sym"], cs["nb"]
-
-            def emit(appended, used_bits):
-                return _let(
-                    appended,
-                    lambda lens2: F.struct(
-                        (bp + nb + used_bits).alias("bp"),
-                        lens2.alias("lens"),
-                        acc["ok"].alias("ok"),
-                        (F.size(lens2) >= target).alias("done"),
-                    ),
-                )
-
-            rep16 = (
-                F.lit(3)
-                + _fh_val(p, zs, bp + nb, F.lit(2)).cast("int")
-            )
-            rep17 = (
-                F.lit(3)
-                + _fh_val(p, zs, bp + nb, F.lit(3)).cast("int")
-            )
-            rep18 = (
-                F.lit(11)
-                + _fh_val(p, zs, bp + nb, F.lit(7)).cast("int")
-            )
-            return (
-                F.when(sym.isNull(), fail)
-                .when(
-                    sym <= 15,
-                    emit(
-                        F.concat(lens, F.array(sym)),
-                        F.lit(0).cast("bigint"),
-                    ),
-                )
-                .when(
-                    (sym == 16) & (F.size(lens) >= 1),
-                    emit(
-                        F.concat(
-                            lens,
-                            F.array_repeat(
-                                F.try_element_at(lens, F.lit(-1)), rep16
-                            ),
-                        ),
-                        F.lit(2).cast("bigint"),
-                    ),
-                )
-                .when(
-                    sym == 17,
-                    emit(
-                        F.concat(
-                            lens, F.array_repeat(F.lit(0), rep17)
-                        ),
-                        F.lit(3).cast("bigint"),
-                    ),
-                )
-                .when(
-                    sym == 18,
-                    emit(
-                        F.concat(
-                            lens, F.array_repeat(F.lit(0), rep18)
-                        ),
-                        F.lit(7).cast("bigint"),
-                    ),
-                )
-                .otherwise(fail)
-            )
-
-        return F.when(acc["done"], acc).otherwise(
-            _let(
-                _dh_decode_sym(
-                    p, zs, bp, hdr["cl_counts"], hdr["cl_syms"], 7
-                ),
-                with_sym,
-            )
-        )
-
-    walked = F.aggregate(
-        F.sequence(F.lit(1), F.lit(_DH_MAX_LENS)), init, step
-    )
-    # exact-target check: a final repeat overshooting HLIT+257+HDIST+1
-    # is an RFC error (size > target), as is running out of steps
-    # (size < target)
-    return F.struct(
-        walked["bp"].alias("bp"),
-        walked["lens"].alias("lens"),
-        (
-            walked["ok"]
-            & walked["done"]
-            & (F.size(walked["lens"]) == target)
-        ).alias("ok"),
-        walked["done"].alias("done"),
-    )
-
-
-def _png_dh_tabs(hdr, lw):
-    """Stage 2-DH-c: split the decoded lengths into the lit/len and
-    distance alphabets and derive each side's count/canonical-symbol
-    tables (+ Kraft checks; the lit/len code must assign EOB a
-    code). Struct ``(ll_counts, ll_syms, d_counts, d_syms, bp0,
-    ok)`` — ``bp0`` = first DATA symbol's bit position."""
-    n_lit = (hdr["hlit"] + 257).cast("int")
-    n_dist = (hdr["hdist"] + 1).cast("int")
-    ll_lens = F.slice(lw["lens"], 1, n_lit)
-    d_lens = F.slice(lw["lens"], n_lit + 1, n_dist)
-    ll_counts, ll_syms = _canon_tables(ll_lens, 15)
-    d_counts, d_syms = _canon_tables(d_lens, 15)
-    # r14: staged prefix tables for the peek symbol decode (one
-    # 15-step fold per alphabet per IMAGE — amortized over raw_n
-    # symbol decodes). Gated: the A/B measured the peek walk a WASH-
-    # to-slightly-worse (27.2 vs 28.2 s, SCALING_r14.md §2), so the
-    # default "fold" plan carries null literals here, not the folds.
-    if DH_SYM_IMPL == "peek":
-        ll_lims, ll_cums = _dh_prefix_tables(ll_counts, 15)
-        d_lims, d_cums = _dh_prefix_tables(d_counts, 15)
-    else:
-        ll_lims = ll_cums = d_lims = d_cums = F.lit(None).cast(
-            "array<bigint>"
-        )
-    eob_coded = F.coalesce(
-        F.try_element_at(ll_lens, F.lit(257)), F.lit(0)
-    ) > 0
-    return F.struct(
-        ll_counts.alias("ll_counts"),
-        ll_syms.alias("ll_syms"),
-        d_counts.alias("d_counts"),
-        d_syms.alias("d_syms"),
-        ll_lims.alias("ll_lims"),
-        ll_cums.alias("ll_cums"),
-        d_lims.alias("d_lims"),
-        d_cums.alias("d_cums"),
-        lw["bp"].alias("bp0"),
-        (
-            lw["ok"]
-            & _kraft_ok(ll_counts, 15)
-            & _kraft_ok(d_counts, 15)
-            & eob_coded
-        ).alias("ok"),
-    )
-
-
-def _png_dyn_walk(p, cw, raw_n, tabs):
-    """Stage 2-DH-d: the symbol walk — ``_png_fixed_walk``'s exact
-    fold structure (one step per symbol, cyclic-repetition LZ77
-    copies, fail-and-stop semantics) with the fixed-table peek
-    replaced by two count walks: lit/len via ``(ll_counts,
-    ll_syms)``, then, for length codes, the distance symbol via
-    ``(d_counts, d_syms)`` instead of fixed 5 raw bits. Struct
-    ``(bp, out, done, ok)``."""
-    zs = cw["zs"]
-    lenb = F.array(*[F.lit(v) for v in _FH_LEN_BASE])
-    lene = F.array(*[F.lit(v) for v in _FH_LEN_EXTRA])
-    distb = F.array(*[F.lit(v) for v in _FH_DIST_BASE])
-    diste = F.array(*[F.lit(v) for v in _FH_DIST_EXTRA])
-    init = F.struct(
-        tabs["bp0"].cast("bigint").alias("bp"),
-        F.array().cast("array<int>").alias("out"),
-        (~tabs["ok"]).alias("done"),
-        tabs["ok"].alias("ok"),
-    )
-
-    def step(acc, _):
-        bp = acc["bp"]
-        out = acc["out"]
-
-        def with_sym(hdr):
-            sym, nb = hdr["sym"], hdr["nb"]
-            osz = F.size(out).cast("bigint")
-            fail = F.struct(
-                bp.alias("bp"), out.alias("out"),
-                F.lit(True).alias("done"), F.lit(False).alias("ok"),
-            )
-
-            def with_len(lp):
-                L, bp2 = lp["L"], lp["bp2"]
-
-                def with_dist(dp):
-                    D, bp3, dsym = dp["D"], dp["bp3"], dp["dsym"]
-                    dist_ok = (
-                        dsym.isNotNull() & (dsym <= 29)
-                        & (D >= 1) & (D <= osz)
-                        & (L >= 3) & (L <= 258)
-                    )
-                    copied = F.transform(
-                        F.sequence(F.lit(0).cast("bigint"), L - 1),
-                        lambda j: F.try_element_at(
-                            out, (osz - D + F.pmod(j, D) + 1).cast("int")
-                        ),
-                    )
-                    return F.when(
-                        dist_ok,
-                        F.struct(
-                            bp3.alias("bp"),
-                            F.concat(out, copied).alias("out"),
-                            F.lit(False).alias("done"),
-                            acc["ok"].alias("ok"),
-                        ),
-                    ).otherwise(fail)
-
-                def with_dsym(ds):
-                    dsym, dnb = ds["sym"], ds["nb"]
-                    dci = F.greatest(
-                        F.least(F.coalesce(dsym, F.lit(0)), F.lit(29)),
-                        F.lit(0),
-                    ).cast("int")
-                    dext = F.element_at(diste, dci + 1)
-                    return _let(
-                        F.struct(
-                            dsym.alias("dsym"),
-                            (
-                                F.element_at(distb, dci + 1).cast("bigint")
-                                + _fh_val(p, zs, bp2 + dnb, dext)
-                            ).alias("D"),
-                            (bp2 + dnb + dext.cast("bigint")).alias(
-                                "bp3"
-                            ),
-                        ),
-                        with_dist,
-                    )
-
-                return _let(
-                    _dh_decode_sym_peek(
-                        p, zs, bp2, tabs["d_lims"], tabs["d_cums"],
-                        tabs["d_syms"], 15,
-                    )
-                    if DH_SYM_IMPL == "peek"
-                    else _dh_decode_sym(
-                        p, zs, bp2, tabs["d_counts"], tabs["d_syms"], 15
-                    ),
-                    with_dsym,
-                )
-
-            li = F.greatest(
-                F.least(sym - 257, F.lit(28)), F.lit(0)
-            ).cast("int")
-            lext = F.element_at(lene, li + 1)
-            len_branch = _let(
-                F.struct(
-                    (
-                        F.element_at(lenb, li + 1).cast("bigint")
-                        + _fh_val(p, zs, bp + nb, lext)
-                    ).alias("L"),
-                    (bp + nb + lext.cast("bigint")).alias("bp2"),
-                ),
-                with_len,
-            )
-            return (
-                F.when(sym.isNull() | (osz > raw_n), fail)
-                .when(
-                    sym == 256,
-                    F.struct(
-                        (bp + nb).alias("bp"), out.alias("out"),
-                        F.lit(True).alias("done"), acc["ok"].alias("ok"),
-                    ),
-                )
-                .when(
-                    sym < 256,
-                    F.struct(
-                        (bp + nb).alias("bp"),
-                        F.concat(
-                            out, F.array(sym.cast("int"))
-                        ).alias("out"),
-                        F.lit(False).alias("done"),
-                        acc["ok"].alias("ok"),
-                    ),
-                )
-                .when((sym >= 257) & (sym <= 285), len_branch)
-                .otherwise(fail)
-            )
-
-        new = _let(
-            _dh_decode_sym_peek(
-                p, zs, bp, tabs["ll_lims"], tabs["ll_cums"],
-                tabs["ll_syms"], 15,
-            )
-            if DH_SYM_IMPL == "peek"
-            else _dh_decode_sym(
-                p, zs, bp, tabs["ll_counts"], tabs["ll_syms"], 15
-            ),
-            with_sym,
-        )
-        return F.when(acc["done"], acc).otherwise(new)
-
-    return F.aggregate(
-        F.sequence(F.lit(1), F.greatest(raw_n + 1, F.lit(1))), init, step
-    )
-
-
-def _png_gray_decode_dh(p, cw, dw, recon=None, plte=None, depth16=False):
-    """(ok, w, h, pixels) for a grayscale-8 PNG whose zlib stream is
-    ONE final DYNAMIC-HUFFMAN deflate block (BTYPE=10) — the DH
-    sibling of ``_png_gray_decode_fh``, consuming the staged symbol
-    walk ``dw`` (``_png_dyn_walk``; the header/lens/tables stages'
-    validity is already folded into ``dw.ok`` via the walk's init).
-    Envelope identical to the FH path: IHDR + CRC, single IDAT, zlib
-    header, Adler-32 over the DECOMPRESSED bytes, per-scanline
-    filter-0, exact output length, walk ends on EOB inside the bit
-    budget. Scope: raw ≤ ``_PNG_FH_MAX_RAW``; multi-block and
-    non-final dynamic streams null out (documented)."""
-    w = _be32(p, 17)
-    h = _be32(p, 21)
-    ctype = _u8(p, 26)
-    # r14 depth16: bytes/pixel doubles at bit depth 16 (big-endian
-    # samples; the reader takes each sample's FIRST byte = MSB, the
-    # standard 8-bit downsample); spb None keeps the 8-bit plans
-    # byte-identical when the flag is off
-    if depth16:
-        spb = (
-            F.when(_u8(p, 25) == 16, F.lit(2))
-            .otherwise(F.lit(1))
-            .cast("bigint")
-        )
-        bpp = _png_bpp(ctype) * spb
-    else:
-        spb = None
-        bpp = _png_bpp(ctype)
-    _cap = F.lit(_PNG_FH_MAX_RAW).cast("bigint")
-    _raw0 = h.cast("bigint") * (w.cast("bigint") * bpp + 1)
-    _sane = _raw0.isNotNull() & (_raw0 > 0) & (_raw0 <= _cap)
-    one = F.lit(1).cast("bigint")
-    wb = F.when(_sane, w.cast("bigint")).otherwise(one)
-    hb = F.when(_sane, h.cast("bigint")).otherwise(one)
-    raw_n = F.when(_sane, _raw0).otherwise(F.lit(0).cast("bigint"))
-    ihdr_ok = (
-        _sane
-        & (F.length(p) >= 46)
-        & (F.hex(F.substring(p, 1, 8)) == _PNG_SIG)
-        & (_be32(p, 9) == 13)
-        & _sig(p, 13, "IHDR")
-        & (
-            (_u8(p, 25) == 8)
-            if not depth16
-            else (
-                _u8(p, 25).isin(8, 16)
-                # palette + 16-bit is invalid per spec
-                & ~((ctype == 3) & (_u8(p, 25) == 16))
-            )
-        )
-        & (
-            ctype.isin(0, 2, 4, 6)  # 8-bit non-palette matrix (r14)
-            if plte is None
-            # r14 opt-in png_palette: +3 (paletted); PLTE
-            # validity/index bounds enforced by the reader
-            else ctype.isin(0, 2, 3, 4, 6)
-        )
-        & (_u8(p, 27) == 0)
-        & (_u8(p, 28) == 0)
-        & (_u8(p, 29) == 0)
-        & (F.crc32(F.substring(p, 13, 17)) == _be32u(p, 30))
-        & (w > 0)
-        & (h > 0)
-    )
-    zs, zl = cw["zs"], cw["zl"]
-    chunks_ok = cw["done"] & cw["ok"] & (cw["n_idat"] == 1) & (zl >= 11)
-    cmf = _u8(p, zs)
-    flg = _u8(p, zs + 1)
-    zhdr_ok = (
-        (F.pmod(cmf, F.lit(16)) == 8)
-        & (F.pmod(cmf * 256 + flg, F.lit(31)) == 0)
-        & (F.pmod(F.floor(flg / 32).cast("int"), F.lit(2)) == 0)
-    )
-    # BFINAL=1 + BTYPE=10: low three bits of the first deflate byte
-    btype_dh = F.pmod(_u8(p, zs + 2), F.lit(8)) == 5
-    out = dw["out"]
-    walk_ok = (
-        dw["done"]
-        & dw["ok"]
-        & (F.size(out).cast("bigint") == raw_n)
-        & (dw["bp"] <= (zl - 6) * 8)
-
-    )
-
-    def oraw(j):  # byte j (1-based) of the decompressed stream
-        return F.try_element_at(out, j.cast("int"))
-
-    s1 = F.aggregate(
-        F.sequence(F.lit(1), raw_n),
-        F.lit(0).cast("bigint"),
-        lambda a, j: a + oraw(j),
-    )
-    sw = F.aggregate(
-        F.sequence(F.lit(1), raw_n),
-        F.lit(0).cast("bigint"),
-        lambda a, j: a + j.cast("bigint") * oraw(j),
-    )
-    adler_ok = (
-        F.pmod(raw_n + (raw_n + 1) * s1 - sw, F.lit(65521)) * 65536
-        + F.pmod(F.lit(1) + s1, F.lit(65521))
-    ) == _be32u(p, zs + zl - 4)
-    filters_ok, png_byte = _png_pixel_reader(
-        oraw, recon, wb, hb, bpp, ctype, p=p, plte=plte, spb=spb
-    )
-    pixels = F.transform(F.sequence(F.lit(0), wb * hb * 3 - 1), png_byte)
-    ok = (
-        ihdr_ok & chunks_ok & zhdr_ok & btype_dh & walk_ok & adler_ok
-        & filters_ok
-    )
-    return ok, w, h, pixels
 
 
 def _dh_header_bits() -> list:
@@ -4654,12 +2706,12 @@ def encode_png_dyn(
 
 def _inflate_dyn_py(data: bytes):
     """Hand-rolled dynamic-Huffman inflate for ONE final BTYPE=10
-    block — the Python twin of the Spark ``_png_dh_*`` stages (the
-    same count-based canonical walk, the same envelope and caps, the
-    r10 twin-parity rule: both paths accept and reject identically).
-    ``data`` is the deflate byte stream (zlib header and Adler
-    stripped). Returns ``(raw_bytes, end_bit_pos)``; raises on any
-    malformed header, code, length, or distance."""
+    block (``decode_png(dynamic_huffman=True)``): the count-based
+    canonical Huffman walk of zlib's puff.c, under the same envelope
+    and caps as ``_inflate_fixed_py``. ``data`` is the deflate byte
+    stream (zlib header and Adler stripped). Returns ``(raw_bytes,
+    end_bit_pos)``; raises on any malformed header, code, length, or
+    distance."""
     bitpos = 3  # past BFINAL + BTYPE (caller checked them)
 
     def bit(i):
@@ -4760,18 +2812,16 @@ def _inflate_dyn_py(data: bytes):
 
 
 # ---------------------------------------------------------------------------
-# GIF (LZW) pixel decode — r14. A second REAL compressed container in
-# pure Spark expressions, reusing the PNG machinery's patterns: bounded
-# CRC-free block walks (GIF has no chunk CRCs), a sub-block table like
-# the stored-deflate block table, one bounded fold per LZW CODE, and
-# the paletted lookup (the global color table is read straight out of
-# the payload, every decoded index bounds-checked).
+# GIF (LZW) pixel decode — r14. ``decode_gif`` walks the block stream
+# (extensions skipped), gathers the LZW data sub-blocks, decodes one
+# LZW code at a time (``_lzw_decode_py``) and maps every index through
+# the global or local color table, bounds-checked.
 #
 # LZW dictionary entries all point INTO THE OUTPUT STREAM: when code k
 # is decoded its expansion is appended at out[cur..), and the new
 # dictionary entry is (prev_start, prev_len + 1) — contiguous in `out`
 # because prev's expansion was the immediately preceding append. So
-# the walk state needs no string table, only (start, len) pairs — the
+# the decoder needs no string table, only (start, len) pairs — the
 # same output-window copy semantics as the deflate LZ77 walk.
 #
 # Code-width convention (derived, and what giflib/Pillow implement):
@@ -4781,24 +2831,24 @@ def _inflate_dyn_py(data: bytes):
 # freezes until a CLEAR (deferred-clear tolerated). The famous 1x1
 # GIF89a spacer pins the convention against external bytes in tests.
 #
-# Envelope (documented; everything else nulls out): GIF87a/89a, global
-# color table present, ONE image covering the full screen at (0, 0),
-# no local color table, no interlace, LZW data in <=
-# _GIF_MAX_SUBBLOCKS sub-blocks, npix <= _GIF_MAX_PIXELS, trailer
-# immediately after the image data. Extensions (graphic control,
-# comment, application) are SKIPPED, matching real-world files.
+# Envelope (documented; everything else raises): GIF87a/89a, a global
+# or local color table, ONE image covering the full screen at (0, 0),
+# interlaced or not, LZW data in <= _GIF_MAX_SUBBLOCKS sub-blocks,
+# npix <= _GIF_MAX_PIXELS, trailer immediately after the image data.
+# Extensions (graphic control, comment, application) are SKIPPED,
+# matching real-world files.
 # ---------------------------------------------------------------------------
 
 _GIF_MAX_BLOCKS = 8       #: extension/descriptor walk bound
 _GIF_MAX_SUBBLOCKS = 16   #: LZW data sub-blocks (255 B each)
-_GIF_MAX_PIXELS = 4096    #: npix bound for the expression walk
+_GIF_MAX_PIXELS = 4096    #: npix bound of the decode envelope
 
 
 def _lzw_decode_py(data: bytes, mcs: int, npix: int):
-    """GIF LZW decoder (Python twin of the Spark ``_gif_lzw_walk``):
-    returns the index list; raises on anything the Spark walk would
-    flip ``ok`` for. Codes are read LSB-first; see the module-section
-    note for the width convention."""
+    """GIF LZW decoder: returns the index list of exactly ``npix``
+    codes' expansions; raises on a malformed or short stream. Codes
+    are read LSB-first; see the module-section note for the width
+    convention."""
     clear, eoi = 1 << mcs, (1 << mcs) + 1
     total_bits = 8 * len(data)
     bp, width = 0, mcs + 1
@@ -4937,10 +2987,11 @@ def _gif_interlace_disp_row(i: int, h: int) -> int:
 
 
 def decode_gif(payload: bytes):
-    """Python single-payload twin of the Spark GIF decode: returns
-    ``(w, h, rgb_pixels)`` (flattened top-down row-major RGB via the
-    global color table) or raises exactly where the Spark path nulls
-    out — same envelope, same caps (the r10 twin-parity rule)."""
+    """Single-payload GIF decode — the decoder ``decode_pixels`` runs
+    per row in its Arrow-batched stage when ``'gif'`` is declared:
+    returns ``(w, h, rgb_pixels)`` (flattened top-down row-major RGB
+    via the local or global color table) or raises outside the
+    envelope of the section note above."""
     if payload[:6] not in (b"GIF87a", b"GIF89a"):
         raise ValueError("not a GIF signature")
     w = int.from_bytes(payload[6:8], "little")
@@ -5224,570 +3275,19 @@ def encode_gif_lzw(media_id, w, h, interlaced: bool = False) -> Column:
     return F.unhex(F.concat(header, gct, desc, data_block, F.lit("3B")))
 
 
-def _gif_block_walk(p, pos0):
-    """Bounded GIF block walk (stage 1): from ``pos0`` (first byte
-    after the global color table, 1-based), skip extension blocks
-    (0x21 + label + sub-blocks, each skipped by an inner bounded
-    fold) until the image descriptor 0x2C — one struct column
-    (pos, ok, done) where ``pos`` is the descriptor's 1-based
-    offset. A trailer (0x3B) or any other byte before a descriptor
-    flips ok; GIFs with more than ``_GIF_MAX_BLOCKS`` leading blocks
-    are outside the envelope (documented)."""
-    binit = F.struct(
-        pos0.alias("pos"),
-        F.lit(True).alias("ok"),
-        F.lit(False).alias("done"),
-    )
-
-    def skip_ext(q0):
-        # end position after an extension's sub-blocks (q0 = first
-        # length byte); null-safe: returns struct (q, fin)
-        einit = F.struct(
-            q0.alias("q"), F.lit(False).alias("fin")
-        )
-
-        def estep(eacc, _):
-            q = eacc["q"]
-            sl = _u8(p, q)
-            bad = sl.isNull() | (q + sl >= F.length(p) + 1)
-            new = F.when(
-                bad | (sl == 0),
-                F.struct((q + 1).alias("q"), F.lit(True).alias("fin")),
-            ).otherwise(
-                F.struct(
-                    (q + 1 + sl.cast("bigint")).alias("q"),
-                    F.lit(False).alias("fin"),
-                )
-            )
-            return F.when(eacc["fin"], eacc).otherwise(new)
-
-        return F.aggregate(
-            F.sequence(F.lit(1), F.lit(_GIF_MAX_SUBBLOCKS)), einit, estep
-        )
-
-    def bstep(acc, _):
-        pos = acc["pos"]
-        b = _u8(p, pos)
-        fail = F.struct(
-            pos.alias("pos"),
-            F.lit(False).alias("ok"),
-            F.lit(True).alias("done"),
-        )
-        ext = _let(
-            skip_ext(pos + 2),
-            lambda e: F.when(
-                e["fin"],
-                F.struct(
-                    e["q"].alias("pos"),
-                    acc["ok"].alias("ok"),
-                    F.lit(False).alias("done"),
-                ),
-            ).otherwise(fail),
-        )
-        new = (
-            F.when(b.isNull() | (pos > F.length(p)), fail)
-            .when(
-                b == 0x2C,
-                F.struct(
-                    pos.alias("pos"),
-                    acc["ok"].alias("ok"),
-                    F.lit(True).alias("done"),
-                ),
-            )
-            .when(b == 0x21, ext)
-            .otherwise(fail)
-        )
-        return F.when(acc["done"], acc).otherwise(new)
-
-    return F.aggregate(
-        F.sequence(F.lit(1), F.lit(_GIF_MAX_BLOCKS)), binit, bstep
-    )
-
-
-def _gif_subblock_walk(p, dpos):
-    """LZW data sub-block table (stage 2, the GIF sibling of
-    ``_png_block_walk``): from ``dpos`` (first length byte), one
-    struct column (blocks array<(start, cum, len)>, endpos, total,
-    ok, done) — ``endpos`` the 0x00 terminator's offset, ``total``
-    the concatenated data byte count. Data byte i (1-based across
-    sub-blocks) is then read through the table exactly like the
-    stored-deflate reader."""
-    sinit = F.struct(
-        F.slice(
-            F.array(
-                F.struct(
-                    F.lit(0).cast("bigint").alias("start"),
-                    F.lit(0).cast("bigint").alias("cum"),
-                    F.lit(0).cast("bigint").alias("len"),
-                )
-            ),
-            1,
-            0,
-        ).alias("blocks"),
-        dpos.alias("pos"),
-        F.lit(0).cast("bigint").alias("total"),
-        F.lit(True).alias("ok"),
-        F.lit(False).alias("done"),
-    )
-
-    def sstep(acc, _):
-        pos = acc["pos"]
-        sl = _u8(p, pos).cast("bigint")
-        bad = sl.isNull() | (pos + sl > F.length(p))
-        fail = F.struct(
-            acc["blocks"].alias("blocks"),
-            pos.alias("pos"),
-            acc["total"].alias("total"),
-            F.lit(False).alias("ok"),
-            F.lit(True).alias("done"),
-        )
-        new = (
-            F.when(bad, fail)
-            .when(
-                sl == 0,
-                F.struct(
-                    acc["blocks"].alias("blocks"),
-                    pos.alias("pos"),
-                    acc["total"].alias("total"),
-                    acc["ok"].alias("ok"),
-                    F.lit(True).alias("done"),
-                ),
-            )
-            .otherwise(
-                F.struct(
-                    F.concat(
-                        acc["blocks"],
-                        F.array(
-                            F.struct(
-                                (pos + 1).alias("start"),
-                                acc["total"].alias("cum"),
-                                sl.alias("len"),
-                            )
-                        ),
-                    ).alias("blocks"),
-                    (pos + 1 + sl).alias("pos"),
-                    (acc["total"] + sl).alias("total"),
-                    acc["ok"].alias("ok"),
-                    F.lit(False).alias("done"),
-                )
-            )
-        )
-        return F.when(acc["done"], acc).otherwise(new)
-
-    return F.aggregate(
-        F.sequence(F.lit(1), F.lit(_GIF_MAX_SUBBLOCKS)), sinit, sstep
-    )
-
-
-def _gif_lzw_walk(p, sb, mcs, npix):
-    """The LZW symbol walk (stage 3): one struct column
-    (bp, out, tab, ps, pl, nf, wd, done, ok) — ``out`` the decoded
-    index stream, ``tab`` the dictionary as (ts, tl) WINDOWS INTO
-    ``out`` (see the section note: every entry is (prev_start,
-    prev_len + 1), contiguous because prev's expansion was the
-    immediately preceding append), ``nf`` the decoder's next_free,
-    ``wd`` the current code width. One fold step per CODE, budget
-    2·npix + 10 (every data code appends ≥ 1 index; CLEARs beyond
-    that budget are outside the envelope). All reads are
-    clamp/try-guarded — on garbage the row nulls, never throws (the
-    eager-hoisting rule)."""
-    clear = _pow2w(mcs)
-    total_bits = sb["total"] * 8
-    blocks = sb["blocks"]
-
-    def dbyte(i):
-        blk = F.try_element_at(
-            F.filter(
-                blocks,
-                lambda b: (i > b["cum"]) & (i <= b["cum"] + b["len"]),
-            ),
-            F.lit(1),
-        )
-        return _u8(p, blk["start"] + (i - blk["cum"]) - 1)
-
-    def dbit(j):
-        byte = dbyte(F.floor(j / 8).cast("bigint") + 1)
-        return F.pmod(
-            F.floor(byte / _pow2(F.pmod(j, F.lit(8)))).cast("bigint"),
-            F.lit(2),
-        )
-
-    ginit = F.struct(
-        F.lit(0).cast("bigint").alias("bp"),
-        F.slice(F.array(F.lit(0)), 1, 0).alias("out"),
-        F.slice(
-            F.array(
-                F.struct(
-                    F.lit(0).cast("bigint").alias("ts"),
-                    F.lit(0).cast("bigint").alias("tl"),
-                )
-            ),
-            1,
-            0,
-        ).alias("tab"),
-        F.lit(0).cast("bigint").alias("ps"),
-        F.lit(0).cast("bigint").alias("pl"),
-        (clear + 2).alias("nf"),
-        (mcs + 1).cast("int").alias("wd"),
-        F.lit(False).alias("done"),
-        F.lit(True).alias("ok"),
-    )
-
-    def gstep(acc, _):
-        bp, out, tab = acc["bp"], acc["out"], acc["tab"]
-        ps, pl, nf, wd = acc["ps"], acc["pl"], acc["nf"], acc["wd"]
-        fail = F.struct(
-            bp.alias("bp"), out.alias("out"), tab.alias("tab"),
-            ps.alias("ps"), pl.alias("pl"), nf.alias("nf"),
-            wd.alias("wd"),
-            F.lit(True).alias("done"), F.lit(False).alias("ok"),
-        )
-        bits_ok = (bp + wd) <= total_bits
-        code = F.aggregate(
-            F.sequence(F.lit(0), wd.cast("bigint") - 1),
-            F.lit(0).cast("bigint"),
-            lambda a, t: a + dbit(bp + t) * _pow2w(t),
-        )
-
-        def with_code(c):
-            bp2 = bp + wd
-            cur = F.size(out).cast("bigint")
-
-            def data_step(out2, elen):
-                # shared post-append bookkeeping: output bound, the
-                # decoder's entry add (only when a previous expansion
-                # exists and the table isn't frozen), width bump when
-                # next_free reaches 2^wd, then prev := this expansion
-                add = (pl > 0) & (nf < 4096)
-                nf2 = F.when(add, nf + 1).otherwise(nf)
-                wd2 = F.when(
-                    add & (nf2 == _pow2w(wd.cast("bigint"))) & (wd < 12),
-                    wd + 1,
-                ).otherwise(wd)
-                tab2 = F.when(
-                    add,
-                    F.concat(
-                        tab,
-                        F.array(
-                            F.struct(
-                                ps.alias("ts"), (pl + 1).alias("tl")
-                            )
-                        ),
-                    ),
-                ).otherwise(tab)
-                return F.when(
-                    F.size(out2).cast("bigint") > npix, fail
-                ).otherwise(
-                    F.struct(
-                        bp2.alias("bp"), out2.alias("out"),
-                        tab2.alias("tab"), cur.alias("ps"),
-                        elen.alias("pl"), nf2.alias("nf"),
-                        wd2.alias("wd"),
-                        F.lit(False).alias("done"),
-                        acc["ok"].alias("ok"),
-                    )
-                )
-
-            root = data_step(
-                F.concat(out, F.array(c.cast("int"))),
-                F.lit(1).cast("bigint"),
-            )
-            entry = F.try_element_at(
-                tab,
-                F.greatest(c - clear - 1, F.lit(1).cast("bigint")).cast(
-                    "int"
-                ),
-            )
-            table_branch = _let(
-                entry,
-                lambda e: data_step(
-                    F.concat(
-                        out,
-                        F.slice(
-                            out,
-                            F.greatest(
-                                e["ts"] + 1, F.lit(1).cast("bigint")
-                            ).cast("int"),
-                            F.greatest(
-                                e["tl"], F.lit(0).cast("bigint")
-                            ).cast("int"),
-                        ),
-                    ),
-                    e["tl"],
-                ),
-            )
-            kwkwk = data_step(
-                F.concat(
-                    out,
-                    F.slice(
-                        out,
-                        F.greatest(
-                            ps + 1, F.lit(1).cast("bigint")
-                        ).cast("int"),
-                        F.greatest(pl, F.lit(0).cast("bigint")).cast(
-                            "int"
-                        ),
-                    ),
-                    F.array(
-                        F.coalesce(
-                            F.try_element_at(
-                                out,
-                                F.greatest(
-                                    ps + 1, F.lit(1).cast("bigint")
-                                ).cast("int"),
-                            ),
-                            F.lit(0),
-                        )
-                    ),
-                ),
-                pl + 1,
-            )
-            return (
-                F.when(c.isNull() | ~bits_ok, fail)
-                .when(
-                    c == clear,
-                    F.struct(
-                        bp2.alias("bp"), out.alias("out"),
-                        F.slice(tab, 1, 0).alias("tab"),
-                        F.lit(0).cast("bigint").alias("ps"),
-                        F.lit(0).cast("bigint").alias("pl"),
-                        (clear + 2).alias("nf"),
-                        (mcs + 1).cast("int").alias("wd"),
-                        F.lit(False).alias("done"),
-                        acc["ok"].alias("ok"),
-                    ),
-                )
-                .when(
-                    c == clear + 1,  # EOI
-                    F.struct(
-                        bp2.alias("bp"), out.alias("out"),
-                        tab.alias("tab"), ps.alias("ps"),
-                        pl.alias("pl"), nf.alias("nf"), wd.alias("wd"),
-                        F.lit(True).alias("done"),
-                        (
-                            acc["ok"]
-                            & (F.size(out).cast("bigint") == npix)
-                        ).alias("ok"),
-                    ),
-                )
-                .when(c < clear, root)
-                .when((c >= clear + 2) & (c < nf), table_branch)
-                .when((c == nf) & (pl > 0), kwkwk)
-                .otherwise(fail)
-            )
-
-        return F.when(acc["done"], acc).otherwise(
-            _let(code, with_code)
-        )
-
-    return F.aggregate(
-        F.sequence(F.lit(1), npix * 2 + 10), ginit, gstep
-    )
-
-
-def _decode_pixels_gif(media: DataFrame, payload_col: str) -> DataFrame:
-    """The GIF-only decode plan (same output contract as the other
-    decode branches: media_id, img_format, width, height, pixels).
-    Three staged walk columns — ``__gbw`` (extension-skipping block
-    walk to the image descriptor), ``__gsb`` (LZW data sub-block
-    table), ``__glw`` (the LZW symbol walk, guarded so rows that
-    fail the cheap envelope checks never run the fold) — then one
-    projection mapping every decoded index through the global color
-    table with a bounds check (the paletted-PNG rule: out-of-range
-    nulls the row, never reads past the table).
-
-    r14 optimization round: plan assembly is split from the
-    expression program (the PNG ``_png_plan_exprs`` pattern) so the
-    program — a pure function of ``payload_col`` — is memoized
-    across builds; analysis, codegen and execution are untouched."""
-    df = media
-    for sel in _gif_plan_selects_cached(payload_col):
-        df = df.select(*sel)
-    return df
-
-
-@lru_cache(maxsize=8)
-def _gif_plan_selects_cached(payload_col: str):
-    """Memoized select-stage program for ``_decode_pixels_gif`` —
-    the Column trees are immutable, data-independent expression
-    handles (same argument as ``_png_plan_exprs_cached``), so repeat
-    plan builds skip the py4j construction round trips."""
-    return tuple(tuple(sel) for sel in _gif_plan_selects(payload_col))
-
-
-def _gif_plan_selects(payload_col: str):
-    """The ``_decode_pixels_gif`` expression program: an ordered
-    list of ``select`` argument tuples applied in sequence to the
-    media frame (``"*"`` keeps the caller's columns riding along)."""
-    selects = []
-    p = F.col(payload_col)
-    flags = _u8(p, 11)
-    has_gct = F.floor(F.coalesce(flags, F.lit(0)) / 128) == 1
-    n_ent_g = F.when(
-        has_gct,
-        _pow2w(
-            (F.pmod(F.coalesce(flags, F.lit(0)), F.lit(8)) + 1).cast(
-                "bigint"
-            )
-        ),
-    ).otherwise(F.lit(0).cast("bigint"))
-    w = _le16(p, 7)
-    h = _le16(p, 9)
-    npix = w.cast("bigint") * h.cast("bigint")
-    sig_ok = F.coalesce(
-        F.hex(F.substring(p, 1, 6)).isin("474946383761", "474946383961"),
-        F.lit(False),
-    )
-    sane = (
-        sig_ok
-        & npix.isNotNull()
-        & (w > 0)
-        & (h > 0)
-        & (npix <= F.lit(_GIF_MAX_PIXELS).cast("bigint"))
-        & (F.length(p) >= 13 + 3 * n_ent_g + 3)
-    )
-    one = F.lit(1).cast("bigint")
-    npix_c = F.when(sane, npix).otherwise(one)
-    pos0 = F.when(sane, 14 + 3 * n_ent_g).otherwise(one)
-    selects.append(("*", _gif_block_walk(p, pos0).alias("__gbw")))
-    id_pos = F.col("__gbw")["pos"]
-    # r14: a LOCAL color table (descriptor flag bit 7) sits between
-    # the descriptor and the mcs byte and takes precedence over the
-    # global one; a GIF with NEITHER table has no colors and rejects
-    iflags = _u8(p, id_pos + 9)
-    has_lct = F.floor(F.coalesce(iflags, F.lit(0)) / 128) == 1
-    lct_len = F.when(
-        has_lct,
-        3
-        * _pow2w(
-            (F.pmod(F.coalesce(iflags, F.lit(0)), F.lit(8)) + 1).cast(
-                "bigint"
-            )
-        ),
-    ).otherwise(F.lit(0).cast("bigint"))
-    n_ent = F.when(has_lct, F.floor(lct_len / 3).cast("bigint")).otherwise(
-        n_ent_g
-    )
-    tbl_base = F.when(has_lct, id_pos + 10).otherwise(
-        F.lit(14).cast("bigint")
-    )
-    mcs = _u8(p, id_pos + 10 + lct_len)
-    mcs_c = F.when(
-        sane & mcs.between(2, 8), mcs.cast("bigint")
-    ).otherwise(F.lit(2).cast("bigint"))
-    desc_ok = (
-        F.col("__gbw")["ok"]
-        & F.col("__gbw")["done"]
-        & (_u8(p, id_pos) == 0x2C)
-        & (_le16(p, id_pos + 1) == 0)       # left
-        & (_le16(p, id_pos + 3) == 0)       # top
-        & (_le16(p, id_pos + 5) == w)       # image width == screen
-        & (_le16(p, id_pos + 7) == h)
-        & (has_lct | has_gct)               # some color table exists
-        & (F.length(p) >= id_pos + 10 + lct_len)
-        & mcs.between(2, 8)
-    )
-    # r14: 4-pass interlace accepted — a closed-form row permutation
-    # applied at the pixel-map stage, no extra walk
-    interlaced = (
-        F.pmod(
-            F.floor(_u8(p, id_pos + 9) / 64).cast("bigint"), F.lit(2)
-        )
-        == 1
-    )
-    selects.append((
-        "*",
-        _gif_subblock_walk(
-            p,
-            F.when(
-                sane & desc_ok, id_pos + 11 + lct_len
-            ).otherwise(one),
-        ).alias("__gsb"),
-    ))
-    sb = F.col("__gsb")
-    stream_ok = (
-        sb["ok"]
-        & sb["done"]
-        & (sb["total"] > 0)
-        & (_u8(p, sb["pos"] + 1) == 0x3B)            # trailer
-        & (sb["pos"] + 1 == F.length(p))             # nothing after
-    )
-    walk_pre = sane & desc_ok & stream_ok
-    selects.append((
-        "*",
-        F.when(
-            walk_pre, _gif_lzw_walk(p, sb, mcs_c, npix_c)
-        ).alias("__glw"),
-    ))
-    lw = F.col("__glw")
-    out = lw["out"]
-    idx_ok = F.coalesce(
-        F.forall(out, lambda v: v.cast("bigint") < n_ent),
-        F.lit(False),
-    )
-    ok = (
-        walk_pre
-        & F.coalesce(lw["ok"] & lw["done"], F.lit(False))
-        & (F.size(out).cast("bigint") == npix_c)
-        & idx_ok
-    )
-
-    wbc = F.when(sane, w.cast("bigint")).otherwise(one)
-    hbc = F.when(sane, h.cast("bigint")).otherwise(one)
-
-    def gif_byte(k):
-        q = F.floor(k / 3).cast("bigint")
-        c = F.pmod(k, F.lit(3))
-        # interlace: display pixel q's index sits at the stream
-        # position of its row's pass slot — the expression twin of
-        # _gif_interlace_pos (closed form over the three pass sizes)
-        r = F.floor(q / wbc).cast("bigint")
-        x = F.pmod(q, wbc)
-        c1 = F.floor((hbc + 7) / 8).cast("bigint")
-        c2 = F.floor((hbc + 3) / 8).cast("bigint")
-        c3 = F.floor((hbc + 1) / 4).cast("bigint")
-        spos = (
-            F.when(F.pmod(r, F.lit(8)) == 0, F.floor(r / 8))
-            .when(F.pmod(r, F.lit(8)) == 4, c1 + F.floor((r - 4) / 8))
-            .when(
-                F.pmod(r, F.lit(4)) == 2, c1 + c2 + F.floor((r - 2) / 4)
-            )
-            .otherwise(c1 + c2 + c3 + F.floor((r - 1) / 2))
-            .cast("bigint")
-        )
-        sq = F.when(interlaced, spos * wbc + x).otherwise(q)
-        idx = F.coalesce(
-            F.try_element_at(out, (sq + 1).cast("int")), F.lit(0)
-        ).cast("bigint")
-        return _u8(p, tbl_base + idx * 3 + c)
-
-    pixels = F.transform(
-        F.sequence(F.lit(0), npix_c * 3 - 1), gif_byte
-    )
-    selects.append((
-        "media_id",
-        F.when(ok, "gif").alias("img_format"),
-        F.when(ok, w).cast("int").alias("width"),
-        F.when(ok, h).cast("int").alias("height"),
-        F.when(ok, pixels).alias("pixels"),
-    ))
-    return selects
-
-
-_GIF_ANIM_MAX_BLOCKS = 12  #: frame-walk bound (ext + image per frame)
+_GIF_ANIM_MAX_BLOCKS = 12  #: block-walk bound (ext + image per frame)
 _GIF_MAX_FRAMES = 5        #: animated-decode frame cap
 
 
 def decode_gif_anim(payload: bytes):
-    """Python twin of the Spark ``decode_gif_frames``: returns
-    ``(w, h, n_frames, [frame_rgb_or_None, ...])`` for an ANIMATED
-    GIF. STRUCTURAL failures (signature/screen/GCT, truncated or
+    """Single-payload ANIMATED GIF decode — what ``decode_gif_frames``
+    runs per row: returns ``(w, h, n_frames, [frame_rgb_or_None,
+    ...])``. STRUCTURAL failures (signature/screen/GCT, truncated or
     over-cap block stream, missing trailer, too many frames, no
-    frames) raise — they null every row on the Spark side.
+    frames) raise — ``decode_gif_frames`` keeps one all-null row.
     PER-FRAME failures (descriptor geometry, local table, bad mcs,
     a corrupt LZW stream, an out-of-range index) yield ``None`` for
-    THAT frame only — the Spark side nulls that frame's row and
-    decodes the rest, and the twin mirrors it exactly."""
+    THAT frame only — its row nulls and the rest decode."""
     if payload[:6] not in (b"GIF87a", b"GIF89a"):
         raise ValueError("not a GIF signature")
     w = int.from_bytes(payload[6:8], "little")
@@ -5988,342 +3488,40 @@ def encode_gif_anim(
     )
 
 
-def _gif_skip_subblocks(p, q0):
-    """Bounded sub-block skip: struct (q, fin) — ``q`` the first
-    byte after the 0x00 terminator reached from ``q0`` (a length
-    byte)."""
-    einit = F.struct(q0.alias("q"), F.lit(False).alias("fin"))
-
-    def estep(eacc, _):
-        q = eacc["q"]
-        sl = _u8(p, q)
-        bad = sl.isNull() | (q + sl >= F.length(p) + 1)
-        new = F.when(
-            bad | (sl == 0),
-            F.struct((q + 1).alias("q"), F.lit(True).alias("fin")),
-        ).otherwise(
-            F.struct(
-                (q + 1 + sl.cast("bigint")).alias("q"),
-                F.lit(False).alias("fin"),
-            )
-        )
-        return F.when(eacc["fin"], eacc).otherwise(new)
-
-    return F.aggregate(
-        F.sequence(F.lit(1), F.lit(_GIF_MAX_SUBBLOCKS)), einit, estep
-    )
-
-
-def _gif_frame_walk(p, pos0):
-    """Animated-GIF frame walk: from ``pos0``, skip extensions, skip
-    each image's data (descriptor + mcs + sub-blocks) while
-    RECORDING the descriptor offsets, stop at the trailer — one
-    struct column (pos, descs array<bigint>, ok, done). The trailer
-    must be the payload's last byte; more than ``_GIF_MAX_FRAMES``
-    descriptors or ``_GIF_ANIM_MAX_BLOCKS`` blocks flips ok."""
-    finit = F.struct(
-        pos0.alias("pos"),
-        F.slice(F.array(F.lit(0).cast("bigint")), 1, 0).alias("descs"),
-        F.lit(True).alias("ok"),
-        F.lit(False).alias("done"),
-    )
-
-    def fstep(acc, _):
-        pos = acc["pos"]
-        b = _u8(p, pos)
-        fail = F.struct(
-            pos.alias("pos"),
-            acc["descs"].alias("descs"),
-            F.lit(False).alias("ok"),
-            F.lit(True).alias("done"),
-        )
-        ext = _let(
-            _gif_skip_subblocks(p, pos + 2),
-            lambda e: F.when(
-                e["fin"],
-                F.struct(
-                    e["q"].alias("pos"),
-                    acc["descs"].alias("descs"),
-                    acc["ok"].alias("ok"),
-                    F.lit(False).alias("done"),
-                ),
-            ).otherwise(fail),
-        )
-        iflags_w = _u8(p, pos + 9)
-        lct_skip = F.when(
-            F.floor(F.coalesce(iflags_w, F.lit(0)) / 128) == 1,
-            3
-            * _pow2w(
-                (
-                    F.pmod(F.coalesce(iflags_w, F.lit(0)), F.lit(8))
-                    + 1
-                ).cast("bigint")
-            ),
-        ).otherwise(F.lit(0).cast("bigint"))
-        img = _let(
-            _gif_skip_subblocks(p, pos + 11 + lct_skip),
-            lambda e: F.when(
-                e["fin"]
-                & (F.size(acc["descs"]) < F.lit(_GIF_MAX_FRAMES)),
-                F.struct(
-                    e["q"].alias("pos"),
-                    F.concat(
-                        acc["descs"], F.array(pos)
-                    ).alias("descs"),
-                    acc["ok"].alias("ok"),
-                    F.lit(False).alias("done"),
-                ),
-            ).otherwise(fail),
-        )
-        new = (
-            F.when(b.isNull() | (pos > F.length(p)), fail)
-            .when(
-                b == 0x3B,
-                F.struct(
-                    pos.alias("pos"),
-                    acc["descs"].alias("descs"),
-                    (acc["ok"] & (pos == F.length(p))).alias("ok"),
-                    F.lit(True).alias("done"),
-                ),
-            )
-            .when(b == 0x21, ext)
-            .when(b == 0x2C, img)
-            .otherwise(fail)
-        )
-        return F.when(acc["done"], acc).otherwise(new)
-
-    return F.aggregate(
-        F.sequence(F.lit(1), F.lit(_GIF_ANIM_MAX_BLOCKS)), finit, fstep
-    )
+_FRAME_FIELDS = [
+    StructField("gif_format", StringType()),
+    StructField("width", IntegerType()),
+    StructField("height", IntegerType()),
+    StructField("n_frames", IntegerType()),
+    StructField("frame_idx", IntegerType()),
+    StructField("pixels", ArrayType(IntegerType())),
+]
 
 
 def decode_gif_frames(
     media: DataFrame, payload_col: str = "payload"
 ) -> DataFrame:
-    """ANIMATED GIF decode, pure Spark: ONE ROW PER FRAME —
-    (media_id, gif_format, width, height, n_frames, frame_idx,
-    pixels) — the GIF sibling of ``decode_y4m_frames``. The frame
-    walk (``_gif_frame_walk``) records every full-screen image
-    descriptor while skipping extensions and image data; a
-    ``posexplode_outer`` turns the descriptor list into frame rows
-    (invalid payloads keep one null-frame row, so the operator is
-    total); each frame row then stages its OWN sub-block table and
-    LZW walk at its descriptor's offset — the single-image decode
-    machinery reused verbatim, including per-frame interlace and the
-    bounds-checked color-table lookup. Envelope: every frame covers
-    the screen under the global color table; caps
-    ``_GIF_MAX_FRAMES`` / ``_GIF_ANIM_MAX_BLOCKS`` (twin:
-    ``decode_gif_anim``).
+    """ANIMATED GIF decode: ONE ROW PER FRAME — (media_id,
+    gif_format, width, height, n_frames, frame_idx, pixels) — the GIF
+    sibling of ``decode_y4m_frames``. Runs ``decode_gif_anim`` once
+    per payload in the Arrow-batched stage ``decode_pixels`` uses for
+    PNG and GIF. A structural failure (any exception: signature,
+    screen, truncated or over-cap block stream, missing trailer)
+    keeps one all-null row, so the operator is total; a per-frame
+    failure (descriptor geometry, bad mcs, a corrupt LZW stream, an
+    out-of-range index) nulls that frame's row only. Envelope: every
+    frame covers the screen under the global or its local color
+    table, interlace included; caps ``_GIF_MAX_FRAMES`` /
+    ``_GIF_ANIM_MAX_BLOCKS``."""
 
-    r14 optimization round: same program/assembly split + memo as
-    ``_decode_pixels_gif`` — the select program is a pure function
-    of ``payload_col``."""
-    df = media
-    for sel in _gif_frames_plan_selects_cached(payload_col):
-        df = df.select(*sel)
-    return df
+    def frame_rows(payload):
+        try:
+            w, h, n, frames = decode_gif_anim(payload)
+        except Exception:
+            return [(None,) * 6]
+        return [
+            (None,) * 6 if px is None else ("gif", w, h, n, i, px)
+            for i, px in enumerate(frames)
+        ]
 
-
-@lru_cache(maxsize=8)
-def _gif_frames_plan_selects_cached(payload_col: str):
-    """Memoized select-stage program for ``decode_gif_frames``."""
-    return tuple(
-        tuple(sel) for sel in _gif_frames_plan_selects(payload_col)
-    )
-
-
-def _gif_frames_plan_selects(payload_col: str):
-    """The ``decode_gif_frames`` expression program (ordered select
-    argument tuples; see ``_gif_plan_selects``)."""
-    selects = []
-    p0 = F.col(payload_col)
-    flags0 = _u8(p0, 11)
-    n_ent0 = _pow2w(
-        (F.pmod(F.coalesce(flags0, F.lit(0)), F.lit(8)) + 1).cast(
-            "bigint"
-        )
-    )
-    w0 = _le16(p0, 7)
-    h0 = _le16(p0, 9)
-    npix0 = w0.cast("bigint") * h0.cast("bigint")
-    sig_ok0 = F.coalesce(
-        F.hex(F.substring(p0, 1, 6)).isin(
-            "474946383761", "474946383961"
-        ),
-        F.lit(False),
-    )
-    one = F.lit(1).cast("bigint")
-    has_gct0 = F.floor(F.coalesce(flags0, F.lit(0)) / 128) == 1
-    n_ent0g = F.when(has_gct0, n_ent0).otherwise(
-        F.lit(0).cast("bigint")
-    )
-    sane0 = (
-        sig_ok0
-        & npix0.isNotNull()
-        & (w0 > 0)
-        & (h0 > 0)
-        & (npix0 <= F.lit(_GIF_MAX_PIXELS).cast("bigint"))
-        & (F.length(p0) >= 13 + 3 * n_ent0g + 3)
-    )
-    selects.append((
-        "media_id",
-        p0.alias("__p"),
-        _gif_frame_walk(
-            p0, F.when(sane0, 14 + 3 * n_ent0g).otherwise(one)
-        ).alias("__gfw"),
-    ))
-
-    # everything below reads from __p (header expressions are cheap
-    # closed-form byte reads, recomputed per stage)
-    p = F.col("__p")
-    flags = _u8(p, 11)
-    n_ent = _pow2w(
-        (F.pmod(F.coalesce(flags, F.lit(0)), F.lit(8)) + 1).cast(
-            "bigint"
-        )
-    )
-    w = _le16(p, 7)
-    h = _le16(p, 9)
-    npix = w.cast("bigint") * h.cast("bigint")
-    has_gct = F.floor(F.coalesce(flags, F.lit(0)) / 128) == 1
-    n_ent_g = F.when(has_gct, n_ent).otherwise(
-        F.lit(0).cast("bigint")
-    )
-    sane = (
-        F.coalesce(
-            F.hex(F.substring(p, 1, 6)).isin(
-                "474946383761", "474946383961"
-            ),
-            F.lit(False),
-        )
-        & npix.isNotNull()
-        & (w > 0)
-        & (h > 0)
-        & (npix <= F.lit(_GIF_MAX_PIXELS).cast("bigint"))
-    )
-    npix_c = F.when(sane, npix).otherwise(one)
-    gfw = F.col("__gfw")
-    pre_ok = (
-        sane
-        & F.coalesce(gfw["ok"] & gfw["done"], F.lit(False))
-        & (F.size(gfw["descs"]) >= 1)
-    )
-    selects.append((
-        "media_id",
-        "__p",
-        F.when(pre_ok, F.size(gfw["descs"])).alias("__nf"),
-        F.posexplode_outer(F.when(pre_ok, gfw["descs"])).alias(
-            "frame_idx", "__dpos"
-        ),
-    ))
-    dpos = F.col("__dpos")
-    # per-frame local color table (r14): sits between the descriptor
-    # and the mcs byte, takes precedence over the global table
-    iflags_f = _u8(p, dpos + 9)
-    has_lct = F.floor(F.coalesce(iflags_f, F.lit(0)) / 128) == 1
-    lct_len = F.when(
-        has_lct,
-        3
-        * _pow2w(
-            (
-                F.pmod(F.coalesce(iflags_f, F.lit(0)), F.lit(8)) + 1
-            ).cast("bigint")
-        ),
-    ).otherwise(F.lit(0).cast("bigint"))
-    n_ent_f = F.when(
-        has_lct, F.floor(lct_len / 3).cast("bigint")
-    ).otherwise(n_ent_g)
-    tbl_base = F.when(has_lct, dpos + 10).otherwise(
-        F.lit(14).cast("bigint")
-    )
-    selects.append((
-        "*",
-        _gif_subblock_walk(
-            p,
-            F.when(
-                dpos.isNotNull(), dpos + 11 + lct_len
-            ).otherwise(one),
-        ).alias("__gsb"),
-    ))
-    mcs = _u8(p, dpos + 10 + lct_len)
-    mcs_c = F.when(
-        dpos.isNotNull() & mcs.between(2, 8), mcs.cast("bigint")
-    ).otherwise(F.lit(2).cast("bigint"))
-    desc_ok = (
-        dpos.isNotNull()
-        & (_u8(p, dpos) == 0x2C)
-        & (_le16(p, dpos + 1) == 0)
-        & (_le16(p, dpos + 3) == 0)
-        & (_le16(p, dpos + 5) == w)
-        & (_le16(p, dpos + 7) == h)
-        & (has_lct | has_gct)
-        & (F.length(p) >= dpos + 10 + lct_len)
-        & mcs.between(2, 8)
-    )
-    interlaced = (
-        F.pmod(
-            F.floor(_u8(p, dpos + 9) / 64).cast("bigint"), F.lit(2)
-        )
-        == 1
-    )
-    sb = F.col("__gsb")
-    stream_ok = sb["ok"] & sb["done"] & (sb["total"] > 0)
-    walk_pre = F.coalesce(desc_ok & stream_ok, F.lit(False))
-    selects.append((
-        "*",
-        F.when(
-            walk_pre, _gif_lzw_walk(p, sb, mcs_c, npix_c)
-        ).alias("__glw"),
-    ))
-    lw = F.col("__glw")
-    out = lw["out"]
-    idx_ok = F.coalesce(
-        F.forall(out, lambda v: v.cast("bigint") < n_ent_f),
-        F.lit(False),
-    )
-    ok = (
-        walk_pre
-        & F.coalesce(lw["ok"] & lw["done"], F.lit(False))
-        & (F.size(out).cast("bigint") == npix_c)
-        & idx_ok
-    )
-    wbc = F.when(sane, w.cast("bigint")).otherwise(one)
-    hbc = F.when(sane, h.cast("bigint")).otherwise(one)
-
-    def gif_byte(k):
-        q = F.floor(k / 3).cast("bigint")
-        c = F.pmod(k, F.lit(3))
-        r = F.floor(q / wbc).cast("bigint")
-        x = F.pmod(q, wbc)
-        c1 = F.floor((hbc + 7) / 8).cast("bigint")
-        c2 = F.floor((hbc + 3) / 8).cast("bigint")
-        c3 = F.floor((hbc + 1) / 4).cast("bigint")
-        spos = (
-            F.when(F.pmod(r, F.lit(8)) == 0, F.floor(r / 8))
-            .when(F.pmod(r, F.lit(8)) == 4, c1 + F.floor((r - 4) / 8))
-            .when(
-                F.pmod(r, F.lit(4)) == 2,
-                c1 + c2 + F.floor((r - 2) / 4),
-            )
-            .otherwise(c1 + c2 + c3 + F.floor((r - 1) / 2))
-            .cast("bigint")
-        )
-        sq = F.when(interlaced, spos * wbc + x).otherwise(q)
-        idx = F.coalesce(
-            F.try_element_at(out, (sq + 1).cast("int")), F.lit(0)
-        ).cast("bigint")
-        return _u8(p, tbl_base + idx * 3 + c)
-
-    pixels = F.transform(
-        F.sequence(F.lit(0), npix_c * 3 - 1), gif_byte
-    )
-    selects.append((
-        "media_id",
-        F.when(ok, "gif").alias("gif_format"),
-        F.when(ok, w).cast("int").alias("width"),
-        F.when(ok, h).cast("int").alias("height"),
-        F.when(ok, F.col("__nf")).cast("int").alias("n_frames"),
-        F.when(ok, F.col("frame_idx")).cast("int").alias("frame_idx"),
-        F.when(ok, pixels).alias("pixels"),
-    ))
-    return selects
+    return _decode_stage(media, payload_col, _FRAME_FIELDS, frame_rows)

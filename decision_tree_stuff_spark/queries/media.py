@@ -166,12 +166,12 @@ def q_e6_png_decode(spark, sf_dir):
     """REAL PNG decode (r11): every clip a grayscale-8 PNG whose zlib
     stream is a STORED deflate block — signature, IHDR, chunk CRC-32s,
     zlib header, block LEN/~LEN, Adler-32 and scanline filters all
-    verified in pure byte expressions, then gray expanded to R=G=B.
-    Same closed-form trap as e6_pixel_decode (the oracle recomputes
-    pixels from the formula, so a layout or checksum mistake on either
-    side mismatches); Huffman-compressed PNGs stay codec-bound and
-    null out (documented, tests pin both paths). Hex-packed scalar
-    output."""
+    verified by ``decode_png`` in ``decode_pixels``' Arrow-batched
+    stage, then gray expanded to R=G=B. Same closed-form trap as
+    e6_pixel_decode (the oracle recomputes pixels from the formula,
+    so a layout or checksum mistake on either side mismatches);
+    Huffman-compressed PNGs null out without their opt-in flag
+    (tests pin it). Hex-packed scalar output."""
     from decision_tree_stuff_spark.operators.multimodal import (
         decode_pixels,
         synthesize_decodable_media,
@@ -187,17 +187,16 @@ def q_e6_png_decode(spark, sf_dir):
 
 
 def q_e6_png_fixed_decode(spark, sf_dir):
-    """REAL fixed-Huffman PNG decode (r12 — the r11 verdict's stretch
-    goal): every clip a grayscale-8 PNG whose zlib stream is one
-    final BTYPE=01 deflate block; the decode is the bounded
-    symbol-walk fold (literal codes + EOB here; back-references
-    covered by the handcrafted-stream tests), with chunk CRC-32s,
-    zlib header, Adler-32 over the DECOMPRESSED bytes and scanline
-    filters verified in pure byte expressions. Same closed-form trap
-    as e6_png_decode: the oracle recomputes pixels from the formula,
-    so a mistake in either the FH encoder's bit packing or the
-    decoder's bit walk mismatches. Opt-in flag, per the r12 plan-cost
-    lesson. Hex-packed scalar output."""
+    """REAL fixed-Huffman PNG decode (r12): every clip a grayscale-8
+    PNG whose zlib stream is one final BTYPE=01 deflate block
+    (literal codes + EOB here; back-references covered by the
+    handcrafted-stream tests), decoded by ``decode_png`` in the
+    Arrow-batched stage with chunk CRC-32s, zlib header, Adler-32
+    over the DECOMPRESSED bytes and scanline filters verified. Same
+    closed-form trap as e6_png_decode: the oracle recomputes pixels
+    from the formula, so a mistake in either the FH encoder's bit
+    packing or the decoder's bit walk mismatches. Opt-in flag.
+    Hex-packed scalar output."""
     from decision_tree_stuff_spark.operators.multimodal import (
         decode_pixels,
         synthesize_decodable_media,
@@ -214,25 +213,20 @@ def q_e6_png_fixed_decode(spark, sf_dir):
 
 
 def q_e6_png_dyn_decode(spark, sf_dir):
-    """REAL dynamic-Huffman PNG decode (r13 — the r12 verdict's #1
-    remaining gap, BTYPE=10: what real-world PNG encoders actually
-    emit): every clip a grayscale-8 PNG whose zlib stream is one
-    final dynamic-Huffman deflate block; the decode transmits and
-    rebuilds BOTH canonical Huffman tables from the stream (header →
-    code-length code → code-lengths walk → count-based symbol walk),
-    with chunk CRC-32s, zlib header, Adler-32 over the DECOMPRESSED
-    bytes and scanline filters verified in pure byte expressions.
-    Same closed-form trap as e6_png_fixed_decode: the oracle
-    recomputes pixels from the formula, so a mistake in the
+    """REAL dynamic-Huffman PNG decode (r13, BTYPE=10: what
+    real-world PNG encoders actually emit): every clip a grayscale-8
+    PNG whose zlib stream is one final dynamic-Huffman deflate
+    block; ``decode_png`` rebuilds BOTH canonical Huffman tables
+    from the stream (header → code-length code → code lengths →
+    count-based symbol walk), with chunk CRC-32s, zlib header,
+    Adler-32 over the DECOMPRESSED bytes and scanline filters
+    verified. Same closed-form trap as e6_png_fixed_decode: the
+    oracle recomputes pixels from the formula, so a mistake in the
     encoder's bit packing, the table transmission, or the decoder's
     two-level Huffman walk mismatches. zlib-validated fixtures and
-    zlib's OWN dynamic streams are pinned in tests. Opt-in flag,
-    per the r12 plan-cost lesson. Probe density: doc_id % 31 (~2k
-    images at sf0.1) — the two-level count walk costs ~4 ms/image
-    (measured, SCALING_r13.md §5), so the %7 density the cheaper
-    decode rows use would make this one row ~16% of the whole bench
-    wall; the oracle covers the same subset. Hex-packed scalar
-    output."""
+    zlib's OWN dynamic streams are pinned in tests. Opt-in flag.
+    Probe density: doc_id % 31, and the oracle covers the same
+    subset. Hex-packed scalar output."""
     from decision_tree_stuff_spark.operators.multimodal import (
         decode_pixels,
         synthesize_decodable_media,
@@ -252,13 +246,12 @@ def q_e6_png_rgb_decode(spark, sf_dir):
     """REAL RGB (color-type-2) PNG decode (r13 — with BTYPE=10 this
     is the real-world PNG shape: truecolor + dynamic Huffman): even
     ids a STORED-deflate RGB PNG, odd ids a DYNAMIC-HUFFMAN RGB PNG,
-    both decoded in the same plan (the stored walk and the DH stages
-    dispatch on the 3-bit block header). Flat RGB byte k is the one
-    closed form (doc_id·7 + k·13) mod 256, so the oracle needs no
-    channel math — and the decode must get the 3w+1 stride, the
-    per-row filter bytes AND the deflate layer right for the hash to
-    match. Density %31 (the DH rows cost ~4 ms/image). Hex-packed
-    scalar output."""
+    both decoded in the same stage (``decode_png`` dispatches on the
+    3-bit block header). Flat RGB byte k is the one closed form
+    (doc_id·7 + k·13) mod 256, so the oracle needs no channel math —
+    and the decode must get the 3w+1 stride, the per-row filter
+    bytes AND the deflate layer right for the hash to match. Density
+    %31. Hex-packed scalar output."""
     from decision_tree_stuff_spark.operators.multimodal import (
         decode_pixels,
         synthesize_decodable_media,
@@ -275,22 +268,20 @@ def q_e6_png_rgb_decode(spark, sf_dir):
 
 
 def q_e6_png_filtered_decode(spark, sf_dir):
-    """REAL scanline-FILTERED PNG decode (r14 — the r13 verdict's #1
-    remaining gap: filters 1-4, Sub/Up/Average/Paeth, are what real
-    libpng output uses per-line adaptively): even ids a STORED-
-    deflate grayscale PNG, odd ids a DYNAMIC-HUFFMAN truecolor PNG,
-    every scanline carrying filter type (r + media_id) mod 5, so all
-    five RFC 2083 filters and both deflate envelopes and both color
-    types run in the one plan. The decode stages the decompressed
-    stream once per row and reconstructs with one bounded fold
-    (``_png_unfilter``); the encoder emits closed-form FILTERED
-    bytes whose reconstruction is the same pixel formula as every
-    other PNG row — so the oracle recomputes pixels straight from
-    the formula and a mistake in either the encoder's filter
-    arithmetic or the decoder's reconstruction (left/up/up-left
-    neighbor indexing, the Paeth tie-breaks, the mod-256 wrap)
-    mismatches the hash. Density %31 (the DH half costs ~4 ms/image,
-    the e6_png_dyn_decode reasoning). Hex-packed scalar output."""
+    """REAL scanline-FILTERED PNG decode (r14 — filters 1-4,
+    Sub/Up/Average/Paeth, are what real libpng output uses
+    per-line adaptively): even ids a STORED-deflate grayscale PNG,
+    odd ids a DYNAMIC-HUFFMAN truecolor PNG, every scanline carrying
+    filter type (r + media_id) mod 5, so all five RFC 2083 filters
+    and both deflate envelopes and both color types run in the one
+    stage (``decode_png(filters=True)``). The encoder emits
+    closed-form FILTERED bytes whose reconstruction is the same pixel
+    formula as every other PNG row — so the oracle recomputes pixels
+    straight from the formula and a mistake in either the encoder's
+    filter arithmetic or the decoder's reconstruction (left/up/
+    up-left neighbor indexing, the Paeth tie-breaks, the mod-256
+    wrap) mismatches the hash. Density %31. Hex-packed scalar
+    output."""
     from decision_tree_stuff_spark.operators.multimodal import (
         decode_pixels,
         synthesize_decodable_media,
@@ -320,8 +311,8 @@ def q_e6_png_alpha_decode(spark, sf_dir):
     recomputes RGB straight from the closed form (gray byte at
     recon[2q], RGBA byte at recon[4q+c]) and any mistake in the
     4-byte/2-byte stride math, the alpha-aware Paeth neighbors, or
-    the channel drop mismatches the hash. Density %31 (the DH half).
-    Hex-packed scalar output."""
+    the channel drop mismatches the hash. Density %31. Hex-packed
+    scalar output."""
     from decision_tree_stuff_spark.operators.multimodal import (
         decode_pixels,
         synthesize_decodable_media,
@@ -346,16 +337,15 @@ def q_e6_png_palette_decode(spark, sf_dir):
     odd ids a DYNAMIC-HUFFMAN FILTERED paletted PNG. The stream
     carries one INDEX byte per pixel (filters apply to the indices
     at the 1-byte stride) and RGB comes from the payload's real PLTE
-    chunk — located by a bounded pre-IDAT chunk walk
-    (``_png_plte_walk``), CRC-verified by the shared chunk walk,
-    length/multiplicity validated, and EVERY index bounds-checked
-    against the entry count (an out-of-range index nulls the row,
-    never reads past the palette). The synthetic 256-entry palette
-    is arranged so the decoded RGB byte k equals the one closed-form
-    ``pixel_value`` (see ``_png_index_value``): the oracle needs no
-    palette math, while a mistake in the PLTE offset, the
-    idx->entry*3+channel mapping or the index filter reconstruction
-    mismatches the hash. Density %31 (the DH half). Hex-packed
+    chunk — ``decode_png(palette=True)`` takes the one CRC-verified
+    PLTE before IDAT, validates its length, and bounds-checks EVERY
+    index against the entry count (an out-of-range index nulls the
+    row, never reads past the palette). The synthetic 256-entry
+    palette is arranged so the decoded RGB byte k equals the one
+    closed-form ``pixel_value`` (see ``_png_index_value``): the
+    oracle needs no palette math, while a mistake in the PLTE
+    offset, the idx->entry*3+channel mapping or the index filter
+    reconstruction mismatches the hash. Density %31. Hex-packed
     scalar output."""
     from decision_tree_stuff_spark.operators.multimodal import (
         decode_pixels,
@@ -375,22 +365,19 @@ def q_e6_png_palette_decode(spark, sf_dir):
 
 
 def q_e6_gif_decode(spark, sf_dir):
-    """REAL GIF (LZW) pixel decode (r14 — a SECOND compressed
-    container in pure Spark expressions, after the three-envelope
-    PNG family): even ids an uncompressed-shape GIF89a (one CLEAR +
-    every pixel as a 9-bit root code under a 256-entry global color
-    table — the stream real tools emit for incompressible data), odd
-    ids a genuinely DICTIONARY-COMPRESSED stream (4-color periodic
-    indices, compressed by the real LZW compressor) that makes the
-    decoder exercise table codes and the width bookkeeping. The walk
-    decodes one fold step per CODE with the dictionary as
-    (start, len) windows into the output stream (the LZ77 insight);
-    extension blocks are skipped; every index is bounds-checked
-    against the color table. Both palettes are arranged so the
-    decoded RGB is closed-form (the 256-entry table makes the
-    indirection invisible: 39·(q mod 256) ≡ 39q mod 256). Density
-    %31 (per-code fold, the PNG-walk cost class). Hex-packed scalar
-    output."""
+    """REAL GIF (LZW) pixel decode (r14 — the second compressed
+    container, after the PNG family): even ids an uncompressed-shape
+    GIF89a (one CLEAR + every pixel as a 9-bit root code under a
+    256-entry global color table — the stream real tools emit for
+    incompressible data), odd ids a genuinely DICTIONARY-COMPRESSED
+    stream (4-color periodic indices, compressed by the real LZW
+    compressor) that makes the decoder exercise table codes and the
+    width bookkeeping. ``decode_gif`` runs in ``decode_pixels``'
+    Arrow-batched stage: extension blocks are skipped and every
+    index is bounds-checked against the color table. Both palettes
+    are arranged so the decoded RGB is closed-form (the 256-entry
+    table makes the indirection invisible: 39·(q mod 256) ≡ 39q mod
+    256). Density %31. Hex-packed scalar output."""
     from decision_tree_stuff_spark.operators.multimodal import (
         decode_pixels,
         synthesize_decodable_media,
@@ -434,10 +421,10 @@ def q_e6_gif_frames(spark, sf_dir):
     NETSCAPE looping extension (skipped) and doc_id%3+1 full-screen
     root-code frames whose index stream shifts by 9 per frame, so
     frame f's RGB byte k is the closed form
-    (doc_id*7 + k*13 + 95*f) mod 256. The frame walk records every
-    descriptor while skipping extensions and image data; each frame
-    row then runs its own sub-block + LZW walk. Density %31.
-    Hex-packed scalar output."""
+    (doc_id*7 + k*13 + 95*f) mod 256. ``decode_gif_frames`` runs
+    ``decode_gif_anim`` per payload in an Arrow-batched stage and
+    emits one row per frame. Density %31. Hex-packed scalar
+    output."""
     from decision_tree_stuff_spark.operators.multimodal import (
         decode_gif_frames,
         encode_gif_anim,
@@ -476,7 +463,7 @@ def q_e6_gif_lct(spark, sf_dir):
     whose image carries its own 256-entry LOCAL table (the decoder
     must read colors at the descriptor-relative offset and shift the
     mcs/data offsets by the table length), odd ids the interlaced
-    real-LZW fixture (global-table path in the same plan). Both
+    real-LZW fixture (global-table path in the same stage). Both
     decode to closed forms. Density %31. Hex-packed scalar
     output."""
     from decision_tree_stuff_spark.operators.multimodal import (
@@ -498,13 +485,13 @@ def q_e6_png_16bit_decode(spark, sf_dir):
     scanners/scientific tools emit): even ids a STORED gray16 PNG,
     odd ids the fullest real-world composition — DYNAMIC-HUFFMAN +
     adaptive FILTERS + RGBA + 16-bit (8 bytes/pixel stride). Samples
-    are big-endian; the decoder outputs each sample's MSB (the
-    standard 8-bit downsample) while the LSBs ride the filter
-    reconstruction and the Adler-32 — a corrupted LSB fails the
-    checksum even though it never reaches the output (pinned in
-    tests). MSBs carry the shared closed form, so the oracle is the
-    same formula family as the 8-bit rows. Density %31. Hex-packed
-    scalar output."""
+    are big-endian; ``decode_png(depth16=True)`` outputs each
+    sample's MSB (the standard 8-bit downsample) while the LSBs ride
+    the filter reconstruction and the Adler-32 — a corrupted LSB
+    fails the checksum even though it never reaches the output
+    (pinned in tests). MSBs carry the shared closed form, so the
+    oracle is the same formula family as the 8-bit rows. Density
+    %31. Hex-packed scalar output."""
     from decision_tree_stuff_spark.operators.multimodal import (
         decode_pixels,
         synthesize_decodable_media,
@@ -969,7 +956,7 @@ FROM documents WHERE doc_id % 31 = 0
     # r14: paletted twin — the 256-entry synthetic palette makes the
     # decoded byte k the plain formula (39*(q mod 256) == 39q mod
     # 256), so the oracle is identical to the truecolor rows; the
-    # Spark side must still walk PLTE, bounds-check every index and
+    # decoder must still read PLTE, bounds-check every index and
     # reconstruct the index-byte filters for the hash to match.
     "e6_png_palette_decode": """
 SELECT doc_id AS media_id,

@@ -1,6 +1,7 @@
 """Anti-pattern sweep over every registered query's physical plan
 (sf0.01 by default): counts BatchEvalPython (row-at-a-time Python),
-CartesianProduct, ArrowEvalPython/MapInPandas occurrences, plus an
+CartesianProduct, ArrowEvalPython/MapInPandas/MapInArrow occurrences,
+plus an
 exchange/join inventory for queries named in PROFILE_QUERIES.
 
 Plans are built (analyzed+optimized+physical), not executed — except
@@ -45,7 +46,7 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
     out = {"sf_dir": SF_DIR, "n_queries": 0, "hits": {}, "profile": {}}
     markers = ("BatchEvalPython", "CartesianProduct", "ArrowEvalPython",
-               "MapInPandas")
+               "MapInPandas", "MapInArrow")
     for name, fn in ALL_QUERIES.items():
         try:
             plan = fn(spark, SF_DIR)._jdf.queryExecution().executedPlan().toString()

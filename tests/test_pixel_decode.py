@@ -579,6 +579,39 @@ def test_golden_png_both_paths(spark):
     assert decode_png(payload) == (2, 2, expect)
 
 
+def test_decode_stage_ships_decoders_by_value(spark, tmp_path):
+    """A Python worker may start where this package is not importable
+    (a driver that put it on ``sys.path`` by hand, run from another
+    directory). Building the PNG/GIF decode stage makes the decoders
+    pickle by value, so they run in an interpreter without it."""
+    import subprocess
+    import sys
+
+    from pyspark import cloudpickle
+
+    from decision_tree_stuff_spark.operators.multimodal import decode_png
+
+    payload, expect = _golden_png_2x2()
+    df = spark.createDataFrame(
+        [(1, bytearray(payload))], "media_id bigint, payload binary"
+    )
+    decode_pixels(df, formats=("png",))  # builds, does not run, the stage
+    out = subprocess.run(
+        [
+            sys.executable,
+            "-c",
+            "import pickle, sys; f, p = pickle.load(sys.stdin.buffer); "
+            "print(f(p))",
+        ],
+        input=cloudpickle.dumps((decode_png, payload)),
+        cwd=tmp_path,
+        capture_output=True,
+        check=True,
+        timeout=60,
+    )
+    assert out.stdout.decode().strip() == str((2, 2, expect))
+
+
 def test_png_round_trip_matches_formula_and_python(spark):
     """Spark encode_png → real PNG bytes → Spark decode must reproduce
     the closed-form grays (expanded to RGB); the Python twin must
@@ -1890,107 +1923,6 @@ def test_encode_png_dyn_oversize_raises_instead_of_corrupt(spark):
         ).collect()
 
 
-def test_dh_peek_walk_equivalence(spark):
-    """The r14 peek symbol decode (staged lims/cums prefix tables,
-    ``DH_SYM_IMPL='peek'``) must decode byte-identically to the
-    default count-fold walk — on the synth encoder's flat tables AND
-    on zlib's own rich-table streams. The peek variant measured a
-    wash-to-slightly-worse at bench scale (SCALING_r14.md §2) so the
-    fold stays the default; this pin keeps the measured alternative
-    honest while it lives in-tree."""
-    import zlib as _z
-
-    import decision_tree_stuff_spark.operators.multimodal as mm
-
-    docs = spark.createDataFrame(
-        [(i,) for i in range(1, 9)], "doc_id bigint"
-    )
-    media = synthesize_decodable_media(
-        docs, formats=("pngd", "pngdc")
-    ).localCheckpoint()
-    w, h = 16, 9
-    grays = [(i * i % 17) + (i % 5) for i in range(w * h)]
-    raw = b"".join(
-        b"\x00" + bytes(grays[r * w:(r + 1) * w]) for r in range(h)
-    )
-    z = _z.compress(raw, 9)
-    assert (z[2] >> 1) & 3 == 2, "fixture no longer dynamic"
-    zdf = spark.createDataFrame(
-        [(99, bytearray(_png_from(raw, w, h, idat_data=z)))],
-        "media_id bigint, payload binary",
-    ).localCheckpoint()
-
-    def run(df):
-        return sorted(
-            (r["media_id"], r["img_format"], r["width"], r["height"],
-             tuple(r["pixels"] or []))
-            for r in decode_pixels(
-                df, formats=("png",), png_dynamic_huffman=True
-            ).collect()
-        )
-
-    assert mm.DH_SYM_IMPL == "fold", "default changed — update test"
-    try:
-        a_synth, a_zlib = run(media), run(zdf)
-        mm.DH_SYM_IMPL = "peek"
-        b_synth, b_zlib = run(media), run(zdf)
-    finally:
-        mm.DH_SYM_IMPL = "fold"
-    assert a_synth == b_synth
-    assert a_zlib == b_zlib
-    assert all(r[1] == "png" for r in b_synth + b_zlib)
-
-
-def test_png_expr_backend_sql_differential(spark):
-    """The gated strexpr ("sql") construction backend must produce
-    byte-identical decode results to the default ColumnNode
-    ("column") build — same expression program, two construction
-    paths (r14, SCALING_r14.md §6: the sql path is a measured wall
-    time NEGATIVE kept in-tree as this differential oracle; the
-    filters case here routes through the stored-envelope reader,
-    the unfilter fold and every final, the deepest shared program
-    the cheap flag set reaches)."""
-    import decision_tree_stuff_spark.operators.multimodal as mm
-
-    docs = spark.createDataFrame(
-        [(i,) for i in range(1, 9)], "doc_id bigint"
-    )
-    media = synthesize_decodable_media(
-        docs, formats=("pngflt", "pngfltc")
-    ).localCheckpoint()
-    # a payload the decoder must NULL out (bad filter byte) rides
-    # along so the reject path is pinned through both backends too
-    raw = b"\x07" + bytes([1, 2]) + b"\x00" + bytes([3, 4])
-    bad = spark.createDataFrame(
-        [(99, bytearray(_png_from(raw, 2, 2)))],
-        "media_id bigint, payload binary",
-    ).localCheckpoint()
-
-    def run(df):
-        return sorted(
-            (r["media_id"], r["img_format"], r["width"], r["height"],
-             None if r["pixels"] is None else tuple(r["pixels"]))
-            for r in decode_pixels(
-                df, formats=("png",), png_filters=True
-            ).collect()
-        )
-
-    assert mm._PNG_EXPR_BACKEND == "column", (
-        "default backend changed — update test and the "
-        "_PNG_EXPR_BACKEND measurement note"
-    )
-    try:
-        a_synth, a_bad = run(media), run(bad)
-        mm._PNG_EXPR_BACKEND = "sql"
-        b_synth, b_bad = run(media), run(bad)
-    finally:
-        mm._PNG_EXPR_BACKEND = "column"
-    assert a_synth == b_synth
-    assert a_bad == b_bad
-    assert all(r[1] == "png" for r in b_synth)
-    assert b_bad[0][1] is None
-
-
 # ---------------------------------------------------------------------------
 # r14: PALETTED (color type 3) PNG — opt-in png_palette
 # ---------------------------------------------------------------------------
@@ -2360,37 +2292,3 @@ def test_png_16bit_rejections_both_paths(spark):
     assert r["img_format"] is None
     with pytest.raises(ValueError):
         decode_png(short, depth16=True)
-
-
-def test_plan_memo_cached_equals_fresh(spark, sf_dir):
-    """r14 optimization: the memoized expression programs
-    (`_png_plan_exprs_cached`, `_decodable_payload_expr`,
-    `_gif_plan_selects_cached`, `_gif_frames_plan_selects_cached`)
-    must yield frames identical to fresh-built ones — the caches
-    hold only immutable unresolved Column trees, never data."""
-    from pyspark.sql import functions as F
-
-    from decision_tree_stuff_spark.operators import multimodal as mm
-    from decision_tree_stuff_spark.queries import ALL_QUERIES
-
-    def clear():
-        mm._png_plan_exprs_cached.cache_clear()
-        mm._decodable_payload_expr.cache_clear()
-        mm._gif_plan_selects_cached.cache_clear()
-        mm._gif_frames_plan_selects_cached.cache_clear()
-
-    def dhash(df):
-        cols = [F.col(c).cast("string") for c in df.columns]
-        return (
-            df.select(
-                F.sha2(F.concat_ws("\x1f", *cols), 256).alias("h")
-            )
-            .agg(F.sum(F.conv(F.substring("h", 1, 15), 16, 10)))
-            .first()[0]
-        )
-
-    for name in ("e6_png_decode", "e6_gif_decode", "e6_gif_frames"):
-        clear()
-        fresh = dhash(ALL_QUERIES[name](spark, sf_dir))
-        cached = dhash(ALL_QUERIES[name](spark, sf_dir))  # memo warm
-        assert fresh == cached, name

@@ -44,9 +44,7 @@ BUILD_PLUS_PLAN_BUDGET_SEC = {
 
 
 # A row's FIRST build in a process is a construction-memo MISS
-# (multimodal._png_plan_exprs_cached et al. key on the flag
-# signature, so the e6_png_decode warmup does not populate the other
-# rows' entries) and first-build cost is dominated by py4j/JIT state
+# and first-build cost is dominated by py4j/JIT state
 # that varies 3x+ BETWEEN box instances (measured on a fresh VM:
 # e6_png_fixed_decode 57.9 s first build vs 9.3 s rebuild, same
 # session, idle box — while the prior box's first builds sat under
