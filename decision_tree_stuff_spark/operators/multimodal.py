@@ -6,7 +6,9 @@ plumbing are real and tested. PIXEL decode is REAL: the
 uncompressed formats (BMP, PPM, PGM) decode in Spark byte
 expressions, PNG and GIF in one Arrow-batched stage over the stdlib
 decoders ``decode_png`` / ``decode_gif`` (``decode_pixels``); WAV and
-Y4M decode in Spark byte expressions too. ``decode_media`` (the
+Y4M decode in Spark byte expressions too. The synthetic payloads
+those decoders are tested on come from Python byte encoders
+(``encode_*``) run in the same Arrow stage. ``decode_media`` (the
 per-payload codec-library entry point) still raises
 ``NotImplementedError`` for JPEG and the other codec-bound formats,
 with a deterministic fake feature extractor standing in so that
@@ -18,17 +20,19 @@ Scale notes:
   queries (`meta.*` filters, kind counts) prune it via parquet column
   pruning, so keep payload in its own column, never inside a struct
   with hot metadata.
-* Feature extraction (``mapInPandas``) and PNG/GIF decode
-  (``mapInArrow``) cross the Python boundary batch-at-a-time, not
-  row-at-a-time, and output partitioning inherits the scan (no
-  shuffle).
+* Feature extraction (``mapInPandas``) and the one Arrow stage
+  (``mapInArrow``: PNG/GIF decode and the synthetic-payload encoders)
+  cross the Python boundary batch-at-a-time, not row-at-a-time, and
+  output partitioning inherits the scan (no shuffle).
 * Frame sampling is pure Spark (sequence + explode + binary
   substring): no UDF.
 """
 
 from __future__ import annotations
 
-from functools import lru_cache, partial
+import struct
+import zlib
+from functools import partial
 from typing import Iterator
 
 import pandas as pd
@@ -100,8 +104,6 @@ def decode_media(payload: bytes, fmt: str):
     available in this container — swap in the real decoder in
     production. Header-level metadata for those is not stubbed — see
     ``with_image_header_meta``."""
-    import struct
-
     f = (fmt or "").lower()
     if f in ("bmp", "bmp8") or payload[:2] == b"BM":
         if len(payload) < 54:
@@ -428,520 +430,268 @@ def sample_frames(media: DataFrame, every_n: int = 4, frame_bytes: int = 16) -> 
 
 
 # ---------------------------------------------------------------------------
-# REAL pixel decode: uncompressed formats (BMP 24-bit, binary PPM P6).
-# The codec-library stub above (`decode_media` for JPEG/PNG/...) is an
-# environment limitation; these two formats need no codec — the same
-# pure-Spark byte toolkit that parses JPEG SOF headers decodes their
-# pixels exactly, JVM-side, no UDF. Formats per the published specs
-# (Windows BITMAPINFOHEADER; netpbm P6).
+# Synthetic media encoders. Each one returns the bytes of one
+# spec-compliant file whose decoded values are a closed form of
+# (media_id, position) — ``pixel_value`` / ``sample_value`` /
+# ``luma_value`` — so the DuckDB oracles recompute them without touching
+# binary, and a layout mistake on either side of a round trip mismatches.
+# ``synthesize_payloads`` runs them once per row in the module's Arrow
+# stage; an argument outside an encoder's envelope raises ValueError and
+# fails the job (encoder inputs are the caller's own, never untrusted).
 # ---------------------------------------------------------------------------
 
 
-def pixel_value(media_id, k):
+def pixel_value(media_id: int, k: int) -> int:
     """The deterministic synthetic pixel formula shared by the
     encoders, the DuckDB oracle and the tests: byte k (flattened
     TOP-DOWN row-major RGB) of media ``media_id`` is
     ``(media_id·7 + k·13) mod 256``. The oracle recomputes pixels
-    from this closed form, so a Spark encode→binary→decode round trip
+    from this closed form, so an encode→binary→decode round trip
     only matches if BOTH sides honor the real file layout (BMP's
     bottom-up rows, BGR order and 4-byte stride padding undone
     correctly)."""
-    return F.pmod(media_id * 7 + k * 13, F.lit(256)).cast("int")
+    return (media_id * 7 + k * 13) % 256
 
 
-def _byte_hex(v):
-    """Two-hex-char rendering of the low byte of ``v``."""
-    return F.lpad(F.hex(F.pmod(v.cast("bigint"), F.lit(256))), 2, "0")
+def _bmp_file(w: int, h: int, bpp: int, palette: bytes, rows) -> bytes:
+    """BITMAPFILEHEADER + 40-byte BITMAPINFOHEADER (BI_RGB, 72 dpi,
+    biClrUsed = palette entries) + the BGR0 ``palette`` + ``rows``
+    (one bytes object per TOP-DOWN row) stored bottom-up, each
+    zero-padded to a 4-byte stride."""
+    data = b"".join(r.ljust((len(r) + 3) & ~3, b"\0") for r in reversed(rows))
+    off = 54 + len(palette)
+    return struct.pack(
+        "<2sIIIIiiHHIIiiII", b"BM", off + len(data), 0, off, 40, w, h,
+        1, bpp, 0, len(data), 2835, 2835, len(palette) // 4, 0,
+    ) + palette + data
 
 
-def _le_hex(v, nbytes: int):
-    """Hex string of ``v`` as a little-endian ``nbytes`` integer."""
-    if not isinstance(v, Column):
-        v = F.lit(v)
-    v = v.cast("bigint")
-    return F.concat(*[_byte_hex(F.shiftright(v, 8 * i)) for i in range(nbytes)])
-
-
-def _bmp_stride(w):
-    """Bytes per BMP pixel row: 3·w padded up to a 4-byte multiple."""
-    raw = w * 3
-    return raw + F.pmod(F.lit(4) - F.pmod(raw, F.lit(4)), F.lit(4))
-
-
-def encode_bmp(media_id, w, h) -> Column:
-    """A spec-compliant 24-bit uncompressed BMP (54-byte
-    BITMAPFILEHEADER+BITMAPINFOHEADER, bottom-up rows, BGR byte
-    order, 4-byte row stride) whose logical top-down RGB pixels are
-    ``pixel_value(media_id, k)`` — built entirely as one hex-string
-    projection + ``unhex``. Columns ``w``/``h`` must be ≥ 1."""
-    stride = _bmp_stride(w)
-    img_size = stride * h
-    header = F.concat(
-        F.lit("424D"),                    # 'BM'
-        _le_hex(img_size + 54, 4),        # file size
-        F.lit("00000000"),                # reserved
-        _le_hex(54, 4),                   # pixel data offset
-        _le_hex(40, 4),                   # BITMAPINFOHEADER size
-        _le_hex(w, 4),
-        _le_hex(h, 4),                    # positive: bottom-up
-        _le_hex(1, 2),                    # planes
-        _le_hex(24, 2),                   # bits per pixel
-        _le_hex(0, 4),                    # BI_RGB (no compression)
-        _le_hex(img_size, 4),
-        _le_hex(2835, 4),                 # 72 dpi in px/metre
-        _le_hex(2835, 4),
-        _le_hex(0, 4),
-        _le_hex(0, 4),
-    )
-
-    def data_byte(i):
-        # i = 0-based offset in the pixel data: bottom-up source row
-        # r_b, byte j within the padded row; padding bytes are 0,
-        # pixel bytes map back to the top-down RGB index k
-        r_b = F.floor(i / stride).cast("bigint")
-        j = F.pmod(i, stride)
-        px = F.floor(j / F.lit(3)).cast("bigint")
-        c = F.pmod(j, F.lit(3))          # 0=B, 1=G, 2=R on disk
-        k = (h - 1 - r_b) * w * 3 + px * 3 + (F.lit(2) - c)
-        return F.when(j >= w * 3, F.lit("00")).otherwise(
-            _byte_hex(pixel_value(media_id, k))
+def encode_bmp(media_id: int, w: int, h: int) -> bytes:
+    """A spec-compliant 24-bit uncompressed BMP (54-byte headers,
+    bottom-up rows, BGR byte order, 4-byte row stride) whose logical
+    top-down RGB pixels are ``pixel_value(media_id, k)``. ``w``/``h``
+    must be ≥ 1."""
+    return _bmp_file(w, h, 24, b"", [
+        bytes(
+            pixel_value(media_id, (r * w + x) * 3 + 2 - c)  # BGR on disk
+            for x in range(w)
+            for c in range(3)
         )
-
-    data = F.array_join(
-        F.transform(F.sequence(F.lit(0), img_size - 1), data_byte), ""
-    )
-    return F.unhex(F.concat(header, data))
+        for r in range(h)
+    ])
 
 
-def encode_ppm(media_id, w, h) -> Column:
+def encode_ppm(media_id: int, w: int, h: int) -> bytes:
     """A binary netpbm P6 payload (``P6\\n<w> <h>\\n255\\n`` + raw
     top-down RGB bytes) with ``pixel_value`` pixels."""
-    header = F.encode(
-        F.concat(
-            F.lit("P6\n"),
-            w.cast("string"),
-            F.lit(" "),
-            h.cast("string"),
-            F.lit("\n255\n"),
-        ),
-        "UTF-8",
+    return b"P6\n%d %d\n255\n" % (w, h) + bytes(
+        pixel_value(media_id, k) for k in range(w * h * 3)
     )
-    data = F.unhex(
-        F.array_join(
-            F.transform(
-                F.sequence(F.lit(0), w * h * 3 - 1),
-                lambda k: _byte_hex(pixel_value(media_id, k)),
-            ),
-            "",
-        )
-    )
-    return F.concat(header, data)
 
 
-def _palette_channel(idx, c):
-    """RGB channel ``c`` (0=R, 1=G, 2=B) of palette entry ``idx`` —
-    the deterministic synthetic palette shared by ``encode_bmp8``,
-    the decode oracle and the tests: R=(i·5+11)%256, G=(i·3+7)%256,
-    B=(i·9+3)%256."""
-    r = F.pmod(idx * 5 + 11, F.lit(256))
-    g = F.pmod(idx * 3 + 7, F.lit(256))
-    b = F.pmod(idx * 9 + 3, F.lit(256))
-    return F.when(c == 0, r).when(c == 1, g).otherwise(b)
+#: The synthetic 256-entry BGR0 palette of ``encode_bmp8`` (media-
+#: independent): entry i is R=(i·5+11)%256, G=(i·3+7)%256, B=(i·9+3)%256.
+_BMP8_PALETTE = bytes(
+    v
+    for i in range(256)
+    for v in ((i * 9 + 3) % 256, (i * 3 + 7) % 256, (i * 5 + 11) % 256, 0)
+)
 
 
-def _bmp8_stride(w):
-    """Bytes per 8-bit BMP pixel row: w padded up to a 4-byte
-    multiple."""
-    return w + F.pmod(F.lit(4) - F.pmod(w, F.lit(4)), F.lit(4))
-
-
-def encode_bmp8(media_id, w, h) -> Column:
+def encode_bmp8(media_id: int, w: int, h: int) -> bytes:
     """A spec-compliant 8-bit PALETTED uncompressed BMP (r9): 54-byte
-    headers + a full 256-entry BGR0 palette (``_palette_channel``) +
-    bottom-up index rows at 4-byte stride. The index of top-down
-    pixel q is ``pixel_value(media_id, q)``, so the decoded RGB bytes
-    have a closed form the oracle recomputes."""
-    stride = _bmp8_stride(w)
-    img_size = stride * h
-    header = F.concat(
-        F.lit("424D"),
-        _le_hex(img_size + 54 + 1024, 4),  # file size
-        F.lit("00000000"),
-        _le_hex(54 + 1024, 4),            # pixel data offset
-        _le_hex(40, 4),
-        _le_hex(w, 4),
-        _le_hex(h, 4),                    # positive: bottom-up
-        _le_hex(1, 2),
-        _le_hex(8, 2),                    # bits per pixel
-        _le_hex(0, 4),                    # BI_RGB
-        _le_hex(img_size, 4),
-        _le_hex(2835, 4),
-        _le_hex(2835, 4),
-        _le_hex(256, 4),                  # biClrUsed
-        _le_hex(0, 4),
-    )
-    # palette: 256 entries of B, G, R, 0 — a media-independent literal
-    palette = F.lit(
-        "".join(
-            f"{(i * 9 + 3) % 256:02X}{(i * 3 + 7) % 256:02X}"
-            f"{(i * 5 + 11) % 256:02X}00"
-            for i in range(256)
-        )
-    )
-
-    def data_byte(i):
-        r_b = F.floor(i / stride).cast("bigint")
-        px = F.pmod(i, stride)
-        q = (h - 1 - r_b) * w + px       # top-down pixel index
-        return F.when(px >= w, F.lit("00")).otherwise(
-            _byte_hex(pixel_value(media_id, q))
-        )
-
-    data = F.array_join(
-        F.transform(F.sequence(F.lit(0), img_size - 1), data_byte), ""
-    )
-    return F.unhex(F.concat(header, palette, data))
+    headers + the full 256-entry ``_BMP8_PALETTE`` + bottom-up index
+    rows at 4-byte stride. The index of top-down pixel q is
+    ``pixel_value(media_id, q)``, so the decoded RGB bytes have a
+    closed form the oracle recomputes."""
+    return _bmp_file(w, h, 8, _BMP8_PALETTE, [
+        bytes(pixel_value(media_id, r * w + x) for x in range(w))
+        for r in range(h)
+    ])
 
 
-def encode_pgm(media_id, w, h) -> Column:
+def encode_pgm(media_id: int, w: int, h: int) -> bytes:
     """A binary netpbm P5 payload (``P5\\n<w> <h>\\n255\\n`` + raw
     top-down grayscale bytes): gray of pixel q is
     ``pixel_value(media_id, q)``."""
-    header = F.encode(
-        F.concat(
-            F.lit("P5\n"),
-            w.cast("string"),
-            F.lit(" "),
-            h.cast("string"),
-            F.lit("\n255\n"),
-        ),
-        "UTF-8",
+    return b"P5\n%d %d\n255\n" % (w, h) + bytes(
+        pixel_value(media_id, q) for q in range(w * h)
     )
-    data = F.unhex(
-        F.array_join(
-            F.transform(
-                F.sequence(F.lit(0), w * h - 1),
-                lambda q: _byte_hex(pixel_value(media_id, q)),
-            ),
-            "",
+
+
+#: samples per pixel of each PNG color type
+_PNG_CHANNELS = {0: 1, 2: 3, 3: 1, 4: 2, 6: 4}
+
+
+def _png_predict(ft: int, a: int, b: int, c: int) -> int:
+    """RFC 2083 predictor of scanline filter ``ft`` (None / Sub / Up /
+    Average / Paeth) from the left ``a``, up ``b`` and up-left ``c``
+    bytes — shared by the encoders and ``decode_png``."""
+    if ft == 0:
+        return 0
+    if ft == 1:
+        return a
+    if ft == 2:
+        return b
+    if ft == 3:
+        return (a + b) // 2
+    pa, pb, pc = abs(b - c), abs(a - c), abs(a + b - 2 * c)
+    return a if (pa <= pb and pa <= pc) else (b if pb <= pc else c)
+
+
+def _png_scanlines(media_id, w, h, ct, filtered, depth16) -> bytes:
+    """The decompressed scanline stream of a synthetic PNG: ``h`` lines
+    of one filter byte + w·bpp data bytes. Reconstructed byte i is
+    ``pixel_value(media_id, i)``, except:
+
+    * PALETTED (type 3): the index ``i mod 256`` — with the PLTE of
+      ``_png_file`` the decoded RGB byte k is still
+      ``pixel_value(media_id, k)`` (39·(q mod 256) ≡ 39q mod 256), so
+      the paletted rows share the one closed-form oracle;
+    * 16-BIT: even offsets carry the MSB ``pixel_value(media_id, i//2)``
+      (big-endian samples), odd ones the independent LSB
+      ``(media_id·3 + (i//2)·5) mod 256``, which never reaches the
+      flat-RGB output but rides the filters and the Adler-32.
+
+    Lines use filter 0, or with ``filtered`` filter type
+    ``(r + media_id) mod 5`` and data bytes ``(recon - pred) mod 256``:
+    the decoded image is the same closed form while every image of
+    h >= 5 exercises all five RFC 2083 filters."""
+    bpp = _PNG_CHANNELS[ct] * (2 if depth16 else 1)
+    n = w * bpp
+    if ct == 3:
+        recon = [i % 256 for i in range(n * h)]
+    elif depth16:
+        recon = [
+            pixel_value(media_id, i // 2) if i % 2 == 0
+            else (media_id * 3 + i // 2 * 5) % 256
+            for i in range(n * h)
+        ]
+    else:
+        recon = [pixel_value(media_id, i) for i in range(n * h)]
+    out = bytearray()
+    for r in range(h):
+        ft = (r + media_id) % 5 if filtered else 0
+        out.append(ft)
+        for x in range(n):
+            i = r * n + x
+            a = recon[i - bpp] if x >= bpp else 0
+            b = recon[i - n] if r > 0 else 0
+            c = recon[i - n - bpp] if (r > 0 and x >= bpp) else 0
+            out.append((recon[i] - _png_predict(ft, a, b, c)) % 256)
+    return bytes(out)
+
+
+def _png_chunk(tag: bytes, data: bytes) -> bytes:
+    """One PNG chunk: length, type, data and its real CRC-32."""
+    return (
+        struct.pack(">I", len(data)) + tag + data
+        + struct.pack(">I", zlib.crc32(tag + data))
+    )
+
+
+def _png_file(name, media_id, w, h, ct, filtered, depth16, deflate):
+    """Signature, IHDR, (PLTE), one IDAT and IEND around the scanline
+    stream of ``_png_scanlines``. The IDAT's zlib stream is ``78 01``
+    + ``deflate(scanlines)`` + the real Adler-32; a PALETTED file's
+    256-entry PLTE has byte t = ``pixel_value(media_id, t)``.
+
+    Raises ``ValueError`` (prefixed with the encoder's ``name``) for an
+    invalid color type, a 16-bit palette, or a scanline stream beyond
+    ``_PNG_FH_MAX_RAW`` bytes — one guard for all three deflate modes:
+    it is the stored block's 16-bit LEN limit and the raw bound every
+    Huffman decode path enforces, so an oversize fixture fails the job
+    instead of becoming a PNG that every decoder rejects."""
+    if ct not in _PNG_CHANNELS:
+        raise ValueError(f"{name}: unsupported color type {ct}")
+    if depth16 and ct == 3:
+        raise ValueError(f"{name}: 16-bit palette is invalid")
+    raw_n = h * (w * _PNG_CHANNELS[ct] * (2 if depth16 else 1) + 1)
+    if raw_n > _PNG_FH_MAX_RAW:
+        raise ValueError(
+            f"{name}: raw scanline stream h*(w*bpp+1) = {raw_n} bytes "
+            f"exceeds the one-block bound ({_PNG_FH_MAX_RAW})"
         )
-    )
-    return F.concat(header, data)
-
-
-def _png_raw_byte_fn(media_id, wb, bpp, filtered: bool, value_fn=None):
-    """Byte j (1-based) of a synthetic PNG's decompressed scanline
-    stream, shared by the stored / fixed-Huffman / dynamic-Huffman
-    encoders. Unfiltered (default): filter byte 0, data byte =
-    ``pixel_value``. ``filtered`` (r14): scanline r carries filter
-    type ``(r + media_id) mod 5`` and the data bytes are the
-    closed-form FILTERED values ``(recon - pred) mod 256`` — the
-    reconstructed image stays ``pixel_value``, so the decode-side
-    oracle is unchanged while the payload exercises all five RFC
-    2083 filters."""
-    pv = value_fn or pixel_value
-
-    def raw_byte(j):
-        r = F.floor((j - 1) / (wb * bpp + 1)).cast("bigint")
-        pos = F.pmod(j - 1, wb * bpp + 1)
-        if not filtered:
-            return F.when(pos == 0, F.lit(0)).otherwise(
-                pv(media_id, r * wb * bpp + pos - 1)
-            )
-        ft = F.pmod(r + media_id, F.lit(5))
-        x = pos - 1                      # 0-based offset in the line
-        i = r * wb * bpp + x             # 0-based recon index
-        a = F.when(
-            x >= bpp, pv(media_id, i - bpp)
-        ).otherwise(F.lit(0)).cast("bigint")
-        b = F.when(
-            r > 0, pv(media_id, i - wb * bpp)
-        ).otherwise(F.lit(0)).cast("bigint")
-        c = F.when(
-            (r > 0) & (x >= bpp),
-            pv(media_id, i - wb * bpp - bpp),
-        ).otherwise(F.lit(0)).cast("bigint")
-
-        def filt(av):
-            def filt_b(bv):
-                def filt_c(cv):
-                    pa = F.abs(bv - cv)
-                    pb = F.abs(av - cv)
-                    pc = F.abs(av + bv - 2 * cv)
-                    paeth = (
-                        F.when((pa <= pb) & (pa <= pc), av)
-                        .when(pb <= pc, bv)
-                        .otherwise(cv)
-                    )
-                    pred = (
-                        F.when(ft == 0, F.lit(0).cast("bigint"))
-                        .when(ft == 1, av)
-                        .when(ft == 2, bv)
-                        .when(ft == 3, F.floor((av + bv) / 2))
-                        .otherwise(paeth)
-                    )
-                    return F.pmod(
-                        pv(media_id, i) - pred, F.lit(256)
-                    ).cast("int")
-
-                return _let(c, filt_c)
-
-            return _let(b, filt_b)
-
-        return F.when(pos == 0, ft.cast("int")).otherwise(_let(a, filt))
-
-    return raw_byte
-
-
-def _png_index_value(media_id, q):
-    """Index byte of pixel ``q`` in the synthetic PALETTED (color
-    type 3) fixtures: ``q mod 256`` — with the 256-entry palette of
-    ``_png_plte_hex`` this makes the decoded RGB byte k equal
-    ``pixel_value(media_id, k)`` exactly (39*(q mod 256) == 39*q
-    mod 256), so the paletted rows share the one closed-form oracle
-    while the palette indirection must round-trip correctly for the
-    hash to match."""
-    return F.pmod(q, F.lit(256)).cast("int")
-
-
-def _png_value16_fn(media_id):
-    """Byte source for 16-BIT fixture scanlines: recon byte i is the
-    MSB ``pixel_value(media_id, i//2)`` on even offsets (big-endian
-    sample order — what the decoder outputs) and the independent LSB
-    formula ``(media_id*3 + (i//2)*5) mod 256`` on odd ones. The
-    LSBs never reach the flat-RGB output but DO ride the filters and
-    the Adler-32, so the decode still integrity-checks them."""
-
-    def v(mid, i):
-        s = F.floor(i / 2).cast("bigint")
-        return (
-            F.when(F.pmod(i, F.lit(2)) == 0, pixel_value(mid, s))
-            .otherwise(
-                F.pmod(mid * 3 + s * 5, F.lit(256)).cast("int")
-            )
+    raw = _png_scanlines(media_id, w, h, ct, filtered, depth16)
+    ihdr = struct.pack(">IIBBBBB", w, h, 16 if depth16 else 8, ct, 0, 0, 0)
+    plte = b""
+    if ct == 3:
+        plte = _png_chunk(
+            b"PLTE", bytes(pixel_value(media_id, t) for t in range(768))
         )
-
-    return v
-
-
-def _png_plte_hex(media_id):
-    """Hex of the synthetic 256-entry PLTE chunk (r14 paletted
-    fixtures): palette byte t (entry ``t//3`` channel ``t%3``) is
-    ``pixel_value(media_id, t)``; see ``_png_index_value`` for why
-    this choice keeps the decode oracle the shared closed form. 768
-    data bytes + real CRC-32; the chunk data hex is bound once
-    through ``_let`` (it feeds both the payload and the CRC)."""
-    td = F.concat(
-        F.lit("504C5445"),  # 'PLTE'
-        F.array_join(
-            F.transform(
-                F.sequence(F.lit(0), F.lit(767)),
-                lambda t: _byte_hex(pixel_value(media_id, t)),
-            ),
-            "",
-        ),
+    zdata = b"\x78\x01" + deflate(raw) + struct.pack(">I", zlib.adler32(raw))
+    return (
+        _CODEC_SIGS["png"] + _png_chunk(b"IHDR", ihdr) + plte
+        + _png_chunk(b"IDAT", zdata) + _png_chunk(b"IEND", b"")
     )
-    return _let(
-        td,
-        lambda tdv: F.concat(
-            F.lit("00000300"),  # length 768
-            tdv,
-            _be_hex(F.crc32(F.unhex(tdv)), 4),
-        ),
+
+
+def _pack_bits(bits) -> bytes:
+    """Stream-order bits packed LSB-first into zero-padded bytes — the
+    bit order of deflate (RFC 1951 §3.1.1) and of GIF LZW."""
+    return bytes(
+        sum(b << t for t, b in enumerate(bits[i:i + 8]))
+        for i in range(0, len(bits), 8)
     )
+
+
+def _msb_bits(code: int, n: int) -> list:
+    """The ``n`` bits of a Huffman ``code``, MSB first."""
+    return [(code >> s) & 1 for s in range(n - 1, -1, -1)]
+
+
+def _deflate_stored(raw: bytes) -> bytes:
+    """One final STORED deflate block (BTYPE=00): header, LEN, NLEN."""
+    return struct.pack("<BHH", 1, len(raw), 65535 - len(raw)) + raw
 
 
 def encode_png(
-    media_id,
-    w,
-    h,
+    media_id: int,
+    w: int,
+    h: int,
     rgb: bool = False,
     filtered: bool = False,
     color_type: int = None,
     depth16: bool = False,
-) -> Column:
-    """A spec-compliant grayscale 8-bit PNG (r11) whose top-down gray
-    pixel q is ``pixel_value(media_id, q)`` — REAL PNG, not just the
-    IHDR stub: signature, IHDR (bit depth 8, color type 0), one IDAT
-    whose zlib stream uses a STORED (BTYPE=00, uncompressed) deflate
-    block — the one deflate mode that needs no Huffman machinery, so
-    both the encode and the decode stay pure byte expressions — and
-    IEND. Every chunk carries its true CRC-32 (Spark's builtin
-    ``F.crc32`` over the type+data slice) and the zlib stream carries
-    its true Adler-32, computed in closed form from prefix sums
-    (``b = n + (n+1)·S1 − Σ j·d_j  (mod 65521)``), so a real PNG
-    reader accepts the file byte-for-byte. Scanlines use filter 0
-    (None). Raw stream must fit one stored block (≤ 65535 bytes).
+) -> bytes:
+    """A spec-compliant PNG (r11) whose zlib stream is one STORED
+    (BTYPE=00, uncompressed) deflate block, with true CRC-32s and
+    Adler-32, so a real PNG reader accepts the file byte-for-byte.
+    Grayscale 8-bit by default: top-down gray pixel q is
+    ``pixel_value(media_id, q)``.
 
-    ``rgb=True`` (r13): color type 2, stride 3w+1; flat RGB byte k of
-    the image is ``pixel_value(media_id, k)`` — one closed form over
-    3wh bytes, channel-varying by construction.
-
-    ``filtered=True`` (r14): scanline r uses filter type
-    ``(r + media_id) mod 5`` — every image of h >= 5 exercises all
-    five RFC 2083 filters (None / Sub / Up / Average / Paeth) — and
-    the data bytes carry FILTERED values computed in closed form
-    (``filt = recon - pred mod 256`` with the reconstructed
-    neighbors straight from ``pixel_value``), so the decoded pixels
-    are the SAME closed form as the unfiltered file: the oracle is
-    unchanged and a filter-reconstruction mistake on either side
-    mismatches the hash."""
-    wb = w.cast("bigint")
-    hb = h.cast("bigint")
+    ``rgb=True`` (r13): color type 2; flat RGB byte k of the image is
+    ``pixel_value(media_id, k)``. ``color_type`` (r14) picks any of
+    0/2/3/4/6 instead, ``depth16`` 16-bit samples and ``filtered``
+    the per-line filters of ``_png_scanlines``: the decoded pixels
+    stay the one closed form, so a filter-reconstruction mistake on
+    either side mismatches the oracle. Raises ``ValueError`` for
+    dims whose raw stream exceeds one stored block (see
+    ``_png_file``)."""
     ct = color_type if color_type is not None else (2 if rgb else 0)
-    if ct not in (0, 2, 3, 4, 6):
-        raise ValueError(f"encode_png: unsupported color type {ct}")
-    if depth16 and ct == 3:
-        raise ValueError("encode_png: 16-bit palette is invalid")
-    bpp = {0: 1, 2: 3, 3: 1, 4: 2, 6: 4}[ct] * (2 if depth16 else 1)
-    # h scanlines of (filter byte + w*bpp data bytes)
-    raw_n = hb * (wb * bpp + 1)
-    if ct == 3:
-        value_fn = _png_index_value
-    elif depth16:
-        value_fn = _png_value16_fn(media_id)
-    else:
-        value_fn = None
-    raw_byte = _png_raw_byte_fn(
-        media_id, wb, bpp, filtered, value_fn=value_fn
-    )
-    plte = _png_plte_hex(media_id) if ct == 3 else None
-
-    ihdr_td = F.concat(
-        F.lit("49484452"),  # 'IHDR'
-        _be_hex(w, 4),
-        _be_hex(h, 4),
-        F.lit(
-            (("10" if depth16 else "08") + "%02X" % ct)
-            + "00" + "00" + "00"
-        ),
-    )
-    ihdr = F.concat(
-        F.lit("0000000D"),
-        ihdr_td,
-        _be_hex(F.crc32(F.unhex(ihdr_td)), 4),
-    )
-
-    def assemble(rb):
-        # rb: byte j (1-based) of the decompressed scanline stream
-        raw_hex = F.array_join(
-            F.transform(
-                F.sequence(F.lit(1), raw_n), lambda j: _byte_hex(rb(j))
-            ),
-            "",
-        )
-        s1 = F.aggregate(
-            F.sequence(F.lit(1), raw_n),
-            F.lit(0).cast("bigint"),
-            lambda a, j: a + rb(j),
-        )
-        sw = F.aggregate(
-            F.sequence(F.lit(1), raw_n),
-            F.lit(0).cast("bigint"),
-            lambda a, j: a + j.cast("bigint") * rb(j),
-        )
-        adler_a = F.pmod(F.lit(1) + s1, F.lit(65521))
-        adler_b = F.pmod(raw_n + (raw_n + 1) * s1 - sw, F.lit(65521))
-        zstream = F.concat(
-            F.lit("7801"),          # CMF/FLG: deflate, (0x7801 % 31) == 0
-            F.lit("01"),            # BFINAL=1, BTYPE=00 (stored)
-            _le_hex(raw_n, 2),      # LEN
-            _le_hex(F.lit(65535) - raw_n, 2),  # NLEN = ~LEN
-            raw_hex,
-            _be_hex(adler_b * 65536 + adler_a, 4),
-        )
-        idat_td = F.concat(F.lit("49444154"), zstream)  # 'IDAT' + data
-        idat = F.concat(
-            _be_hex(raw_n + 11, 4),  # zlib stream = 2 + 5 + raw + 4
-            idat_td,
-            _be_hex(F.crc32(F.unhex(idat_td)), 4),
-        )
-        iend = F.lit("00000000" + "49454E44" + "AE426082")
-        if ct == 3:
-            return F.concat(
-                F.lit("89504E470D0A1A0A"), ihdr, plte, idat, iend
-            )
-        return F.concat(F.lit("89504E470D0A1A0A"), ihdr, idat, iend)
-
-    if filtered:
-        # the filtered raw-byte tree is an order of magnitude bigger
-        # than the plain one, and assemble() references it three times
-        # (hex render + both Adler prefix sums) — stage the stream as
-        # one array bound through _let so the tree appears ONCE in
-        # the plan (measured: the inlined form took the synthesis
-        # select's ANALYSIS from ~3 s to ~25 s; see SCALING_r14.md §4)
-        arr = F.transform(F.sequence(F.lit(1), raw_n), raw_byte)
-        png_hex = _let(
-            arr,
-            lambda a: assemble(
-                lambda j: F.try_element_at(a, j.cast("int"))
-            ),
-        )
-    else:
-        png_hex = assemble(raw_byte)
-    # enforce the single-stored-block constraint the docstring states:
-    # LEN/NLEN are 16-bit fields, so h·(w+1) > 65535 would silently
-    # wrap into a corrupt file. raise_error fails the WHOLE JOB, not
-    # just the row — intentional (r13): this is a fixture/synthesis
-    # encoder, so oversize dims are a caller programming error, and
-    # one corrupt payload hiding in a synthesis pass is worse than the
-    # pass aborting (the decode side's null-out convention is for
-    # UNTRUSTED inputs; encoder inputs are the caller's own literals).
-    return F.when(
-        raw_n <= F.lit(65535),
-        F.unhex(png_hex),
-    ).otherwise(
-        F.raise_error(
-            F.concat(
-                F.lit("encode_png: raw scanline stream h*(w+1) = "),
-                raw_n.cast("string"),
-                F.lit(" bytes exceeds one stored deflate block (65535)"),
-            )
-        ).cast("binary")
+    return _png_file(
+        "encode_png", media_id, w, h, ct, filtered, depth16, _deflate_stored
     )
 
 
-def sample_value(media_id, i):
+def sample_value(media_id: int, i: int) -> int:
     """The deterministic synthetic 8-bit PCM sample formula shared by
     the WAV encoder, the DuckDB oracle and the tests: sample i of
     media ``media_id`` is ``(media_id·11 + i·17) mod 256``."""
-    return F.pmod(media_id * 11 + i * 17, F.lit(256)).cast("int")
+    return (media_id * 11 + i * 17) % 256
 
 
-def encode_wav(media_id, n_samples, sample_rate) -> Column:
+def encode_wav(media_id: int, n_samples: int, sample_rate: int) -> bytes:
     """A spec-compliant 8-bit mono PCM WAV (canonical 44-byte
     RIFF/WAVE header: 16-byte fmt chunk, audio format 1 = PCM, one
     channel, 8 bits/sample, byte rate = block align · rate) whose
-    samples are ``sample_value(media_id, i)`` — one hex-string
-    projection + ``unhex``, exactly like the image encoders. REAL
-    audio: uncompressed PCM needs no codec library, so the decode
-    round trip runs in pure Spark expressions (r10 — the 'audio' kind
-    had only header metadata and fake features before this)."""
-    n = n_samples if isinstance(n_samples, Column) else F.lit(n_samples)
-    n = n.cast("bigint")
-    header = F.concat(
-        F.lit("52494646"),            # 'RIFF'
-        _le_hex(n + 36, 4),           # riff chunk size
-        F.lit("57415645"),            # 'WAVE'
-        F.lit("666D7420"),            # 'fmt '
-        _le_hex(16, 4),               # fmt chunk size
-        _le_hex(1, 2),                # PCM
-        _le_hex(1, 2),                # mono
-        _le_hex(sample_rate, 4),
-        _le_hex(sample_rate, 4),      # byte rate (8-bit mono)
-        _le_hex(1, 2),                # block align
-        _le_hex(8, 2),                # bits per sample
-        F.lit("64617461"),            # 'data'
-        _le_hex(n, 4),
-    )
-    data = F.array_join(
-        F.transform(
-            F.sequence(F.lit(0), n - 1),
-            lambda i: _byte_hex(sample_value(media_id, i)),
-        ),
-        "",
-    )
-    return F.unhex(F.concat(header, data))
+    samples are ``sample_value(media_id, i)``. Uncompressed PCM needs
+    no codec library, so the decode side (``decode_samples``) is
+    pure Spark expressions."""
+    return struct.pack(
+        "<4sI4s4sIHHIIHH4sI", b"RIFF", n_samples + 36, b"WAVE", b"fmt ",
+        16, 1, 1, sample_rate, sample_rate, 1, 8, b"data", n_samples,
+    ) + bytes(sample_value(media_id, i) for i in range(n_samples))
 
 
 def synthesize_decodable_audio(
@@ -950,14 +700,17 @@ def synthesize_decodable_audio(
     """Tiny REAL WAV files derived from ``documents`` ids — the audio
     twin of ``synthesize_decodable_media``: n_samples ∈ 4..28, sample
     rate ∈ {8000, 12000, 16000, 20000} Hz, both closed forms of the
-    id so the oracle recomputes them without touching binary."""
-    mid = F.col(id_col)
+    id (Spark expressions, so the oracle recomputes them without
+    touching binary); ``encode_wav`` builds each payload in the Arrow
+    stage of ``synthesize_payloads``."""
+    mid = F.col("media_id")
     n = (mid % 25 + 4).cast("int")
     rate = (F.lit(8000) + (mid % 4) * 4000).cast("int")
-    return docs.select(
-        mid.alias("media_id"),
+    ids = docs.select(F.col(id_col).alias("media_id"))
+    return synthesize_payloads(ids.select(mid, n, rate), encode_wav).select(
+        mid,
         F.lit("audio").alias("kind"),
-        encode_wav(mid, n, rate).alias("payload"),
+        "payload",
         F.struct(
             F.lit(None).cast("int").alias("width"),
             F.lit(None).cast("int").alias("height"),
@@ -1012,8 +765,6 @@ def decode_audio(payload: bytes):
     """Python single-payload twin of ``decode_samples`` (driver/UDF
     side): returns ``(sample_rate, samples)`` for a canonical 8-bit
     mono PCM WAV, raises on anything else."""
-    import struct
-
     if len(payload) < 45 or payload[:4] != b"RIFF" or payload[8:16] != b"WAVEfmt ":
         raise ValueError("not a canonical RIFF/WAVE payload")
     fmt_size, = struct.unpack_from("<I", payload, 16)
@@ -1033,11 +784,11 @@ def decode_audio(payload: bytes):
     return rate, list(payload[44:44 + n])
 
 
-def luma_value(media_id, f, q):
+def luma_value(media_id: int, f: int, q: int) -> int:
     """The deterministic synthetic luma formula shared by the Y4M
     encoder, the DuckDB oracle and the tests: luma byte q of frame f
     of media ``media_id`` is ``(media_id·7 + f·31 + q·13) mod 256``."""
-    return F.pmod(media_id * 7 + f * 31 + q * 13, F.lit(256)).cast("int")
+    return (media_id * 7 + f * 31 + q * 13) % 256
 
 
 _Y4M_FRAME_MAGIC = "4652414D450A"  # 'FRAME\n'
@@ -1047,44 +798,18 @@ _Y4M_FRAME_MAGIC = "4652414D450A"  # 'FRAME\n'
 _Y4M_HEADER_CAP = 80
 
 
-def encode_y4m(media_id, w, h, n_frames) -> Column:
+def encode_y4m(media_id: int, w: int, h: int, n_frames: int) -> bytes:
     """A spec-compliant uncompressed YUV4MPEG2 stream (mono chroma —
     ``Cmono``, so each frame is exactly w·h luma bytes after its
     ``FRAME\\n`` marker) whose frame-f luma plane is
-    ``luma_value(media_id, f, ·)``. REAL video: Y4M is the standard
-    uncompressed interchange format (what ffmpeg pipes), and like
-    BMP/PPM/WAV it needs no codec library, so the decode round trip
-    runs in pure Spark expressions (r10 — the 'video' kind had only
-    opaque-byte frame slicing before this)."""
-    header = F.encode(
-        F.concat(
-            F.lit("YUV4MPEG2 W"),
-            w.cast("string"),
-            F.lit(" H"),
-            h.cast("string"),
-            F.lit(" F25:1 Ip A1:1 Cmono\n"),
-        ),
-        "UTF-8",
+    ``luma_value(media_id, f, ·)``. Y4M is the standard uncompressed
+    interchange format (what ffmpeg pipes), and like BMP/PPM/WAV it
+    needs no codec library, so the decode side
+    (``decode_y4m_frames``) is pure Spark expressions."""
+    return b"YUV4MPEG2 W%d H%d F25:1 Ip A1:1 Cmono\n" % (w, h) + b"".join(
+        b"FRAME\n" + bytes(luma_value(media_id, f, q) for q in range(w * h))
+        for f in range(n_frames)
     )
-
-    def frame_hex(f):
-        return F.concat(
-            F.lit(_Y4M_FRAME_MAGIC),
-            F.array_join(
-                F.transform(
-                    F.sequence(F.lit(0), w * h - 1),
-                    lambda q: _byte_hex(luma_value(media_id, f, q)),
-                ),
-                "",
-            ),
-        )
-
-    data = F.unhex(
-        F.array_join(
-            F.transform(F.sequence(F.lit(0), n_frames - 1), frame_hex), ""
-        )
-    )
-    return F.concat(header, data)
 
 
 def synthesize_decodable_video(
@@ -1092,15 +817,18 @@ def synthesize_decodable_video(
 ) -> DataFrame:
     """Tiny REAL Y4M streams derived from ``documents`` ids — the
     video twin of ``synthesize_decodable_media``: w ∈ 2..5, h ∈ 2..4,
-    n_frames ∈ 1..5, all closed forms of the id."""
-    mid = F.col(id_col)
+    n_frames ∈ 1..5, all closed forms of the id; ``encode_y4m``
+    builds each payload in the Arrow stage of
+    ``synthesize_payloads``."""
+    mid = F.col("media_id")
     w = (mid % 4 + 2).cast("int")
     h = (mid % 3 + 2).cast("int")
     n = (mid % 5 + 1).cast("int")
-    return docs.select(
-        mid.alias("media_id"),
+    ids = docs.select(F.col(id_col).alias("media_id"))
+    return synthesize_payloads(ids.select(mid, w, h, n), encode_y4m).select(
+        mid,
         F.lit("video").alias("kind"),
-        encode_y4m(mid, w, h, n).alias("payload"),
+        "payload",
         F.struct(
             w.alias("width"),
             h.alias("height"),
@@ -1506,16 +1234,13 @@ def decode_png(
     ``depth16`` (r14): 16-bit samples of color types 0/2/4/6 decode
     to their MSB (the standard 8-bit downsample); the LSBs still
     pass through the filters and the Adler-32."""
-    import struct as _struct
-    import zlib as _zlib
-
     if payload[:8] != b"\x89PNG\r\n\x1a\n":
         raise ValueError("not a PNG signature")
-    if _struct.unpack(">I", payload[8:12])[0] != 13 or payload[12:16] != b"IHDR":
+    if struct.unpack(">I", payload[8:12])[0] != 13 or payload[12:16] != b"IHDR":
         raise ValueError("first chunk is not a 13-byte IHDR")
-    if _zlib.crc32(payload[12:29]) != _struct.unpack(">I", payload[29:33])[0]:
+    if zlib.crc32(payload[12:29]) != struct.unpack(">I", payload[29:33])[0]:
         raise ValueError("IHDR CRC mismatch")
-    w, h = _struct.unpack(">II", payload[16:24])
+    w, h = struct.unpack(">II", payload[16:24])
     depth, ctype, comp, filt, interlace = payload[24:29]
     ctypes_ok = (0, 2, 3, 4, 6) if palette else (0, 2, 4, 6)
     depths_ok = (8, 16) if depth16 else (8,)
@@ -1533,20 +1258,18 @@ def decode_png(
             + (" or 16-bit non-palette" if depth16 else "")
             + ", no interlace)"
         )
-    bpp = {0: 1, 2: 3, 3: 1, 4: 2, 6: 4}[ctype] * (
-        2 if depth == 16 else 1
-    )
+    bpp = _PNG_CHANNELS[ctype] * (2 if depth == 16 else 1)
 
     pos, idat, n_idat, done = 33, b"", 0, False
     plte_data, n_plte = None, 0
     for _ in range(_PNG_MAX_CHUNKS):
         if pos + 12 > len(payload):
             raise ValueError("truncated chunk header")
-        clen = _struct.unpack(">I", payload[pos:pos + 4])[0]
+        clen = struct.unpack(">I", payload[pos:pos + 4])[0]
         if pos + 12 + clen > len(payload):
             raise ValueError("truncated chunk body")
         ctag = payload[pos + 4:pos + 8]
-        if _zlib.crc32(payload[pos + 4:pos + 8 + clen]) != _struct.unpack(
+        if zlib.crc32(payload[pos + 4:pos + 8 + clen]) != struct.unpack(
             ">I", payload[pos + 8 + clen:pos + 12 + clen]
         )[0]:
             raise ValueError(f"chunk {ctag!r} CRC mismatch")
@@ -1590,7 +1313,7 @@ def decode_png(
             hb = idat[bpos]
             if (hb >> 1) & 3 != 0:
                 raise ValueError("non-stored deflate block (codec-bound)")
-            blen, nlen = _struct.unpack("<HH", idat[bpos + 1:bpos + 5])
+            blen, nlen = struct.unpack("<HH", idat[bpos + 1:bpos + 5])
             if nlen != 65535 - blen or bpos + 5 + blen > len(idat) - 4:
                 raise ValueError("stored block length mismatch")
             raw += idat[bpos + 5:bpos + 5 + blen]
@@ -1604,7 +1327,7 @@ def decode_png(
             )
         if bpos != len(idat) - 4:
             raise ValueError("trailing bytes between blocks and Adler-32")
-    if _zlib.adler32(raw) != _struct.unpack(">I", idat[-4:])[0]:
+    if zlib.adler32(raw) != struct.unpack(">I", idat[-4:])[0]:
         raise ValueError("Adler-32 mismatch")
     stride = w * bpp + 1
     if len(raw) != h * stride:
@@ -1633,20 +1356,7 @@ def decode_png(
                 if (r > 0 and x >= bpp)
                 else 0
             )
-            if ft == 0:
-                pred = 0
-            elif ft == 1:
-                pred = a
-            elif ft == 2:
-                pred = b
-            elif ft == 3:
-                pred = (a + b) // 2
-            else:  # Paeth
-                pa, pb, pc = abs(b - c), abs(a - c), abs(a + b - 2 * c)
-                pred = a if (pa <= pb and pa <= pc) else (
-                    b if pb <= pc else c
-                )
-            recon.append((fx + pred) % 256)
+            recon.append((fx + _png_predict(ft, a, b, c)) % 256)
     if depth == 16:
         # big-endian samples: the MSB (even offsets) is the standard
         # 8-bit downsample; LSBs were integrity-checked by Adler-32
@@ -1687,22 +1397,32 @@ def synthesize_decodable_media(
     first format in ``formats`` for even ids, the second for odd — so
     the pixel-decode path runs against actual encoded binaries on
     real testdata. Dimensions are small (w ∈ 2..6, h ∈ 2..5) to keep
-    the decoded pixel arrays oracle-comparable. Formats: 'bmp'
-    (24-bit), 'ppm' (P6), 'bmp8' (8-bit paletted, r9), 'pgm' (P5,
-    r9), 'png' (grayscale-8 stored-deflate, r11), 'pngf'
-    (fixed-Huffman, r12), 'pngd' (dynamic-Huffman, r13), 'pngc' /
-    'pngdc' (RGB color-type-2, stored / dynamic, r13), 'pngflt' /
-    'pngfltc' / 'pngdflt' / 'pngdfltc' (scanline-FILTERED gray/RGB ×
-    stored/dynamic, filters (r+id) mod 5, r14)."""
+    the decoded pixel arrays oracle-comparable; they and the ``meta``
+    struct are Spark expressions of the id, while the payload is
+    built by the format's Python encoder (``_media_encoders``) in the
+    Arrow stage of ``synthesize_payloads``. Formats: 'bmp' (24-bit),
+    'ppm' (P6), 'bmp8' (8-bit paletted, r9), 'pgm' (P5, r9), 'png'
+    (grayscale-8 stored-deflate, r11), 'pngf' (fixed-Huffman, r12),
+    'pngd' (dynamic-Huffman, r13), 'pngc' / 'pngdc' (RGB
+    color-type-2, stored / dynamic, r13), 'pngflt' / 'pngfltc' /
+    'pngdflt' / 'pngdfltc' (scanline-FILTERED gray/RGB ×
+    stored/dynamic, filters (r+id) mod 5, r14), and the alpha,
+    paletted, 16-bit and GIF formats listed in ``_media_encoders``."""
     even_fmt, odd_fmt = formats
-    mid = F.col(id_col)
+    encoders = _media_encoders()
+    even, odd = encoders[even_fmt], encoders[odd_fmt]
+
+    def encode(media_id, w, h):
+        return (odd if media_id % 2 else even)(media_id, w, h)
+
+    mid = F.col("media_id")
     w = (mid % 5 + 2).cast("int")
     h = (mid % 4 + 2).cast("int")
-    payload = _decodable_payload_expr(id_col, (even_fmt, odd_fmt))
-    return docs.select(
-        mid.alias("media_id"),
+    ids = docs.select(F.col(id_col).alias("media_id"))
+    return synthesize_payloads(ids.select(mid, w, h), encode).select(
+        mid,
         F.lit("image").alias("kind"),
-        payload.alias("payload"),
+        "payload",
         F.struct(
             w.alias("width"),
             h.alias("height"),
@@ -1716,9 +1436,8 @@ def synthesize_decodable_media(
 
 
 def _media_encoders():
-    """Format-name → encoder-expression map for
-    ``synthesize_decodable_media`` (hoisted out of the function body
-    so the memoized payload builder below can reach it)."""
+    """Format name → Python encoder ``(media_id, w, h) -> bytes`` for
+    ``synthesize_decodable_media``."""
     return {
         "bmp": encode_bmp,
         "ppm": encode_ppm,
@@ -1728,47 +1447,35 @@ def _media_encoders():
         "pngf": encode_png_fixed,  # r12: fixed-Huffman zlib stream
         "pngd": encode_png_dyn,    # r13: dynamic-Huffman zlib stream
         # r13: RGB (color type 2) variants — stored and dynamic
-        "pngc": lambda m, w, h: encode_png(m, w, h, rgb=True),
-        "pngdc": lambda m, w, h: encode_png_dyn(m, w, h, rgb=True),
+        "pngc": partial(encode_png, rgb=True),
+        "pngdc": partial(encode_png_dyn, rgb=True),
         # r14: scanline-FILTERED variants (filters (r+id) mod 5 —
         # Sub/Up/Average/Paeth exercised) — stored gray / stored RGB /
         # dynamic gray / dynamic RGB
-        "pngflt": lambda m, w, h: encode_png(m, w, h, filtered=True),
-        "pngfltc": lambda m, w, h: encode_png(
-            m, w, h, rgb=True, filtered=True
-        ),
-        "pngdflt": lambda m, w, h: encode_png_dyn(
-            m, w, h, filtered=True
-        ),
-        "pngdfltc": lambda m, w, h: encode_png_dyn(
-            m, w, h, rgb=True, filtered=True
-        ),
+        "pngflt": partial(encode_png, filtered=True),
+        "pngfltc": partial(encode_png, rgb=True, filtered=True),
+        "pngdflt": partial(encode_png_dyn, filtered=True),
+        "pngdfltc": partial(encode_png_dyn, rgb=True, filtered=True),
         # r14: alpha-carrying color types — gray+alpha (4) stored,
         # RGBA (6) stored, and RGBA dynamic+filtered (the full
         # real-world libpng shape)
-        "pngga": lambda m, w, h: encode_png(m, w, h, color_type=4),
-        "pnga": lambda m, w, h: encode_png(m, w, h, color_type=6),
-        "pngdflta": lambda m, w, h: encode_png_dyn(
-            m, w, h, filtered=True, color_type=6
-        ),
+        "pngga": partial(encode_png, color_type=4),
+        "pnga": partial(encode_png, color_type=6),
+        "pngdflta": partial(encode_png_dyn, filtered=True, color_type=6),
         # r14: PALETTED (color type 3) — stored, stored+filtered,
         # dynamic, and dynamic+filtered (indexed icons as libpng
         # emits them); indices filter through the 1-byte stride and
         # map through the real PLTE chunk on decode
-        "pngp": lambda m, w, h: encode_png(m, w, h, color_type=3),
-        "pngpflt": lambda m, w, h: encode_png(
-            m, w, h, color_type=3, filtered=True
-        ),
-        "pngdp": lambda m, w, h: encode_png_dyn(m, w, h, color_type=3),
-        "pngdfltp": lambda m, w, h: encode_png_dyn(
-            m, w, h, color_type=3, filtered=True
-        ),
+        "pngp": partial(encode_png, color_type=3),
+        "pngpflt": partial(encode_png, color_type=3, filtered=True),
+        "pngdp": partial(encode_png_dyn, color_type=3),
+        "pngdfltp": partial(encode_png_dyn, color_type=3, filtered=True),
         # r14: 16-BIT variants — stored gray16 and the fullest
         # composition (DH + filters + RGBA + 16-bit); MSBs carry the
         # closed form, LSBs ride the filters and the Adler-32
-        "png16": lambda m, w, h: encode_png(m, w, h, depth16=True),
-        "pngdflta16": lambda m, w, h: encode_png_dyn(
-            m, w, h, color_type=6, filtered=True, depth16=True
+        "png16": partial(encode_png, depth16=True),
+        "pngdflta16": partial(
+            encode_png_dyn, color_type=6, filtered=True, depth16=True
         ),
         # r14: REAL GIFs — 'gif' the uncompressed-shape root-code
         # stream under a 256-entry table, 'gifz' a genuinely
@@ -1778,37 +1485,11 @@ def _media_encoders():
         # r14: 4-pass INTERLACED variants — pass-permuted streams the
         # decoder must re-order (both the root-code and the real-LZW
         # shapes)
-        "gifi": lambda m, w, h: encode_gif(m, w, h, interlaced=True),
+        "gifi": partial(encode_gif, interlaced=True),
         # r14: LOCAL-color-table-only GIF (no global table)
-        "gifl": lambda m, w, h: encode_gif(m, w, h, lct=True),
-        "gifzi": lambda m, w, h: encode_gif_lzw(
-            m, w, h, interlaced=True
-        ),
+        "gifl": partial(encode_gif, lct=True),
+        "gifzi": partial(encode_gif_lzw, interlaced=True),
     }
-
-
-@lru_cache(maxsize=64)
-def _decodable_payload_expr(id_col: str, formats: tuple) -> Column:
-    """Memoized payload-expression program for
-    ``synthesize_decodable_media`` (r14 optimization round, guide
-    §1.2 step 2 — per-task/driver work after the plan shape is
-    right): the encoder tree is a pure function of ``(id_col,
-    formats)`` — no data, schema or session state enters
-    construction — and the PNG/GIF encoder programs cost seconds of
-    py4j round trips per build (SCALING_r14.md §4: ~4-11 s per
-    decode row, roughly half of it on this encode side). Columns are
-    immutable, unresolved expression handles, so the cached tree is
-    reusable across any number of plans; analysis, codegen and
-    execution are untouched and every invocation still computes from
-    the parquet inputs."""
-    encoders = _media_encoders()
-    even_fmt, odd_fmt = formats
-    mid = F.col(id_col)
-    w = (mid % 5 + 2).cast("int")
-    h = (mid % 4 + 2).cast("int")
-    return F.when(mid % 2 == 0, encoders[even_fmt](mid, w, h)).otherwise(
-        encoders[odd_fmt](mid, w, h)
-    )
 
 
 #: Bounded-walk limits of ``decode_png`` (pinned by tests). Real
@@ -1923,7 +1604,7 @@ def decode_pixels(
     if not decoders:
         return _decode_pixels_uncompressed(media, payload_col, rest)
 
-    def image_rows(payload):
+    def image_rows(_media_id, payload):
         for fmt, decode in decoders.items():
             if payload is not None and payload.startswith(_CODEC_SIGS[fmt]):
                 try:
@@ -1933,7 +1614,9 @@ def decode_pixels(
         return [(None, None, None, None)]
 
     if not rest:
-        return _decode_stage(media, payload_col, _IMAGE_FIELDS, image_rows)
+        return _arrow_stage(
+            media.select("media_id", payload_col), _IMAGE_FIELDS, image_rows
+        )
     p = F.col(payload_col)
     is_codec = F.lit(False)
     for fmt in decoders:
@@ -1947,29 +1630,47 @@ def decode_pixels(
     plain = _decode_pixels_uncompressed(
         media.where(~is_codec), payload_col, rest
     )
-    coded = _decode_stage(
-        media.where(is_codec), payload_col, _IMAGE_FIELDS, image_rows
+    coded = _arrow_stage(
+        media.where(is_codec).select("media_id", payload_col),
+        _IMAGE_FIELDS,
+        image_rows,
     )
     return plain.unionByName(coded)
 
 
-def _decode_stage(media: DataFrame, payload_col: str, fields, decode_rows):
-    """One Arrow-batched Python stage over ``(media_id, payload)``:
-    ``decode_rows(payload)`` returns the output tuples (aligned with
-    ``fields``) of one payload, each emitted after that row's
-    ``media_id``. Narrow, no shuffle: output partitioning inherits
-    the input's."""
+def synthesize_payloads(frame: DataFrame, encode) -> DataFrame:
+    """(media_id, payload) with ``payload = encode(*row)`` for each row
+    of ``frame`` (``media_id`` first, then the encoder's other
+    arguments) — a Python byte encoder run once per row in the
+    module's Arrow stage. An encoder exception fails the job: bad
+    encoder arguments are the caller's own error, unlike the
+    untrusted payloads that decode turns into null rows."""
+    return _arrow_stage(
+        frame,
+        [StructField("payload", BinaryType())],
+        lambda *row: [(encode(*row),)],
+    )
+
+
+def _arrow_stage(frame: DataFrame, fields, rows_of) -> DataFrame:
+    """The module's one Arrow-batched Python stage (``mapInArrow``),
+    used by synthesis and decode alike: ``rows_of(*row)`` gets each
+    input row's values (``media_id`` first) and returns output tuples
+    aligned with ``fields``, each emitted after that row's
+    ``media_id``. Exceptions propagate and fail the job; the decoders,
+    whose payloads are untrusted, catch inside ``rows_of`` instead.
+    Narrow, no shuffle: output partitioning inherits the input's."""
     import sys
 
     from pyspark import cloudpickle
     from pyspark.sql.pandas.types import to_arrow_schema
 
     # Python workers need not have this package on their path: ship
-    # the decoders by value, not as references to this module
+    # the encoders and decoders by value, not as references to this
+    # module
     cloudpickle.register_pickle_by_value(sys.modules[__name__])
     schema = StructType(
-        [StructField("media_id", media.schema["media_id"].dataType)]
-        + list(fields)
+        [StructField("media_id", frame.schema[0].dataType)] + list(fields)
     )
     arrow_schema = to_arrow_schema(schema)
 
@@ -1978,11 +1679,9 @@ def _decode_stage(media: DataFrame, payload_col: str, fields, decode_rows):
 
         for batch in batches:
             rows = [
-                (mid, *row)
-                for mid, payload in zip(
-                    batch.column(0).to_pylist(), batch.column(1).to_pylist()
-                )
-                for row in decode_rows(payload)
+                (row[0], *out)
+                for row in zip(*(c.to_pylist() for c in batch.columns))
+                for out in rows_of(*row)
             ]
             cols = list(zip(*rows)) or [()] * len(arrow_schema)
             yield pa.RecordBatch.from_arrays(
@@ -1990,7 +1689,7 @@ def _decode_stage(media: DataFrame, payload_col: str, fields, decode_rows):
                 schema=arrow_schema,
             )
 
-    return media.select("media_id", payload_col).mapInArrow(run, schema)
+    return frame.mapInArrow(run, schema)
 
 
 def _decode_pixels_uncompressed(
@@ -2018,7 +1717,8 @@ def _decode_pixels_uncompressed(
         & (b_w > 0)
     )
     b_ok = b_hdr_ok & (_le16(p, 29) == 24)
-    b_stride = _bmp_stride(b_w)
+    # rows padded to a 4-byte stride: 3w bytes (24-bit), w (8-bit)
+    b_stride = b_w * 3 + F.pmod(-b_w * 3, F.lit(4))
 
     def bmp_row(r):
         # output row r (top-down) reads source row h-1-r; byte j of
@@ -2042,7 +1742,7 @@ def _decode_pixels_uncompressed(
     # --- BMP 8-bit paletted (r9) ---
     nclr = _le32(p, 47)
     pal_n = F.when(nclr == 0, F.lit(256)).otherwise(nclr)
-    b8_stride = _bmp8_stride(b_w)
+    b8_stride = b_w + F.pmod(-b_w, F.lit(4))
 
     def _b8_idx(q):
         # palette index of pixel q (top-down order) from the
@@ -2144,17 +1844,30 @@ def _decode_pixels_uncompressed(
         pixels.alias("pixels"),
     )
 
-def _be_hex(v, nbytes: int):
-    """Hex string of ``v`` as a big-endian ``nbytes`` integer."""
-    if not isinstance(v, Column):
-        v = F.lit(v)
-    v = v.cast("bigint")
-    return F.concat(
-        *[
-            _byte_hex(F.shiftright(v, 8 * i))
-            for i in range(nbytes - 1, -1, -1)
-        ]
-    )
+
+def _header_payload(media_id: int, w: int, h: int) -> bytes:
+    """The header stream of ``synthesize_header_media`` for one id:
+    JPEG for ``id % 3 == 0`` (SOI, a JFIF APP0, one DQT segment with
+    id-keyed table bytes, SOF0 carrying the dims, EOI), PNG for 1
+    (signature + IHDR; the CRC is a fixed unchecked filler), GIF for
+    2 (GIF87a at even ids, GIF89a at odd, + LE16 screen dims)."""
+    if media_id % 3 == 0:
+        dqt = bytes((media_id * 7 + q) % 256 for q in range(3))
+        return (
+            b"\xff\xd8"
+            + bytes.fromhex("FFE000104A46494600010100000100010000")
+            + b"\xff\xdb\x00\x05" + dqt
+            + b"\xff\xc0\x00\x11\x08" + struct.pack(">HH", h, w)
+            + bytes.fromhex("03011100021101031101")
+            + b"\xff\xd9"
+        )
+    if media_id % 3 == 1:
+        return (
+            _CODEC_SIGS["png"] + bytes.fromhex("0000000D49484452")
+            + struct.pack(">II", w, h) + bytes.fromhex("0802000000DEADBEEF")
+        )
+    sig = b"GIF87a" if media_id % 2 == 0 else b"GIF89a"
+    return sig + struct.pack("<HH", w, h) + b"\0\0\0"
 
 
 def synthesize_header_media(
@@ -2169,71 +1882,19 @@ def synthesize_header_media(
     pattern; the hand-built struct.pack golden tests cover the parser
     against an independent encoder).
 
-    The JPEG stream exercises the VARIABLE-offset SOF walk for real:
-    a JFIF APP0, then ``id % 3`` filler DQT segments of varying
-    length, then SOF0 — so the fold must skip 1-3 segments before the
-    dims, at different offsets per row. PNG is signature+IHDR at the
-    fixed offset; GIF87a/89a alternate by ``id % 2``. All built as
-    one hex projection + ``unhex``, no UDF.
+    The JPEG stream puts the SOF0 behind two variable segments (the
+    JFIF APP0 and a DQT), so the parser must walk segment lengths to
+    reach the dims. PNG is signature+IHDR at the fixed offset;
+    GIF87a/89a alternate by ``id % 2``. The dims are Spark
+    expressions; ``_header_payload`` builds each stream in the Arrow
+    stage of ``synthesize_payloads``.
     """
-    mid = F.col(id_col)
+    mid = F.col("media_id")
     w = (mid % 500 + 16).cast("int")
     h = (mid % 300 + 16).cast("int")
-
-    # --- JPEG: SOI + APP0(JFIF) + (id%3) DQT fillers + SOF0 + EOI ---
-    app0 = F.lit(
-        "FFE0" + "0010" + "4A46494600" + "0101" + "00" + "0001" + "0001"
-        + "00" + "00"
-    )
-    def dqt(i):
-        # segment body: 3 + i bytes keyed on (id, i); len = body + 2
-        body_len = 3 + i
-        body = F.concat(
-            *[_byte_hex(mid * 7 + F.lit(i * 31 + q)) for q in range(body_len)]
-        )
-        return F.concat(F.lit("FFDB"), _be_hex(body_len + 2, 2), body)
-
-    # 1 + (id % 3) DQT segments in total: dqt(0) always, then up to
-    # two more — the SOF lands 1-3 variable-length segments deep
-    fillers = F.concat(
-        *[
-            F.when(mid % 3 > F.lit(i - 1), dqt(i)).otherwise(F.lit(""))
-            for i in (1, 2)
-        ]
-    )
-    sof0 = F.concat(
-        F.lit("FFC0" + "0011" + "08"),
-        _be_hex(h, 2),
-        _be_hex(w, 2),
-        F.lit("03" + "011100" + "021101" + "031101"),
-    )
-    jpeg = F.concat(F.lit("FFD8"), app0, dqt(0), fillers, sof0, F.lit("FFD9"))
-
-    # --- PNG: signature + IHDR (fixed offsets; CRC unchecked) -------
-    png = F.concat(
-        F.lit("89504E470D0A1A0A" + "0000000D" + "49484452"),
-        _be_hex(w, 4),
-        _be_hex(h, 4),
-        F.lit("08" + "02" + "00" + "00" + "00" + "DEADBEEF"),
-    )
-
-    # --- GIF: 87a/89a signature + LE16 logical screen dims ----------
-    gif = F.concat(
-        F.when(mid % 2 == 0, F.lit("474946383761")).otherwise(
-            F.lit("474946383961")
-        ),
-        _le_hex(w, 2),
-        _le_hex(h, 2),
-        F.lit("00" + "00" + "00"),
-    )
-
-    payload = F.unhex(
-        F.when(mid % 3 == 0, jpeg).when(mid % 3 == 1, png).otherwise(gif)
-    )
-    return docs.select(
-        mid.alias("media_id"),
-        F.lit("image").alias("kind"),
-        payload.alias("payload"),
+    ids = docs.select(F.col(id_col).alias("media_id"))
+    return synthesize_payloads(ids.select(mid, w, h), _header_payload).select(
+        mid, F.lit("image").alias("kind"), "payload"
     )
 
 
@@ -2268,147 +1929,28 @@ _FH_DIST_EXTRA = [0, 0, 0, 0, 1, 1, 2, 2, 3, 3, 4, 4, 5, 5, 6, 6, 7,
 _PNG_FH_MAX_RAW = 65535
 
 
-def _pow2(k):
-    """2^k for a dynamic small k (Spark's shiftleft/right need literal
-    shift amounts) — element_at over a 14-entry literal table (max
-    distance extra bits = 13)."""
-    return F.element_at(
-        F.array(*[F.lit(1 << i) for i in range(14)]), k.cast("int") + 1
-    )
-
-
-def _let(value, body):
-    """Bind ``value`` as a LAMBDA VARIABLE for ``body`` — the
-    one-element ``transform`` trick. Beyond the usual evaluate-once
-    property, this keeps the expression TREE small: every plain
-    Column reference copies its whole subtree, so an encoder that
-    references an intermediate many times would otherwise blow up
-    the ANALYZER's heap (tree-size explosion, not a runtime cost).
-    A lambda-var reference is one node."""
-    return F.element_at(F.transform(F.array(value), body), 1)
-
-
-def encode_png_fixed(media_id, w, h) -> Column:
+def encode_png_fixed(media_id: int, w: int, h: int) -> bytes:
     """A spec-compliant grayscale-8 PNG whose zlib stream is ONE
     final FIXED-HUFFMAN deflate block (RFC 1951 §3.2.6) carrying the
     scanline bytes as literals + EOB — the encode twin of the r12
-    fixed-Huffman decode path, sharing ``encode_png``'s pixel formula
-    and real CRC-32/Adler-32. Literal codes: byte b ≤ 143 → 8 bits of
-    ``b + 0x30``; b ≥ 144 → 9 bits of ``b + 0x100`` (both MSB-first);
-    EOB = seven 0-bits; bits packed LSB-first into bytes (RFC 1951
-    §3.1.1). The bit array is handed through a one-element
-    ``transform`` so the byte packer sees it as a LAMBDA VARIABLE —
-    inlining it would rebuild the whole array once per output byte
-    (the expression-staging lesson). stdlib ``zlib.decompress``
-    accepts the stream byte-for-byte (pinned in tests — external
-    validation, not just our own round trip)."""
-    wb = w.cast("bigint")
-    hb = h.cast("bigint")
-    raw_n = hb * (wb + 1)
-
-    def raw_byte(j):
-        r = F.floor((j - 1) / (wb + 1)).cast("bigint")
-        pos = F.pmod(j - 1, wb + 1)
-        return F.when(pos == 0, F.lit(0)).otherwise(
-            pixel_value(media_id, r * wb + pos - 1)
-        )
-
-    def lit_bits(b):
-        # MSB-first code bits: 8 bits of b+48, or 9 bits of b+256
-        return F.when(
-            b <= 143,
-            F.transform(
-                F.sequence(F.lit(7), F.lit(0), F.lit(-1)),
-                lambda s: F.pmod(
-                    F.floor((b + 48) / _pow2(s)).cast("int"), F.lit(2)
-                ),
-            ),
-        ).otherwise(
-            F.transform(
-                F.sequence(F.lit(8), F.lit(0), F.lit(-1)),
-                lambda s: F.pmod(
-                    F.floor((b + 256) / _pow2(s)).cast("int"), F.lit(2)
-                ),
-            )
-        )
-
-    bits = F.concat(
-        F.array(F.lit(1), F.lit(1), F.lit(0)),  # BFINAL=1, BTYPE=01
-        F.flatten(
-            F.transform(
-                F.sequence(F.lit(1), raw_n), lambda j: lit_bits(raw_byte(j))
-            )
-        ),
-        F.array(*[F.lit(0)] * 7),  # EOB (fixed code 0000000)
+    fixed-Huffman decode path, sharing ``encode_png``'s pixel formula,
+    checksums and raw-size guard. Literal codes: byte b ≤ 143 → 8
+    bits of ``b + 0x30``; b ≥ 144 → 9 bits of ``b + 0x100`` (both
+    MSB-first); EOB = seven 0-bits; bits packed LSB-first into bytes.
+    stdlib ``zlib.decompress`` accepts the stream byte-for-byte
+    (pinned in tests — external validation, not just our own round
+    trip)."""
+    return _png_file(
+        "encode_png_fixed", media_id, w, h, 0, False, False, _deflate_fixed
     )
 
-    def pack(bs):
-        nbytes = F.floor((F.size(bs) + 7) / 8).cast("bigint")
-        return F.array_join(
-            F.transform(
-                F.sequence(F.lit(0), nbytes - 1),
-                lambda k: _byte_hex(
-                    F.aggregate(
-                        F.sequence(F.lit(0), F.lit(7)),
-                        F.lit(0),
-                        lambda a, i: a
-                        + F.coalesce(
-                            F.try_element_at(
-                                bs, (k * 8 + i + 1).cast("int")
-                            ),
-                            F.lit(0),
-                        )
-                        * _pow2(i),
-                    )
-                ),
-            ),
-            "",
-        )
 
-    zdata_hex = F.element_at(
-        F.transform(F.array(bits), lambda bs: pack(bs)), 1
-    )
-
-    s1 = F.aggregate(
-        F.sequence(F.lit(1), raw_n),
-        F.lit(0).cast("bigint"),
-        lambda a, j: a + raw_byte(j),
-    )
-    sw = F.aggregate(
-        F.sequence(F.lit(1), raw_n),
-        F.lit(0).cast("bigint"),
-        lambda a, j: a + j.cast("bigint") * raw_byte(j),
-    )
-    adler_a = F.pmod(F.lit(1) + s1, F.lit(65521))
-    adler_b = F.pmod(raw_n + (raw_n + 1) * s1 - sw, F.lit(65521))
-
-    ihdr_td = F.concat(
-        F.lit("49484452"),
-        _be_hex(w, 4),
-        _be_hex(h, 4),
-        F.lit("08" + "00" + "00" + "00" + "00"),
-    )
-    ihdr = F.concat(
-        F.lit("0000000D"),
-        ihdr_td,
-        _be_hex(F.crc32(F.unhex(ihdr_td)), 4),
-    )
-    zstream = F.concat(
-        F.lit("7801"),
-        zdata_hex,
-        _be_hex(adler_b * 65536 + adler_a, 4),
-    )
-    idat_td = F.concat(F.lit("49444154"), zstream)
-    idat = F.concat(
-        # chunk length = zlib bytes: hex length / 2
-        _be_hex((F.length(zstream) / 2).cast("bigint"), 4),
-        idat_td,
-        _be_hex(F.crc32(F.unhex(idat_td)), 4),
-    )
-    iend = F.lit("00000000" + "49454E44" + "AE426082")
-    return F.unhex(
-        F.concat(F.lit("89504E470D0A1A0A"), ihdr, idat, iend)
-    )
+def _deflate_fixed(raw: bytes) -> bytes:
+    """One final fixed-Huffman block of literals (``encode_png_fixed``)."""
+    bits = [1, 1, 0]  # BFINAL=1, BTYPE=01 LSB-first
+    for b in raw:
+        bits += _msb_bits(b + 0x30, 8) if b <= 143 else _msb_bits(b + 0x100, 9)
+    return _pack_bits(bits + [0] * 7)  # EOB: fixed code 0000000
 
 
 def _inflate_fixed_py(data: bytes):
@@ -2528,180 +2070,39 @@ def _dh_header_bits() -> list:
 
 
 def encode_png_dyn(
-    media_id,
-    w,
-    h,
+    media_id: int,
+    w: int,
+    h: int,
     rgb: bool = False,
     filtered: bool = False,
     color_type: int = None,
     depth16: bool = False,
-) -> Column:
-    """A spec-compliant grayscale-8 PNG whose zlib stream is ONE
-    final DYNAMIC-HUFFMAN deflate block (RFC 1951 §3.2.7) — the
-    encode twin of the r13 BTYPE=10 decode path, sharing
-    ``encode_png``'s pixel formula and real CRC-32/Adler-32. The
-    transmitted tables are the fixed flat assignment of
-    ``_dh_header_bits`` (a legal, complete dynamic code — the
-    simplest one that still exercises the full header → CL-code →
-    table-build → count-walk pipeline on the decode side); literal
-    byte b = 9 bits of ``b + 0x100`` MSB-first, EOB = one 0-bit, bits
-    packed LSB-first into bytes. stdlib ``zlib.decompress`` accepts
-    the stream byte-for-byte (pinned in tests).
-
-    ``rgb=True`` (r13): color type 2, stride 3w+1, flat RGB byte k =
-    ``pixel_value(media_id, k)`` — DH + RGB is the real-world PNG
-    shape (what zlib-backed encoders emit for truecolor images).
-
-    ``filtered=True`` (r14): scanlines carry filters
-    ``(r + media_id) mod 5`` with closed-form filtered data bytes
-    (``_png_raw_byte_fn``) — DH + adaptive filters is exactly what
-    libpng emits; the decoded pixels stay the one closed form."""
-    wb = w.cast("bigint")
-    hb = h.cast("bigint")
+) -> bytes:
+    """A spec-compliant PNG whose zlib stream is ONE final
+    DYNAMIC-HUFFMAN deflate block (RFC 1951 §3.2.7) — the encode twin
+    of the r13 BTYPE=10 decode path, sharing ``encode_png``'s pixel
+    formula, options, checksums and raw-size guard. The transmitted
+    tables are the fixed flat assignment of ``_dh_header_bits`` (a
+    legal, complete dynamic code — the simplest one that still
+    exercises the full header → CL-code → table-build → count-walk
+    pipeline on the decode side); literal byte b = 9 bits of
+    ``b + 0x100`` MSB-first, EOB = one 0-bit, bits packed LSB-first
+    into bytes. stdlib ``zlib.decompress`` accepts the stream
+    byte-for-byte (pinned in tests). DH + RGB (``rgb=True``, r13) and
+    DH + adaptive filters (``filtered=True``, r14) are the real-world
+    shapes libpng emits."""
     ct = color_type if color_type is not None else (2 if rgb else 0)
-    if ct not in (0, 2, 3, 4, 6):
-        raise ValueError(f"encode_png_dyn: unsupported color type {ct}")
-    if depth16 and ct == 3:
-        raise ValueError("encode_png_dyn: 16-bit palette is invalid")
-    bpp = {0: 1, 2: 3, 3: 1, 4: 2, 6: 4}[ct] * (2 if depth16 else 1)
-    raw_n = hb * (wb * bpp + 1)
-    if ct == 3:
-        value_fn = _png_index_value
-    elif depth16:
-        value_fn = _png_value16_fn(media_id)
-    else:
-        value_fn = None
-    raw_byte = _png_raw_byte_fn(
-        media_id, wb, bpp, filtered, value_fn=value_fn
-    )
-    plte = _png_plte_hex(media_id) if ct == 3 else None
-
-    def lit_bits(b):
-        # 9 bits of b+256, MSB-first
-        return F.transform(
-            F.sequence(F.lit(8), F.lit(0), F.lit(-1)),
-            lambda s: F.pmod(
-                F.floor((b + 256) / _pow2(s)).cast("int"), F.lit(2)
-            ),
-        )
-
-    def make_bits(rb):
-        return F.concat(
-            F.array(*[F.lit(b) for b in _dh_header_bits()]),
-            F.flatten(
-                F.transform(
-                    F.sequence(F.lit(1), raw_n),
-                    lambda j: lit_bits(rb(j)),
-                )
-            ),
-            F.array(F.lit(0)),  # EOB (1-bit code 0)
-        )
-
-    def pack(bs):
-        nbytes = F.floor((F.size(bs) + 7) / 8).cast("bigint")
-        return F.array_join(
-            F.transform(
-                F.sequence(F.lit(0), nbytes - 1),
-                lambda k: _byte_hex(
-                    F.aggregate(
-                        F.sequence(F.lit(0), F.lit(7)),
-                        F.lit(0),
-                        lambda a, i: a
-                        + F.coalesce(
-                            F.try_element_at(
-                                bs, (k * 8 + i + 1).cast("int")
-                            ),
-                            F.lit(0),
-                        )
-                        * _pow2(i),
-                    )
-                ),
-            ),
-            "",
-        )
-
-    ihdr_td = F.concat(
-        F.lit("49484452"),
-        _be_hex(w, 4),
-        _be_hex(h, 4),
-        F.lit(
-            (("10" if depth16 else "08") + "%02X" % ct)
-            + "00" + "00" + "00"
-        ),
-    )
-    ihdr = F.concat(
-        F.lit("0000000D"),
-        ihdr_td,
-        _be_hex(F.crc32(F.unhex(ihdr_td)), 4),
+    return _png_file(
+        "encode_png_dyn", media_id, w, h, ct, filtered, depth16, _deflate_dyn
     )
 
-    def assemble(rb):
-        zdata_hex = F.element_at(
-            F.transform(F.array(make_bits(rb)), lambda bs: pack(bs)), 1
-        )
-        s1 = F.aggregate(
-            F.sequence(F.lit(1), raw_n),
-            F.lit(0).cast("bigint"),
-            lambda a, j: a + rb(j),
-        )
-        sw = F.aggregate(
-            F.sequence(F.lit(1), raw_n),
-            F.lit(0).cast("bigint"),
-            lambda a, j: a + j.cast("bigint") * rb(j),
-        )
-        adler_a = F.pmod(F.lit(1) + s1, F.lit(65521))
-        adler_b = F.pmod(raw_n + (raw_n + 1) * s1 - sw, F.lit(65521))
-        zstream = F.concat(
-            F.lit("7801"),
-            zdata_hex,
-            _be_hex(adler_b * 65536 + adler_a, 4),
-        )
-        idat_td = F.concat(F.lit("49444154"), zstream)
-        idat = F.concat(
-            # chunk length = zlib bytes: hex length / 2
-            _be_hex((F.length(zstream) / 2).cast("bigint"), 4),
-            idat_td,
-            _be_hex(F.crc32(F.unhex(idat_td)), 4),
-        )
-        iend = F.lit("00000000" + "49454E44" + "AE426082")
-        if ct == 3:
-            return F.concat(
-                F.lit("89504E470D0A1A0A"), ihdr, plte, idat, iend
-            )
-        return F.concat(F.lit("89504E470D0A1A0A"), ihdr, idat, iend)
 
-    if filtered:
-        # same staging as encode_png: the filtered raw-byte tree is
-        # referenced three times (bit emission + both Adler sums) —
-        # bind the stream array once through _let (SCALING_r14.md §4)
-        arr = F.transform(F.sequence(F.lit(1), raw_n), raw_byte)
-        png_hex = _let(
-            arr,
-            lambda a: assemble(
-                lambda j: F.try_element_at(a, j.cast("int"))
-            ),
-        )
-    else:
-        png_hex = assemble(raw_byte)
-    # r14 advice: the decode paths cap raw at _PNG_FH_MAX_RAW, so an
-    # oversize fixture would silently emit a PNG every decoder nulls
-    # out — fail the job loudly instead, matching encode_png's
-    # caller-error convention (fixture encoders take caller literals).
-    return F.when(
-        raw_n <= F.lit(_PNG_FH_MAX_RAW),
-        F.unhex(png_hex),
-    ).otherwise(
-        F.raise_error(
-            F.concat(
-                F.lit("encode_png_dyn: raw scanline stream h*(w*bpp+1) = "),
-                raw_n.cast("string"),
-                F.lit(
-                    " bytes exceeds the decode-side bound "
-                    f"({_PNG_FH_MAX_RAW})"
-                ),
-            )
-        ).cast("binary")
-    )
+def _deflate_dyn(raw: bytes) -> bytes:
+    """One final dynamic-Huffman block of literals (``encode_png_dyn``)."""
+    bits = _dh_header_bits()
+    for b in raw:
+        bits += _msb_bits(b + 0x100, 9)
+    return _pack_bits(bits + [0])  # EOB: 1-bit code 0
 
 
 def _inflate_dyn_py(data: bytes):
@@ -2900,9 +2301,8 @@ def _lzw_decode_py(data: bytes, mcs: int, npix: int):
 
 
 def _lzw_compress_py(indices, mcs: int):
-    """Real GIF LZW compressor (driver-side: precomputes the
-    ``encode_gif_lzw`` code streams per (w, h); also the tests'
-    reference). Emits CLEAR first and EOI last. The emission WIDTH
+    """Real GIF LZW compressor (``encode_gif_lzw``'s; also the
+    tests' reference). Emits CLEAR first and EOI last. The emission WIDTH
     mirrors the DECODER's table state, not the encoder's: the decoder
     adds an entry after EVERY data code except the first after a
     CLEAR (including the encoder's final flush, which adds nothing
@@ -2948,10 +2348,7 @@ def _lzw_compress_py(indices, mcs: int):
     if seq:
         emit_data(seq[0] if len(seq) == 1 else tab[seq])
     emit(eoi, width)
-    return bytes(
-        sum(b << t for t, b in enumerate(out_bits[i:i + 8]))
-        for i in range(0, len(out_bits), 8)
-    )
+    return _pack_bits(out_bits)
 
 
 def _gif_interlace_pos(r: int, h: int) -> int:
@@ -3083,196 +2480,100 @@ def decode_gif(payload: bytes):
     return w, h, pixels
 
 
-def _gif_root_block_hex(npix, root_fn):
-    """Hex of one mcs-8 ROOT-CODE LZW image data block (one 255-byte
-    sub-block + terminator): CLEAR, then ``root_fn(qi)`` for every
-    stream position qi, then EOI — all 9-bit codes LSB-first (the
-    uncompressed-GIF shape; next_free stays under the 9-bit boundary
-    for npix <= 220, enforced by the callers). Shared by the single-
-    image and the animated encoders."""
-    nbits = (npix + 2) * 9              # CLEAR + npix roots + EOI
-    nbytes = F.floor((nbits + 7) / 8).cast("bigint")
+def _gif_screen(w: int, h: int, flags: int) -> bytes:
+    """GIF89a signature + logical screen descriptor (bg index and
+    aspect 0); ``flags`` 0xF7 announces a 256-entry global table."""
+    return b"GIF89a" + struct.pack("<HHBBB", w, h, flags, 0, 0)
 
-    def code_at(ci):
-        return (
-            F.when(ci == 0, F.lit(256))
-            .when(ci == npix + 1, F.lit(257))
-            .otherwise(root_fn(ci - 1))
-            .cast("bigint")
-        )
 
-    def bit_at(j):
-        return F.pmod(
-            F.floor(
-                code_at(F.floor(j / 9).cast("bigint"))
-                / _pow2(F.pmod(j, F.lit(9)))
-            ).cast("bigint"),
-            F.lit(2),
-        )
+def _gif_image(w: int, h: int, flags: int) -> bytes:
+    """A full-screen image descriptor at (0, 0); ``flags`` bit 7 = a
+    local table (0x87: 256 entries), bit 6 = 4-pass interlace."""
+    return b"\x2c" + struct.pack("<HHHHB", 0, 0, w, h, flags)
 
-    def byte_at(k):
-        e = F.lit(0).cast("bigint")
-        for i in range(8):
-            j = k * 8 + i
-            e = e + F.when(j < nbits, bit_at(j)).otherwise(
-                F.lit(0).cast("bigint")
-            ) * (1 << i)
-        return _byte_hex(e.cast("int"))
 
-    data = F.array_join(
-        F.transform(F.sequence(F.lit(0), nbytes - 1), byte_at), ""
-    )
-    return F.concat(_byte_hex(nbytes.cast("int")), data, F.lit("00"))
+def _gif_root_block(npix: int, root) -> bytes:
+    """One mcs-8 ROOT-CODE LZW data sub-block + terminator: CLEAR,
+    ``root(q)`` for every stream position q, then EOI — all 9-bit
+    codes LSB-first (the uncompressed-GIF shape; next_free stays
+    under the 9-bit boundary and the stream inside one 255-byte
+    sub-block for npix <= 220, enforced by the callers). Shared by
+    the single-image and the animated encoders."""
+    codes = [256, *map(root, range(npix)), 257]
+    data = _pack_bits([(c >> t) & 1 for c in codes for t in range(9)])
+    return bytes([len(data)]) + data + b"\0"
 
 
 def encode_gif(
-    media_id, w, h, interlaced: bool = False, lct: bool = False
-) -> Column:
+    media_id: int, w: int, h: int, interlaced: bool = False, lct: bool = False
+) -> bytes:
     """A spec-compliant GIF89a whose decoded RGB byte k is
-    ``pixel_value(media_id, k)`` — REAL GIF: 256-entry global color
-    table (byte t = ``pixel_value(media_id, t)``, the PLTE trick:
-    with index(q) = q mod 256 the palette indirection is invisible
-    to the closed-form oracle), full-screen image descriptor, and an
-    LZW stream in the UNCOMPRESSED-GIF shape real tools emit for
-    incompressible data: one CLEAR then every pixel as a 9-bit ROOT
-    code then EOI — a legal stream any GIF reader inflates (the
-    decoder still builds its dictionary while reading it). One hex
-    projection + ``unhex``, like the other media encoders. Envelope:
-    npix <= 220 keeps next_free under the 9-bit boundary AND the
-    packed stream inside one 255-byte sub-block — oversize dims
-    raise (caller-error convention, fixture encoders take caller
-    literals)."""
-    wb = w.cast("bigint")
-    hb = h.cast("bigint")
-    npix = wb * hb
-    header = F.concat(
-        F.lit("474946383961"),          # 'GIF89a'
-        _le_hex(w, 2),
-        _le_hex(h, 2),
-        # r14 lct mode: NO global table (the frame carries its own)
-        F.lit("00" if lct else "F7"),
-        F.lit("0000"),                  # bg index, aspect
-    )
-    table_hex = F.array_join(
-        F.transform(
-            F.sequence(F.lit(0), F.lit(767)),
-            lambda t: _byte_hex(pixel_value(media_id, t)),
-        ),
-        "",
-    )
-    gct = F.lit("") if lct else table_hex
-    # descriptor flags: bit 7 local table (size 7 -> 256 entries),
-    # bit 6 = 4-pass interlace (r14)
-    dflags = (0x80 | 0x07 if lct else 0) | (0x40 if interlaced else 0)
-    desc = F.concat(
-        F.lit("2C00000000"),            # descriptor, left=top=0
-        _le_hex(w, 2),
-        _le_hex(h, 2),
-        F.lit("%02X" % dflags),
-        table_hex if lct else F.lit(""),  # the LOCAL table
-        F.lit("08"),                    # LZW minimum code size
-    )
-    def disp_q(sq):
-        # display pixel carried at STREAM position sq (interlaced):
-        # the expression twin of _gif_interlace_disp_row
-        i = F.floor(sq / wb).cast("bigint")
-        x = F.pmod(sq, wb)
-        c1 = F.floor((hb + 7) / 8).cast("bigint")
-        c2 = F.floor((hb + 3) / 8).cast("bigint")
-        c3 = F.floor((hb + 1) / 4).cast("bigint")
-        drow = (
-            F.when(i < c1, 8 * i)
-            .when(i < c1 + c2, 8 * (i - c1) + 4)
-            .when(i < c1 + c2 + c3, 4 * (i - c1 - c2) + 2)
-            .otherwise(2 * (i - c1 - c2 - c3) + 1)
-            .cast("bigint")
+    ``pixel_value(media_id, k)`` — REAL GIF: 256-entry color table
+    (byte t = ``pixel_value(media_id, t)``, the PLTE trick: with
+    index(q) = q mod 256 the palette indirection is invisible to the
+    closed-form oracle), full-screen image descriptor, and an LZW
+    stream in the UNCOMPRESSED-GIF shape real tools emit for
+    incompressible data (``_gif_root_block``) — a legal stream any
+    GIF reader inflates. ``interlaced`` (r14) stores the rows in
+    4-pass order; ``lct`` (r14) drops the global table and gives the
+    image the same table as a LOCAL one. Envelope: npix <= 220, else
+    ``ValueError``."""
+    if w * h > 220:
+        raise ValueError(
+            f"encode_gif: w*h = {w * h} exceeds the one-sub-block "
+            "root-code bound (220)"
         )
-        return drow * wb + x
+    table = bytes(pixel_value(media_id, t) for t in range(768))
 
-    root_fn = (
-        (lambda qi: F.pmod(disp_q(qi), F.lit(256)))
-        if interlaced
-        else (lambda qi: F.pmod(qi, F.lit(256)))
-    )
-    body = F.concat(
-        header, gct, desc,
-        _gif_root_block_hex(npix, root_fn),
-        F.lit("3B"),                    # trailer
-    )
-    return F.when(npix <= F.lit(220), F.unhex(body)).otherwise(
-        F.raise_error(
-            F.concat(
-                F.lit("encode_gif: w*h = "),
-                npix.cast("string"),
-                F.lit(" exceeds the one-sub-block root-code bound (220)"),
-            )
-        ).cast("binary")
+    def root(q):
+        if interlaced:  # stream position q carries a pass-permuted row
+            q = _gif_interlace_disp_row(q // w, h) * w + q % w
+        return q % 256
+
+    return (
+        _gif_screen(w, h, 0x00 if lct else 0xF7)
+        + (b"" if lct else table)
+        + _gif_image(w, h, (0x87 if lct else 0) | (0x40 if interlaced else 0))
+        + (table if lct else b"")
+        + b"\x08"  # LZW minimum code size
+        + _gif_root_block(w * h, root)
+        + b"\x3b"  # trailer
     )
 
 
-def encode_gif_lzw(media_id, w, h, interlaced: bool = False) -> Column:
+def encode_gif_lzw(
+    media_id: int, w: int, h: int, interlaced: bool = False
+) -> bytes:
     """A GIF89a with a REAL dictionary-using LZW stream: 4-entry
     global color table (byte t = ``pixel_value(media_id, t)``),
     index(q) = q mod 4 — a periodic stream LZW genuinely compresses,
     so the decoder must exercise table codes (and the width growth
-    the stream's length dictates). The code stream depends only on
-    (w, h), so it is PRECOMPUTED driver-side by the real compressor
-    ``_lzw_compress_py`` and emitted as a literal per supported dim
-    pair (w in 2..6, h in 2..5 — the synthesis envelope; anything
-    else raises). Decoded RGB byte k = ``pixel_value(media_id,
-    3*((k//3) mod 4) + k%3)`` — closed form, palette math included."""
-    header = F.concat(
-        F.lit("474946383961"),
-        _le_hex(w, 2),
-        _le_hex(h, 2),
-        F.lit("F1"),                    # GCT present, 2^(1+1) entries
-        F.lit("0000"),
+    the stream's length dictates). ``_lzw_compress_py`` compresses it
+    per payload; a stream that does not fit one 255-byte sub-block
+    raises ``ValueError``. Decoded RGB byte k =
+    ``pixel_value(media_id, 3*((k//3) mod 4) + k%3)`` — closed form,
+    palette math included."""
+    rows = (
+        [_gif_interlace_disp_row(i, h) for i in range(h)]
+        if interlaced
+        else range(h)
     )
-    gct = F.array_join(
-        F.transform(
-            F.sequence(F.lit(0), F.lit(11)),
-            lambda t: _byte_hex(pixel_value(media_id, t)),
-        ),
-        "",
+    blob = _lzw_compress_py(
+        [(r * w + x) % 4 for r in rows for x in range(w)], 2
     )
-    desc = F.concat(
-        F.lit("2C00000000"),
-        _le_hex(w, 2),
-        _le_hex(h, 2),
-        F.lit("40" if interlaced else "00"),
-        F.lit("02"),                    # LZW minimum code size 2
+    if len(blob) > 255:
+        raise ValueError(
+            f"encode_gif_lzw: dims {w}x{h} need {len(blob)} LZW bytes, "
+            "beyond one 255-byte sub-block"
+        )
+    return (
+        _gif_screen(w, h, 0xF1)  # global table, 2^(1+1) entries
+        + bytes(pixel_value(media_id, t) for t in range(12))
+        + _gif_image(w, h, 0x40 if interlaced else 0)
+        + b"\x02"  # LZW minimum code size
+        + bytes([len(blob)]) + blob + b"\0"
+        + b"\x3b"
     )
-    blocks = None
-    for wi in range(2, 7):
-        for hi in range(2, 6):
-            if interlaced:
-                # stream order carries pass-permuted display pixels
-                stream_idx = [
-                    (_gif_interlace_disp_row(i, hi) * wi + x) % 4
-                    for i in range(hi)
-                    for x in range(wi)
-                ]
-            else:
-                stream_idx = [q % 4 for q in range(wi * hi)]
-            blob = _lzw_compress_py(stream_idx, 2)
-            assert len(blob) <= 255
-            sub = "%02X" % len(blob) + blob.hex().upper() + "00"
-            cond = (w.cast("int") == wi) & (h.cast("int") == hi)
-            blocks = (
-                F.when(cond, F.lit(sub))
-                if blocks is None
-                else blocks.when(cond, F.lit(sub))
-            )
-    data_block = blocks.otherwise(
-        F.raise_error(
-            F.concat(
-                F.lit("encode_gif_lzw: dims "),
-                w.cast("string"), F.lit("x"), h.cast("string"),
-                F.lit(" outside the precomputed 2..6 x 2..5 envelope"),
-            )
-        ).cast("string")
-    )
-    return F.unhex(F.concat(header, gct, desc, data_block, F.lit("3B")))
 
 
 _GIF_ANIM_MAX_BLOCKS = 12  #: block-walk bound (ext + image per frame)
@@ -3396,8 +2697,8 @@ def decode_gif_anim(payload: bytes):
 
 
 def encode_gif_anim(
-    media_id, w, h, n_frames, lct: bool = False
-) -> Column:
+    media_id: int, w: int, h: int, n_frames: int, lct: bool = False
+) -> bytes:
     """An ANIMATED GIF89a: NETSCAPE2.0 looping application extension
     (skipped by the decoder, exercising extension handling in the
     anim block stream), then ``n_frames`` full-screen frames under
@@ -3405,87 +2706,25 @@ def encode_gif_anim(
     root-code stream with index(f, q) = (q + 9f) mod 256 — so the
     decoded RGB byte k of frame f is the closed form
     ``(media_id·7 + k·13 + 95·f) mod 256`` (351 ≡ 95 mod 256).
-    Envelope: npix <= 220, 1 <= n_frames <= _GIF_MAX_FRAMES; outside
-    raises (fixture-encoder convention)."""
-    wb = w.cast("bigint")
-    hb = h.cast("bigint")
-    nf = n_frames.cast("bigint")
-    npix = wb * hb
-    header = F.concat(
-        F.lit("474946383961"),
-        _le_hex(w, 2),
-        _le_hex(h, 2),
-        F.lit("00" if lct else "F7"),
-        F.lit("0000"),
-    )
-    gct = (
-        F.lit("")
-        if lct
-        else F.array_join(
-            F.transform(
-                F.sequence(F.lit(0), F.lit(767)),
-                lambda t: _byte_hex(pixel_value(media_id, t)),
-            ),
-            "",
+    ``lct`` (r14): no global table; every frame carries its OWN
+    256-entry table, shifted 17 per frame, so decoded byte k of frame
+    f is ``(media_id·7 + k·13 + 112·f) mod 256`` (351+17 ≡ 112).
+    Envelope: npix <= 220, 1 <= n_frames <= _GIF_MAX_FRAMES, else
+    ``ValueError``."""
+    if w * h > 220 or not 1 <= n_frames <= _GIF_MAX_FRAMES:
+        raise ValueError(
+            f"encode_gif_anim: w*h = {w * h} / n_frames = {n_frames} "
+            "outside the (220, 1..5) envelope"
         )
-    )
-    netscape = F.lit("21FF0B4E45545343415045322E300301000000")
-
-    def desc_hex(f):
-        # r14 lct mode: every frame carries its OWN 256-entry table,
-        # shifted 17 per frame — decoded RGB byte k of frame f is
-        # (media_id*7 + k*13 + 112*f) mod 256 (351+17 = 112 mod 256)
-        parts = [
-            F.lit("2C00000000"),
-            _le_hex(w, 2),
-            _le_hex(h, 2),
-            F.lit("87" if lct else "00"),
-        ]
+    table = bytes(pixel_value(media_id, t) for t in range(768))
+    out = _gif_screen(w, h, 0x00 if lct else 0xF7) + (b"" if lct else table)
+    out += bytes.fromhex("21FF0B4E45545343415045322E300301000000")
+    for f in range(n_frames):
+        out += _gif_image(w, h, 0x87 if lct else 0x00)
         if lct:
-            parts.append(
-                F.array_join(
-                    F.transform(
-                        F.sequence(F.lit(0), F.lit(767)),
-                        lambda t: _byte_hex(
-                            F.pmod(
-                                pixel_value(media_id, t) + 17 * f,
-                                F.lit(256),
-                            )
-                        ),
-                    ),
-                    "",
-                )
-            )
-        parts.append(F.lit("08"))
-        return F.concat(*parts)
-
-    def frame_hex(f):
-        return F.concat(
-            desc_hex(f),
-            _gif_root_block_hex(
-                npix, lambda qi: F.pmod(qi + 9 * f, F.lit(256))
-            ),
-        )
-
-    frames = F.array_join(
-        F.transform(F.sequence(F.lit(0), nf - 1), frame_hex), ""
-    )
-    body = F.concat(header, gct, netscape, frames, F.lit("3B"))
-    return F.when(
-        (npix <= F.lit(220))
-        & nf.between(1, F.lit(_GIF_MAX_FRAMES)),
-        F.unhex(body),
-    ).otherwise(
-        F.raise_error(
-            F.concat(
-                F.lit("encode_gif_anim: w*h = "),
-                npix.cast("string"),
-                F.lit(" / n_frames = "),
-                nf.cast("string"),
-                F.lit(" outside the (220, 1..5) envelope"),
-            )
-        ).cast("binary")
-    )
+            out += bytes((v + 17 * f) % 256 for v in table)
+        out += b"\x08" + _gif_root_block(w * h, lambda q: (q + 9 * f) % 256)
+    return out + b"\x3b"
 
 
 _FRAME_FIELDS = [
@@ -3514,7 +2753,7 @@ def decode_gif_frames(
     table, interlace included; caps ``_GIF_MAX_FRAMES`` /
     ``_GIF_ANIM_MAX_BLOCKS``."""
 
-    def frame_rows(payload):
+    def frame_rows(_media_id, payload):
         try:
             w, h, n, frames = decode_gif_anim(payload)
         except Exception:
@@ -3524,4 +2763,6 @@ def decode_gif_frames(
             for i, px in enumerate(frames)
         ]
 
-    return _decode_stage(media, payload_col, _FRAME_FIELDS, frame_rows)
+    return _arrow_stage(
+        media.select("media_id", payload_col), _FRAME_FIELDS, frame_rows
+    )

@@ -17,13 +17,14 @@ from decision_tree_stuff_spark.queries._shared import (  # noqa: F401
 
 def q_e6_header_meta(spark, sf_dir):
     """Compressed-format header metadata roundtrip (r11): real JPEG /
-    PNG / GIF header streams synthesized from doc ids (the JPEG SOF
-    sits 1-3 variable-length segments deep, exercising the bounded
-    aggregate-fold walk), parsed back by ``with_image_header_meta``
-    — pure byte expressions, no codec, no UDF. The oracle states the
-    closed-form dims, so any encode/parse disagreement mismatches;
-    the struct.pack golden tests cover the parser against an
-    independent encoder."""
+    PNG / GIF header streams synthesized from doc ids by a Python
+    encoder in ``synthesize_header_media``'s Arrow stage (the JPEG
+    SOF sits behind two variable-length segments, exercising the
+    bounded aggregate-fold walk), parsed back by
+    ``with_image_header_meta`` in pure byte expressions, no codec.
+    The oracle states the closed-form dims, so any encode/parse
+    disagreement mismatches; the struct.pack golden tests cover the
+    parser against an independent encoder."""
     from decision_tree_stuff_spark.operators.multimodal import (
         synthesize_header_media,
         with_image_header_meta,
@@ -118,8 +119,9 @@ def _hex_packed_pixels(decoded):
 def q_e6_pixel_decode(spark, sf_dir):
     """REAL pixel decode (E-6, r8 — retires the last stub): tiny
     spec-compliant BMP (even ids) / PPM (odd ids) binaries are
-    encoded from the closed-form pixel formula, then decoded back by
-    the pure-Spark byte-expression decoder (``decode_pixels`` —
+    encoded from the closed-form pixel formula (Python encoders in
+    ``synthesize_decodable_media``'s Arrow stage), then decoded back
+    by the pure-Spark byte-expression decoder (``decode_pixels`` —
     undoes BMP's bottom-up rows, BGR order, 4-byte stride; parses the
     PPM ASCII header). The oracle recomputes the pixels directly from
     the formula, so any layout mistake on EITHER side of the round
@@ -342,7 +344,7 @@ def q_e6_png_palette_decode(spark, sf_dir):
     index against the entry count (an out-of-range index nulls the
     row, never reads past the palette). The synthetic 256-entry
     palette is arranged so the decoded RGB byte k equals the one
-    closed-form ``pixel_value`` (see ``_png_index_value``): the
+    closed-form ``pixel_value`` (see ``_png_scanlines``): the
     oracle needs no palette math, while a mistake in the PLTE
     offset, the idx->entry*3+channel mapping or the index filter
     reconstruction mismatches the hash. Density %31. Hex-packed
@@ -421,24 +423,27 @@ def q_e6_gif_frames(spark, sf_dir):
     NETSCAPE looping extension (skipped) and doc_id%3+1 full-screen
     root-code frames whose index stream shifts by 9 per frame, so
     frame f's RGB byte k is the closed form
-    (doc_id*7 + k*13 + 95*f) mod 256. ``decode_gif_frames`` runs
-    ``decode_gif_anim`` per payload in an Arrow-batched stage and
-    emits one row per frame. Density %31. Hex-packed scalar
+    (doc_id*7 + k*13 + 95*f) mod 256. ``encode_gif_anim`` builds
+    each payload and ``decode_gif_frames`` runs ``decode_gif_anim``
+    on it, both per row in the module's Arrow-batched stage; the
+    decode emits one row per frame. Density %31. Hex-packed scalar
     output."""
     from decision_tree_stuff_spark.operators.multimodal import (
         decode_gif_frames,
         encode_gif_anim,
+        synthesize_payloads,
     )
 
     docs = _docs(spark, sf_dir).where(F.col("doc_id") % 31 == 0)
-    media = docs.select(
-        F.col("doc_id").alias("media_id"),
-        encode_gif_anim(
-            F.col("doc_id"),
-            (F.col("doc_id") % 5 + 2).cast("int"),
-            (F.col("doc_id") % 4 + 2).cast("int"),
-            (F.col("doc_id") % 3 + 1).cast("int"),
-        ).alias("payload"),
+    mid = F.col("doc_id")
+    media = synthesize_payloads(
+        docs.select(
+            mid.alias("media_id"),
+            (mid % 5 + 2).cast("int"),
+            (mid % 4 + 2).cast("int"),
+            (mid % 3 + 1).cast("int"),
+        ),
+        encode_gif_anim,
     )
     return decode_gif_frames(media).select(
         "media_id",
@@ -599,7 +604,8 @@ def q_e6_audio_frames(spark, sf_dir):
 def q_e6_wav_decode(spark, sf_dir):
     """REAL audio decode (r10 — extends the real-codec treatment from
     images to the 'audio' kind): tiny spec-compliant 8-bit mono PCM
-    WAV binaries are encoded from the closed-form sample formula,
+    WAV binaries are encoded from the closed-form sample formula
+    (``encode_wav`` in ``synthesize_decodable_audio``'s Arrow stage),
     then decoded back by the pure-Spark byte-expression parser
     (``decode_samples`` — RIFF/WAVE/fmt/data chunk layout read from
     the actual bytes). The oracle recomputes the samples straight
@@ -627,10 +633,11 @@ def q_e6_wav_decode(spark, sf_dir):
 def q_e6_y4m_decode(spark, sf_dir):
     """REAL video decode (r10 — completes the real-codec triple:
     image r8/r9, audio + video r10): tiny spec-compliant mono
-    YUV4MPEG2 streams encoded from the closed-form luma formula, then
-    decoded back frame-by-frame by the pure-Spark chunk parser
-    (``decode_y4m_frames`` — variable-length ASCII header, per-frame
-    FRAME markers verified). One row per frame, luma hex-packed
+    YUV4MPEG2 streams encoded from the closed-form luma formula
+    (``encode_y4m`` in ``synthesize_decodable_video``'s Arrow
+    stage), then decoded back frame-by-frame by the pure-Spark chunk
+    parser (``decode_y4m_frames`` — variable-length ASCII header,
+    per-frame FRAME markers verified). One row per frame, luma hex-packed
     (driver-safe scalar shape)."""
     from decision_tree_stuff_spark.operators.multimodal import (
         decode_y4m_frames,
@@ -1089,7 +1096,7 @@ FROM (SELECT media_id, h, unnest(range(0, n_frames, 4)) AS frame_idx FROM v) fr
 """,
     # E-6 pixel decode: the oracle side never touches binary — it
     # recomputes the decoded pixels from the shared closed form
-    # (multimodal.pixel_value), so Spark's encode→BMP/PPM bytes→decode
+    # (multimodal.pixel_value), so the encode→BMP/PPM bytes→decode
     # round trip must undo the real file layout exactly to match.
     "e6_resize": """
 SELECT doc_id AS media_id,

@@ -32,8 +32,9 @@ SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 # marked slow here by node id, EXCEPT tests guarding the current
 # round's fresh invariants (kept in the default run regardless of
 # cost). test_e7b_scale_smoke carries its own inline marker. The PNG
-# and GIF decode tests were re-measured after decode moved to the
-# Arrow-batched stdlib stage; those now under 10 s left the list.
+# and GIF tests were re-measured after decode, and then payload
+# synthesis, moved to the Arrow-batched Python stage; those now under
+# 10 s left the list.
 _SLOW_TESTS = frozenset(
     (
         "test_audit.py::test_audit_matches_per_stage_counts",
@@ -66,12 +67,6 @@ _SLOW_TESTS = frozenset(
         "test_oracle_parity.py::test_oracle_parity[e3_ivf_pq_topk]",
         "test_oracle_parity.py::test_oracle_parity[e3_kmeans_assign]",
         "test_oracle_parity.py::test_oracle_parity[e7b_minhash_dedup_keep]",
-        "test_pixel_decode.py::test_encode_png_fixed_round_trip_and_external_zlib",
-        "test_pixel_decode.py::test_png_16bit_round_trip_matrix",
-        "test_pixel_decode.py::test_png_alpha_color_types_both_paths",
-        "test_pixel_decode.py::test_png_filtered_round_trip_matches_formula_and_python",
-        "test_pixel_decode.py::test_png_palette_round_trip_matches_formula_and_python",
-        "test_plan_budget.py::test_png_plan_build_within_budget",
         "test_plans.py::test_pq_encode_is_shuffle_free_projection",
         "test_properties.py::test_fit_matches_python_oracle",
         "test_registry.py::test_gate_schemas_are_driver_canonicalizable",

@@ -343,24 +343,27 @@ def _spark_frames(spark, payloads):
     return out
 
 
+def _anim_media(spark, ids, lct=False):
+    """(media_id, payload) of ``encode_gif_anim`` at the
+    ``q_e6_gif_frames`` dims: w = id%5+2, h = id%4+2, id%3+1 frames."""
+    return spark.createDataFrame(
+        [
+            (i, bytearray(mm.encode_gif_anim(
+                i, i % 5 + 2, i % 4 + 2, i % 3 + 1, lct=lct
+            )))
+            for i in ids
+        ],
+        "media_id bigint, payload binary",
+    )
+
+
 def test_gif_anim_round_trip_matches_formula_and_python(spark):
     """encode_gif_anim -> decode_gif_frames reproduces the per-frame
     closed form ((mid*7 + k*13 + 95*f) mod 256); the twin agrees on
     the same bytes, NETSCAPE extension skipped on both paths."""
     import decision_tree_stuff_spark.operators.multimodal as _mm
 
-    docs = spark.createDataFrame(
-        [(i,) for i in range(1, 13)], "doc_id bigint"
-    )
-    media = docs.select(
-        F.col("doc_id").alias("media_id"),
-        _mm.encode_gif_anim(
-            F.col("doc_id"),
-            (F.col("doc_id") % 5 + 2).cast("int"),
-            (F.col("doc_id") % 4 + 2).cast("int"),
-            (F.col("doc_id") % 3 + 1).cast("int"),
-        ).alias("payload"),
-    )
+    media = _anim_media(spark, range(1, 13))
     rows = {}
     for r in (
         _mm.decode_gif_frames(media)
@@ -509,16 +512,12 @@ def test_gif_lct_round_trip_matches_formula_and_python(spark):
     exercised end to end."""
     import decision_tree_stuff_spark.operators.multimodal as _mm
 
-    docs = spark.createDataFrame(
-        [(i,) for i in range(1, 9)], "doc_id bigint"
-    )
-    wi = (F.col("doc_id") % 5 + 2).cast("int")
-    hi = (F.col("doc_id") % 4 + 2).cast("int")
-    media = docs.select(
-        F.col("doc_id").alias("media_id"),
-        _mm.encode_gif(F.col("doc_id"), wi, hi, lct=True).alias(
-            "payload"
-        ),
+    media = spark.createDataFrame(
+        [
+            (i, bytearray(_mm.encode_gif(i, i % 5 + 2, i % 4 + 2, lct=True)))
+            for i in range(1, 9)
+        ],
+        "media_id bigint, payload binary",
     )
     rows = {
         r["media_id"]: r
@@ -533,13 +532,7 @@ def test_gif_lct_round_trip_matches_formula_and_python(spark):
         assert list(r["pixels"]) == expect, mid
         assert decode_gif(bytes(r["payload"])) == (w, h, expect), mid
 
-    anim = docs.select(
-        F.col("doc_id").alias("media_id"),
-        _mm.encode_gif_anim(
-            F.col("doc_id"), wi, hi,
-            (F.col("doc_id") % 3 + 1).cast("int"), lct=True,
-        ).alias("payload"),
-    )
+    anim = _anim_media(spark, range(1, 9), lct=True)
     frs = (
         _mm.decode_gif_frames(anim)
         .join(anim.select("media_id", "payload"), "media_id")
@@ -610,16 +603,7 @@ def test_gif_decode_stream_equals_batch(spark, tmp_path):
         decode_pixels(src, formats=("gif",)).collect()
     )
 
-    anim = docs.select(
-        F.col("doc_id").alias("media_id"),
-        _mm.encode_gif_anim(
-            F.col("doc_id"),
-            (F.col("doc_id") % 5 + 2).cast("int"),
-            (F.col("doc_id") % 4 + 2).cast("int"),
-            (F.col("doc_id") % 3 + 1).cast("int"),
-            lct=True,
-        ).alias("payload"),
-    )
+    anim = _anim_media(spark, range(1, 13), lct=True)
     apath = str(tmp_path / "gif_anim")
     anim.write.parquet(apath)
     a_src = spark.read.parquet(apath)

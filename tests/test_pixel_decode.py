@@ -810,22 +810,37 @@ def test_resize_frames_matches_python_reference(spark):
 def test_encode_png_oversize_raises_instead_of_corrupt(spark):
     """r12 advice guard: h*(w+1) > 65535 overflows the 16-bit stored
     block LEN/NLEN fields — the encoder must raise, not emit a
-    silently corrupt file; in-range dims keep working."""
-    import pytest
-    from pyspark.errors.exceptions.captured import SparkRuntimeException
-    from pyspark.sql import functions as F
+    silently corrupt file; in-range dims keep working. The
+    fixed-Huffman encoder shares the guard (its decode path caps the
+    raw stream at the same bound). Inside the synthesis stage the
+    raise fails the JOB: a bad encoder argument is the caller's own
+    error, never a null row."""
+    from pyspark.errors.exceptions.captured import PythonException
 
-    from decision_tree_stuff_spark.operators.multimodal import encode_png
+    from decision_tree_stuff_spark.operators.multimodal import (
+        encode_png,
+        encode_png_fixed,
+        synthesize_payloads,
+    )
 
-    ok = spark.range(1).select(
-        encode_png(F.lit(3), F.lit(4), F.lit(4)).alias("p")
-    ).collect()
-    assert ok[0]["p"][:8] == b"\x89PNG\r\n\x1a\n"
+    for enc in (encode_png, encode_png_fixed):
+        assert enc(3, 4, 4)[:8] == b"\x89PNG\r\n\x1a\n"
+        # 255 * (256 + 1) = 65535 raw bytes: the largest legal stream
+        assert enc(3, 256, 255)[:8] == b"\x89PNG\r\n\x1a\n"
+        with pytest.raises(ValueError, match=enc.__name__ + ":"):
+            enc(3, 300, 300)
 
-    with pytest.raises(SparkRuntimeException, match="encode_png"):
-        spark.range(1).select(
-            encode_png(F.lit(3), F.lit(300), F.lit(300)).alias("p")
-        ).collect()
+    def frame(dim):
+        return spark.range(3).select(
+            F.col("id").alias("media_id"),
+            F.lit(dim).alias("w"),
+            F.lit(dim).alias("h"),
+        )
+
+    rows = synthesize_payloads(frame(4), encode_png).collect()
+    assert [r["payload"][:8] for r in rows] == [b"\x89PNG\r\n\x1a\n"] * 3
+    with pytest.raises(PythonException, match="encode_png:"):
+        synthesize_payloads(frame(300), encode_png).collect()
 
 
 def test_decode_formats_contract(spark):
@@ -1901,26 +1916,20 @@ def test_png_filtered_round_trip_matches_formula_and_python(spark):
             )
 
 
-def test_encode_png_dyn_oversize_raises_instead_of_corrupt(spark):
+def test_encode_png_dyn_oversize_raises_instead_of_corrupt():
     """r13 advice guard (mirrors encode_png's): dims whose raw
-    stream exceeds the decode-side bound must fail the job loudly,
-    not emit a PNG every decoder nulls out; in-range dims keep
-    working."""
-    from pyspark.errors.exceptions.captured import SparkRuntimeException
-
+    stream exceeds the decode-side bound must raise, not emit a PNG
+    every decoder nulls out; in-range dims keep working, the bound
+    counts bytes per pixel."""
     from decision_tree_stuff_spark.operators.multimodal import (
         encode_png_dyn,
     )
 
-    ok = spark.range(1).select(
-        encode_png_dyn(F.lit(3), F.lit(4), F.lit(4)).alias("p")
-    ).collect()
-    assert ok[0]["p"][:8] == b"\x89PNG\r\n\x1a\n"
-
-    with pytest.raises(SparkRuntimeException, match="encode_png_dyn"):
-        spark.range(1).select(
-            encode_png_dyn(F.lit(3), F.lit(300), F.lit(300)).alias("p")
-        ).collect()
+    assert encode_png_dyn(3, 4, 4)[:8] == b"\x89PNG\r\n\x1a\n"
+    with pytest.raises(ValueError, match="encode_png_dyn:"):
+        encode_png_dyn(3, 300, 300)
+    with pytest.raises(ValueError, match="encode_png_dyn:"):
+        encode_png_dyn(3, 100, 200, color_type=6, depth16=True)
 
 
 # ---------------------------------------------------------------------------
@@ -2163,11 +2172,6 @@ def test_png_16bit_round_trip_matrix(spark):
     on the same bytes."""
     import decision_tree_stuff_spark.operators.multimodal as mm
 
-    docs = spark.createDataFrame(
-        [(i,) for i in range(1, 9)], "doc_id bigint"
-    )
-    wi = (F.col("doc_id") % 5 + 2).cast("int")
-    hi = (F.col("doc_id") % 4 + 2).cast("int")
     cases = [
         (mm.encode_png, dict(depth16=True), dict(), "gray"),
         (mm.encode_png, dict(depth16=True, rgb=True), dict(), "rgb"),
@@ -2185,9 +2189,12 @@ def test_png_16bit_round_trip_matrix(spark):
         ),
     ]
     for enc, ekw, dkw, kind in cases:
-        media = docs.select(
-            F.col("doc_id").alias("media_id"),
-            enc(F.col("doc_id"), wi, hi, **ekw).alias("payload"),
+        media = spark.createDataFrame(
+            [
+                (i, bytearray(enc(i, i % 5 + 2, i % 4 + 2, **ekw)))
+                for i in range(1, 9)
+            ],
+            "media_id bigint, payload binary",
         )
         rows = {
             r["media_id"]: r
