@@ -83,7 +83,7 @@ def lr_fit(
     (cast to double internally). Documents with no tokens still train
     the bias (their z is the bias alone)."""
     if n_buckets <= dense_max_buckets:
-        return _lr_fit_dense(
+        return _lr_fit_dense_loop(
             docs, label_col, n_buckets, iters, lr, id_col, text_col,
             round_dp, cache,
         )
@@ -91,155 +91,6 @@ def lr_fit(
         docs, label_col, n_buckets, iters, lr, id_col, text_col,
         round_dp, cache,
     )
-
-
-def _lr_fit_dense(
-    docs: DataFrame,
-    label_col: str,
-    n_buckets: int,
-    iters: int,
-    lr: float,
-    id_col: str,
-    text_col: str,
-    round_dp: int,
-    cache: bool,
-) -> List[Tuple[int, float]]:
-    """Dense path. Default: the per-iteration collect loop
-    (``_lr_fit_dense_loop``) — one cached scan + one wide global
-    aggregate + one driver collect per iteration.
-
-    A FUSED single-action form (``_lr_fit_dense_fused``) was built
-    and measured in the r14 optimization round (guide §1.2 step 1 —
-    fewer driver round trips): iteration state rides a 1-row
-    broadcast-crossJoined frame carried via ``min()``, one
-    ``first()`` total. Weights are bit-identical (pinned by
-    ``test_lr_fused_equals_loop``) but the fused plan measured
-    2× SLOWER at sf0.1 (same-session interleaved A/B,
-    ``scripts/lr_fused_ab_r14.py``: loop 15.3/9.8 s vs fused
-    20.1/25.5 s over two rounds) — the nested broadcast-exchange
-    chain plus the single giant codegen unit cost more than the 4
-    driver round trips they save. Kept in-tree gated at zero
-    default-plan cost (the DH-peek precedent); the loop stays the
-    default."""
-    return _lr_fit_dense_loop(
-        docs, label_col, n_buckets, iters, lr, id_col, text_col,
-        round_dp, cache,
-    )
-
-
-def _lr_fit_dense_fused(
-    docs: DataFrame,
-    label_col: str,
-    n_buckets: int,
-    iters: int,
-    lr: float,
-    id_col: str,
-    text_col: str,
-    round_dp: int,
-    cache: bool,
-) -> List[Tuple[int, float]]:
-    """The measured-negative fused single-action dense fit (see
-    ``_lr_fit_dense`` docstring for the A/B numbers): bit-identical
-    weights to the loop, one action, but a slower plan on this box.
-    Retained gated for the record + the differential pin."""
-    q = 10**round_dp
-    labels = docs.select(
-        F.col(id_col), F.col(label_col).cast("double").alias("y")
-    )
-    featmap = (
-        hashed_ngram_features(docs, id_col, text_col, n_buckets)
-        .groupBy(id_col)
-        .agg(
-            F.map_from_entries(
-                F.collect_list(F.struct(F.col("bucket"), F.col("c")))
-            ).alias("__m")
-        )
-    )
-    prep = labels.join(featmap, id_col, "left").select("y", "__m")
-    if cache:
-        from pyspark import StorageLevel
-
-        prep = prep.persist(StorageLevel.MEMORY_AND_DISK)
-    try:
-        keys = F.lit(list(range(n_buckets)))
-
-        def cnt_m(b):
-            return F.coalesce(
-                F.element_at(F.col("__m"), b.cast("bigint")),
-                F.lit(0).cast("bigint"),
-            )
-
-        def upd(g):
-            # == int(_round_away(lr * g / n, 0)) on the driver: the
-            # same IEEE double ops in the same order (lr*g, then /n)
-            x = (
-                F.lit(lr)
-                * F.coalesce(g, F.lit(0)).cast("double")
-                / F.col("n").cast("double")
-            )
-            mag = F.floor(F.abs(x) + F.lit(0.5)).cast("bigint")
-            return F.when(x >= 0, mag).otherwise(-mag)
-
-        state = prep.agg(F.count(F.lit(1)).alias("n")).select(
-            "n",
-            F.lit([0] * n_buckets).cast("array<bigint>").alias("w"),
-            F.lit(0).cast("bigint").alias("wb"),
-        )
-        for _ in range(iters):
-            st = prep.crossJoin(F.broadcast(state))
-            zm = F.aggregate(
-                F.zip_with(
-                    keys,
-                    F.col("w"),
-                    lambda k, w: F.struct(k.alias("k"), w.alias("w")),
-                ),
-                F.col("wb"),
-                lambda acc, s: acc + cnt_m(s["k"]) * s["w"],
-            )
-            p = F.round(
-                F.lit(1.0)
-                / (
-                    F.lit(1.0)
-                    + F.exp(-(zm.cast("double") / F.lit(float(q))))
-                ),
-                round_dp,
-            )
-            rm = (
-                F.round((F.col("y") - p) * F.lit(float(q)), 0)
-                .cast("bigint")
-            )
-            grads = st.select(
-                "__m", rm.alias("__rm"), "n", "w", "wb"
-            ).agg(
-                F.min("n").alias("n"),
-                F.min("w").alias("w_prev"),
-                F.min("wb").alias("wb_prev"),
-                F.sum("__rm").alias("gb"),
-                *[
-                    F.sum(cnt_m(F.lit(b)) * F.col("__rm")).alias(f"g{b}")
-                    for b in range(n_buckets)
-                ],
-            )
-            state = grads.select(
-                "n",
-                F.array(
-                    *[
-                        F.element_at(F.col("w_prev"), b + 1)
-                        + upd(F.col(f"g{b}"))
-                        for b in range(n_buckets)
-                    ]
-                ).alias("w"),
-                (F.col("wb_prev") + upd(F.col("gb"))).alias("wb"),
-            )
-        row = state.first()
-        if row is None or row["n"] is None or row["n"] == 0:
-            raise ValueError("lr_fit: empty corpus")
-        wm = {b: row["w"][b] for b in range(n_buckets)}
-        wm[BIAS_BUCKET] = row["wb"]
-        return sorted((b, v / q) for b, v in wm.items())
-    finally:
-        if cache:
-            prep.unpersist()
 
 
 def _lr_fit_dense_loop(
@@ -253,14 +104,14 @@ def _lr_fit_dense_loop(
     round_dp: int,
     cache: bool,
 ) -> List[Tuple[int, float]]:
-    """The pre-r14 dense path: one cached (y, bucket→count map)
-    frame, then one scan + one wide global aggregate + one driver
-    collect per iteration. All sums are BIGINT micro-units (counts ×
-    micro-weights / micro-residuals), so the trajectory is EXACT —
-    identical under any partitioning, any summation order, and in
-    the DuckDB twin by arithmetic, not by rounding luck. Kept as the
-    differential reference for the fused single-action form above
-    (``test_lr_fused_equals_loop``)."""
+    """The dense path: one cached (y, bucket→count map) frame, then
+    one scan + one wide global aggregate + one driver collect per
+    iteration. All sums are BIGINT micro-units (counts × micro-weights
+    / micro-residuals), so the trajectory is EXACT — identical under
+    any partitioning, any summation order, and in the DuckDB twin by
+    arithmetic, not by rounding luck. A fused single-action form (one
+    broadcast-crossJoined state frame, one ``first()``) measured 2×
+    slower at sf0.1 in r14 and was deleted."""
     q = 10**round_dp
     labels = docs.select(
         F.col(id_col), F.col(label_col).cast("double").alias("y")

@@ -1,15 +1,19 @@
 """Multimodal (image/audio/video) column plumbing.
 
 Media travels as an opaque ``binary`` payload column plus a typed
-metadata struct — the schema, partitioning and Arrow-batched UDF
-plumbing are real and tested. PIXEL decode is REAL: the
-uncompressed formats (BMP, PPM, PGM) decode in Spark byte
-expressions, PNG and GIF in one Arrow-batched stage over the stdlib
-decoders ``decode_png`` / ``decode_gif`` (``decode_pixels``); WAV and
-Y4M decode in Spark byte expressions too. The synthetic payloads
-those decoders are tested on come from Python byte encoders
-(``encode_*``) run in the same Arrow stage. ``decode_media`` (the
-per-payload codec-library entry point) still raises
+metadata struct. Header metadata (``with_image_header_meta``,
+``with_audio_header_meta``) parses in Spark byte expressions, and so
+does the analytics over decoded arrays (``audio_features``,
+``audio_frames``, ``resize_*``, ``frame_motion``). DECODE is real for
+every supported format and runs in ONE Arrow-batched Python stage
+(``_arrow_stage``) over stdlib decoders: BMP/PPM/PGM
+(``decode_media``), PNG (``decode_png``) and GIF (``decode_gif``,
+``decode_gif_anim``) via ``decode_pixels`` / ``decode_gif_frames``,
+WAV (``decode_audio``) via ``decode_samples`` and Y4M
+(``decode_video``) via ``decode_y4m_frames``. A decoder exception is
+a null row, never a failed job. The synthetic payloads those decoders
+are tested on come from Python byte encoders (``encode_*``) run in
+the same stage. ``decode_media`` still raises
 ``NotImplementedError`` for JPEG and the other codec-bound formats,
 with a deterministic fake feature extractor standing in so that
 pipeline shape is exercised end-to-end too.
@@ -21,9 +25,9 @@ Scale notes:
   pruning, so keep payload in its own column, never inside a struct
   with hot metadata.
 * Feature extraction (``mapInPandas``) and the one Arrow stage
-  (``mapInArrow``: PNG/GIF decode and the synthetic-payload encoders)
-  cross the Python boundary batch-at-a-time, not row-at-a-time, and
-  output partitioning inherits the scan (no shuffle).
+  (``mapInArrow``: decode and the synthetic-payload encoders) cross
+  the Python boundary batch-at-a-time, not row-at-a-time, and output
+  partitioning inherits the scan (no shuffle).
 * Frame sampling is pure Spark (sequence + explode + binary
   substring): no UDF.
 """
@@ -92,18 +96,29 @@ def synthesize_media(docs: DataFrame, id_col: str = "doc_id", text_col: str = "t
     )
 
 
-def decode_media(payload: bytes, fmt: str):
-    """Pixel decode of a single payload, driver/UDF-side.
+#: A PPM/PGM header must end within this many bytes (``decode_media``).
+_PNM_HEADER_CAP = 32
 
-    REAL for the uncompressed formats: 24-bit BI_RGB BMP and binary
-    PPM (P6) decode here in pure Python (and distributed, in pure
-    Spark expressions, via ``decode_pixels`` below) — returns
+
+def decode_media(payload: bytes, fmt: str):
+    """Pixel decode of a single uncompressed image — the decoder
+    ``decode_pixels`` runs per row for BMP, PPM and PGM. Returns
     ``(width, height, pixels)`` with pixels the flattened top-down
-    row-major RGB bytes. COMPRESSED formats (JPEG/PNG/GIF/audio/
-    video) still raise: their codecs (PIL/libav/opencv) are not
-    available in this container — swap in the real decoder in
-    production. Header-level metadata for those is not stubbed — see
-    ``with_image_header_meta``."""
+    row-major RGB bytes:
+
+    * BMP: 24-bit BI_RGB, or 8-bit paletted through the BGR0 palette
+      after a 40-byte BITMAPINFOHEADER (biClrUsed entries, 0 = 256);
+      positive (bottom-up) height; rows at a 4-byte stride.
+    * PPM (P6) / PGM (P5): canonical ``P6 <w> <h> 255`` header with
+      single whitespace separators, ending within ``_PNM_HEADER_CAP``
+      bytes; PGM gray expands to R=G=B.
+
+    Raises ``ValueError`` on any other variant, on zero or negative
+    dimensions and on a payload too short for its w×h pixels.
+    Compressed formats other than PNG/GIF (JPEG, audio/video codecs)
+    raise ``NotImplementedError``: their codec libraries are not
+    available here. Header-level metadata for those is not stubbed —
+    see ``with_image_header_meta``."""
     f = (fmt or "").lower()
     if f in ("bmp", "bmp8") or payload[:2] == b"BM":
         if len(payload) < 54:
@@ -117,18 +132,22 @@ def decode_media(payload: bytes, fmt: str):
                 f"unsupported BMP variant (planes={planes} bpp={bpp} "
                 f"compression={comp} w={w} h={h})"
             )
+        row_bytes = w * bpp // 8
+        stride = (row_bytes + 3) & ~3
+        # source rows are bottom-up: the last one read is top row 0
+        if off + (h - 1) * stride + row_bytes > len(payload):
+            raise ValueError("BMP pixel data truncated")
         px = []
         if bpp == 24:
-            stride = (w * 3 + 3) & ~3
             for r in range(h):                      # output rows top-down
                 base = off + (h - 1 - r) * stride   # source rows bottom-up
                 for p in range(w):
                     b, g, rr = payload[base + 3 * p: base + 3 * p + 3]
                     px.extend((rr, g, b))           # BGR on disk → RGB out
-        else:  # 8-bit paletted (r9): BGR0 palette after the info header
-            # r10 (advice): the palette-at-54 read assumes a 40-byte
-            # BITMAPINFOHEADER — a V4/V5 DIB puts the palette later
-            # and would silently decode header bytes as colors
+        else:
+            # the palette-at-54 read assumes a 40-byte BITMAPINFOHEADER
+            # — a V4/V5 DIB puts the palette later and would silently
+            # decode header bytes as colors
             hdr_size, = struct.unpack_from("<I", payload, 14)
             if hdr_size != 40:
                 raise ValueError(
@@ -139,7 +158,6 @@ def decode_media(payload: bytes, fmt: str):
             nclr = nclr or 256
             if off < 54 + 4 * nclr:
                 raise ValueError("BMP palette overlaps pixel data")
-            stride = (w + 3) & ~3
             for r in range(h):
                 base = off + (h - 1 - r) * stride
                 for p in range(w):
@@ -156,23 +174,27 @@ def decode_media(payload: bytes, fmt: str):
         import re as _re
 
         m = _re.match(rb"^(P[56])\s(\d+)\s(\d+)\s255\s", payload)
-        if not m:
-            raise ValueError("unsupported PPM/PGM header")
+        if not m or m.end() > _PNM_HEADER_CAP:
+            raise ValueError(
+                "unsupported PPM/PGM header (canonical form ending "
+                f"within {_PNM_HEADER_CAP} bytes)"
+            )
         w, h = int(m.group(2)), int(m.group(3))
-        off = m.end()
-        if m.group(1) == b"P6":
-            return w, h, list(payload[off: off + w * h * 3])
-        # P5 grayscale (r9) expanded to R=G=B, matching decode_pixels
-        return w, h, [
-            v for g in payload[off: off + w * h] for v in (g, g, g)
-        ]
+        depth = 3 if m.group(1) == b"P6" else 1
+        data = payload[m.end(): m.end() + w * h * depth]
+        if w <= 0 or h <= 0 or len(data) < w * h * depth:
+            raise ValueError(f"PPM/PGM pixel data truncated (w={w} h={h})")
+        if depth == 3:
+            return w, h, list(data)
+        return w, h, [v for g in data for v in (g, g, g)]
     raise NotImplementedError(
         f"media decode for format {fmt!r} requires codec libraries "
         "not present in this environment"
     )
 
 
-_PNG_SIG = "89504E470D0A1A0A"  # \x89PNG\r\n\x1a\n
+_PNG_MAGIC = b"\x89PNG\r\n\x1a\n"
+_PNG_SIG = _PNG_MAGIC.hex().upper()
 
 
 def _sig(payload, pos: int, ascii_tag: str):
@@ -621,7 +643,7 @@ def _png_file(name, media_id, w, h, ct, filtered, depth16, deflate):
         )
     zdata = b"\x78\x01" + deflate(raw) + struct.pack(">I", zlib.adler32(raw))
     return (
-        _CODEC_SIGS["png"] + _png_chunk(b"IHDR", ihdr) + plte
+        _PNG_MAGIC + _png_chunk(b"IHDR", ihdr) + plte
         + _png_chunk(b"IDAT", zdata) + _png_chunk(b"IEND", b"")
     )
 
@@ -686,8 +708,8 @@ def encode_wav(media_id: int, n_samples: int, sample_rate: int) -> bytes:
     RIFF/WAVE header: 16-byte fmt chunk, audio format 1 = PCM, one
     channel, 8 bits/sample, byte rate = block align · rate) whose
     samples are ``sample_value(media_id, i)``. Uncompressed PCM needs
-    no codec library, so the decode side (``decode_samples``) is
-    pure Spark expressions."""
+    no codec library; ``decode_samples`` decodes it with the stdlib
+    twin ``decode_audio``."""
     return struct.pack(
         "<4sI4s4sIHHIIHH4sI", b"RIFF", n_samples + 36, b"WAVE", b"fmt ",
         16, 1, 1, sample_rate, sample_rate, 1, 8, b"data", n_samples,
@@ -721,50 +743,46 @@ def synthesize_decodable_audio(
     )
 
 
+_AUDIO_FIELDS = [
+    StructField("audio_format", StringType()),
+    StructField("sample_rate", IntegerType()),
+    StructField("n_samples", IntegerType()),
+    StructField("samples", ArrayType(IntegerType())),
+]
+
+
 def decode_samples(
     media: DataFrame, payload_col: str = "payload"
 ) -> DataFrame:
-    """REAL audio decode of canonical 8-bit mono PCM WAV, pure Spark:
-    returns (media_id, audio_format, sample_rate, n_samples, samples)
-    with ``samples`` the unsigned 8-bit PCM array. Every header field
-    is read from the actual bytes (RIFF/WAVE magic, 16-byte fmt
-    chunk, PCM=1, mono, block align 1, 8 bits, 'data' chunk with an
-    in-bounds length) — anything else nulls out, including
-    multi-channel, 16-bit, or extensible-fmt files whose layout this
-    canonical-form parser does not cover. Compressed audio
-    (MP3/AAC/...) still requires codec libraries, as documented on
-    ``decode_media``."""
-    p = F.col(payload_col)
-    n = _le32(p, 41)
-    ok = (
-        (F.length(p) >= 45)
-        & (F.hex(F.substring(p, 1, 4)) == "52494646")
-        & (F.hex(F.substring(p, 9, 8)) == "57415645666D7420")
-        & (_le32(p, 17) == 16)            # canonical fmt size
-        & (_le16(p, 21) == 1)             # PCM
-        & (_le16(p, 23) == 1)             # mono
-        & (_le16(p, 33) == 1)             # block align
-        & (_le16(p, 35) == 8)             # bits per sample
-        & (F.hex(F.substring(p, 37, 4)) == "64617461")
-        & (n > 0)
-        & (n + 44 <= F.length(p))
-    )
-    samples = F.transform(
-        F.sequence(F.lit(0), n - 1), lambda k: _u8(p, F.lit(45) + k)
-    )
-    return media.select(
-        "media_id",
-        F.when(ok, "wav").alias("audio_format"),
-        F.when(ok, _le32(p, 25)).cast("int").alias("sample_rate"),
-        F.when(ok, n).cast("int").alias("n_samples"),
-        F.when(ok, samples).alias("samples"),
+    """REAL audio decode of canonical 8-bit mono PCM WAV: returns
+    (media_id, audio_format, sample_rate, n_samples, samples) with
+    ``samples`` the unsigned 8-bit PCM array. Runs ``decode_audio``
+    once per payload in the module's Arrow stage; a payload it
+    rejects (multi-channel, 16-bit, extensible-fmt, truncated, null)
+    gives one row whose other columns are null, so the operator is
+    total and one corrupt payload never fails the job. Compressed
+    audio (MP3/AAC/...) still requires codec libraries, as documented
+    on ``decode_media``."""
+
+    def audio_rows(_media_id, payload):
+        try:
+            rate, samples = decode_audio(payload)
+        except Exception:  # the null row is the reject report
+            return [(None,) * 4]
+        return [("wav", rate, len(samples), samples)]
+
+    return _arrow_stage(
+        media.select("media_id", payload_col), _AUDIO_FIELDS, audio_rows
     )
 
 
 def decode_audio(payload: bytes):
-    """Python single-payload twin of ``decode_samples`` (driver/UDF
-    side): returns ``(sample_rate, samples)`` for a canonical 8-bit
-    mono PCM WAV, raises on anything else."""
+    """Single-payload WAV decode — what ``decode_samples`` runs per
+    row: returns ``(sample_rate, samples)`` for a canonical 8-bit mono
+    PCM WAV (RIFF/WAVE magic, 16-byte fmt chunk at byte 12, PCM=1,
+    mono, block align 1, 8 bits, then a non-empty in-bounds 'data'
+    chunk), raises on anything else, including a sample rate beyond
+    int32 (a corrupt header, as in ``with_audio_header_meta``)."""
     if len(payload) < 45 or payload[:4] != b"RIFF" or payload[8:16] != b"WAVEfmt ":
         raise ValueError("not a canonical RIFF/WAVE payload")
     fmt_size, = struct.unpack_from("<I", payload, 16)
@@ -776,6 +794,8 @@ def decode_audio(payload: bytes):
             f"unsupported WAV variant (fmt_size={fmt_size} fmt={audio_fmt} "
             f"ch={channels} align={align} bits={bits})"
         )
+    if rate > 2147483647:
+        raise ValueError(f"sample rate {rate} beyond int32")
     if payload[36:40] != b"data":
         raise ValueError("missing canonical data chunk")
     n, = struct.unpack_from("<I", payload, 40)
@@ -791,10 +811,7 @@ def luma_value(media_id: int, f: int, q: int) -> int:
     return (media_id * 7 + f * 31 + q * 13) % 256
 
 
-_Y4M_FRAME_MAGIC = "4652414D450A"  # 'FRAME\n'
-# Both Y4M decode paths (Spark + the Python twin) require the stream
-# header to end within this many bytes; longer spec-valid headers are
-# rejected IDENTICALLY on both paths (r10 advice: the caps must agree).
+#: A Y4M stream header must end within this many bytes (``decode_video``).
 _Y4M_HEADER_CAP = 80
 
 
@@ -804,8 +821,8 @@ def encode_y4m(media_id: int, w: int, h: int, n_frames: int) -> bytes:
     ``FRAME\\n`` marker) whose frame-f luma plane is
     ``luma_value(media_id, f, ·)``. Y4M is the standard uncompressed
     interchange format (what ffmpeg pipes), and like BMP/PPM/WAV it
-    needs no codec library, so the decode side
-    (``decode_y4m_frames``) is pure Spark expressions."""
+    needs no codec library; ``decode_y4m_frames`` decodes it with the
+    stdlib twin ``decode_video``."""
     return b"YUV4MPEG2 W%d H%d F25:1 Ip A1:1 Cmono\n" % (w, h) + b"".join(
         b"FRAME\n" + bytes(luma_value(media_id, f, q) for q in range(w * h))
         for f in range(n_frames)
@@ -839,100 +856,38 @@ def synthesize_decodable_video(
     )
 
 
+_VIDEO_FIELDS = [
+    StructField("video_format", StringType()),
+    StructField("width", IntegerType()),
+    StructField("height", IntegerType()),
+    StructField("n_frames", IntegerType()),
+    StructField("frame_idx", IntegerType()),
+    StructField("luma", ArrayType(IntegerType())),
+]
+
+
 def decode_y4m_frames(
     media: DataFrame, payload_col: str = "payload"
 ) -> DataFrame:
-    """REAL video decode of uncompressed YUV4MPEG2 (mono chroma),
-    pure Spark: ONE ROW PER FRAME — (media_id, video_format, width,
-    height, n_frames, frame_idx, luma) with ``luma`` the frame's
-    top-down w·h luma plane. The variable-length ASCII stream header
-    is parsed like PPM's (chars == bytes), the frame count is derived
-    from the payload length, and EVERY frame's ``FRAME\\n`` marker is
-    verified (``F.forall`` — a stream with one corrupt marker nulls
-    out entirely rather than emitting garbage frames). Non-mono
-    chroma (420/422/444 subsampled streams) is rejected: their frame
-    size differs and this canonical-mono parser does not cover them.
-    The header must end within ``_Y4M_HEADER_CAP`` (80) bytes — the
-    Python twin ``decode_video`` enforces the SAME cap, so the two
-    paths agree on long-parameter headers (r10 advice). Invalid
-    payloads yield one row with null decode columns, so the operator
-    is total over mixed media tables."""
-    p = F.col(payload_col)
-    hdr_len = F.least(F.length(p), F.lit(_Y4M_HEADER_CAP))
-    hdr = F.array_join(
-        F.transform(
-            F.sequence(F.lit(1), hdr_len), lambda i: F.char(_u8(p, i))
-        ),
-        "",
-    )
-    m = F.regexp_extract(
-        hdr, r"^(YUV4MPEG2 W\d+ H\d+ F\d+:\d+[^\n]*Cmono[^\n]*\n)", 1
-    )
-    # nullif: an unmatched header extracts '' and ANSI cast of ''
-    # RAISES on Spark 4 — invalid payloads must null out, not error
-    w = F.nullif(F.regexp_extract(m, r" W(\d+)", 1), F.lit("")).cast("int")
-    h = F.nullif(F.regexp_extract(m, r" H(\d+)", 1), F.lit("")).cast("int")
-    off = F.length(m)  # ASCII header: chars == bytes
-    fsize = w * h + 6
-    n = F.floor((F.length(p) - off) / fsize).cast("int")
-    ok = (
-        (F.length(m) > 0)
-        & (w > 0)
-        & (h > 0)
-        & (n >= 1)
-        & (F.pmod(F.length(p) - off, fsize) == 0)
-        & F.forall(
-            F.sequence(F.lit(0), n - 1),
-            lambda f: F.hex(F.substring(p, off + f * fsize + 1, 6))
-            == _Y4M_FRAME_MAGIC,
-        )
-    )
-    base = media.select(
-        "media_id",
-        F.when(ok, "y4m").alias("video_format"),
-        F.when(ok, w).alias("width"),
-        F.when(ok, h).alias("height"),
-        F.when(ok, n).alias("n_frames"),
-        F.when(ok, off).alias("__off"),
-        F.when(ok, fsize).alias("__fsize"),
-        p.alias("__p"),
-    )
-    # outer explode keeps invalid payloads as one null-frame row
-    frames = base.select(
-        "media_id",
-        "video_format",
-        "width",
-        "height",
-        "n_frames",
-        F.explode_outer(
-            F.when(
-                F.col("n_frames").isNotNull(),
-                F.sequence(F.lit(0), F.col("n_frames") - 1),
-            )
-        ).alias("frame_idx"),
-        "__p",
-        "__off",
-        "__fsize",
-    )
-    luma = F.transform(
-        F.sequence(F.lit(0), F.col("width") * F.col("height") - 1),
-        lambda q: _u8(
-            F.col("__p"),
-            F.col("__off")
-            + F.col("frame_idx") * F.col("__fsize")
-            + 6
-            + q
-            + 1,
-        ),
-    )
-    return frames.select(
-        "media_id",
-        "video_format",
-        "width",
-        "height",
-        "n_frames",
-        "frame_idx",
-        F.when(F.col("frame_idx").isNotNull(), luma).alias("luma"),
+    """REAL video decode of uncompressed YUV4MPEG2 (mono chroma): ONE
+    ROW PER FRAME — (media_id, video_format, width, height, n_frames,
+    frame_idx, luma) with ``luma`` the frame's top-down w·h luma
+    plane. Runs ``decode_video`` once per payload in the module's
+    Arrow stage; a payload it rejects (non-mono chroma, a header past
+    ``_Y4M_HEADER_CAP``, a corrupt ``FRAME`` marker, a length that is
+    not whole frames, null) gives one row whose other columns are
+    null, so the operator is total and never fails the job."""
+
+    def frame_rows(_media_id, payload):
+        try:
+            w, h, frames = decode_video(payload)
+        except Exception:  # the null row is the reject report
+            return [(None,) * 6]
+        n = len(frames)
+        return [("y4m", w, h, n, i, luma) for i, luma in enumerate(frames)]
+
+    return _arrow_stage(
+        media.select("media_id", payload_col), _VIDEO_FIELDS, frame_rows
     )
 
 
@@ -1121,14 +1076,12 @@ def frame_motion(frames: DataFrame) -> DataFrame:
 
 
 def decode_video(payload: bytes):
-    """Python single-payload twin of ``decode_y4m_frames``: returns
-    ``(w, h, [frame0_luma, frame1_luma, ...])`` for a canonical mono
-    Y4M stream, raises on anything else. Like the Spark path, the
-    stream header must terminate within the first 80 bytes (r10
-    advice: the Spark decoder scans only ``least(len, 80)`` header
-    chars, so a spec-valid header with a long parameter tail nulls
-    out there — this twin rejects it identically rather than
-    silently diverging)."""
+    """Single-payload Y4M decode — what ``decode_y4m_frames`` runs per
+    row: returns ``(w, h, [frame0_luma, frame1_luma, ...])`` for a
+    canonical mono stream (``YUV4MPEG2 W<w> H<h> F<n>:<d> ... Cmono``
+    header ending within ``_Y4M_HEADER_CAP`` bytes, then whole frames
+    of ``FRAME\\n`` + w·h luma bytes, every marker checked), raises
+    on anything else."""
     import re as _re
 
     m = _re.match(rb"^YUV4MPEG2 W(\d+) H(\d+) F\d+:\d+[^\n]*Cmono[^\n]*\n", payload)
@@ -1503,8 +1456,15 @@ _PNG_MAX_BLOCKS = 4
 #: formats decode_pixels can dispatch on
 _DECODE_FORMATS = ("bmp", "bmp8", "ppm", "pgm", "png", "gif")
 
-#: leading payload bytes that route a row to the codec stage
-_CODEC_SIGS = {"png": b"\x89PNG\r\n\x1a\n", "gif": b"GIF8"}
+#: leading payload bytes → the format ``decode_pixels`` dispatches to
+#: (``_image_format`` splits 'BM' by bpp into 'bmp' and 'bmp8')
+_IMAGE_SIGS = (
+    (b"BM", "bmp"),
+    (b"P6\n", "ppm"),
+    (b"P5\n", "pgm"),
+    (_PNG_MAGIC, "png"),
+    (b"GIF8", "gif"),
+)
 
 _IMAGE_FIELDS = [
     StructField("img_format", StringType()),
@@ -1512,6 +1472,17 @@ _IMAGE_FIELDS = [
     StructField("height", IntegerType()),
     StructField("pixels", ArrayType(IntegerType())),
 ]
+
+
+def _image_format(payload):
+    """The ``_DECODE_FORMATS`` name ``payload``'s signature claims, or
+    None (no signature, or a null payload)."""
+    for sig, fmt in _IMAGE_SIGS:
+        if payload is not None and payload.startswith(sig):
+            if fmt == "bmp" and payload[28:30] == b"\x08\x00":
+                return "bmp8"
+            return fmt
+    return None
 
 
 def decode_pixels(
@@ -1529,29 +1500,15 @@ def decode_pixels(
     row-major RGB byte array; a rejected or null payload yields one
     row whose other four columns are null.
 
-    The uncompressed formats decode in Spark byte expressions:
-
-    * BMP: dispatched on the 'BM' magic; data offset, dimensions,
-      bpp and compression are read from the actual header (only
-      24-bit BI_RGB with positive height — bottom-up — is supported;
-      anything else nulls out). Decoding undoes the bottom-up row
-      order, per-pixel BGR and the 4-byte row stride.
-    * BMP 8-bit paletted (r9): same header dispatch with bpp == 8;
-      each index byte is looked up in the BGR0 palette that follows
-      BITMAPINFOHEADER (biClrUsed entries; 0 means 256), rows
-      bottom-up at a 4-byte-padded one-byte-per-pixel stride.
-    * PPM (P6) / PGM (P5, r9): header parsed from the leading ASCII
-      bytes (canonical single-whitespace form, as emitted by most
-      tools); P6 data is already top-down RGB, P5 grayscale is
-      expanded to R=G=B so ``pixels`` has one shape for every format.
-
-    PNG and GIF decode in ONE Arrow-batched Python stage
-    (``mapInArrow``) that runs the stdlib decoders ``decode_png`` and
-    ``decode_gif`` once per payload; any exception a decoder raises
-    becomes a null row, so one corrupt payload never fails the job.
-    Python here is a measured choice: the same envelope decoded in
-    Catalyst expressions was over 20x slower (README.md, "Media
-    decode").
+    Every format decodes in ONE Arrow-batched Python stage
+    (``mapInArrow``): each payload's signature picks its format
+    (``_image_format``) and the stdlib decoder runs once per payload —
+    ``decode_media`` for BMP (24-bit and 8-bit paletted), PPM (P6) and
+    PGM (P5), ``decode_png`` and ``decode_gif``. Any exception a
+    decoder raises becomes a null row, so one corrupt payload never
+    fails the job. Python here is a measured choice: the same
+    envelopes decoded in Catalyst expressions built larger plans and
+    ran slower (README.md, "Media decode").
 
     * PNG: signature + IHDR dispatch, CRC-32 and Adler-32 verified,
       8-bit color types 0/2/4/6 with filter-0 scanlines in stored
@@ -1565,18 +1522,13 @@ def decode_pixels(
       samples to their MSB.
     * GIF (r14): LZW decode of one full-screen image through the
       global or local color table, interlace included
-      (``decode_gif``). GIF rides the EXPLICIT ``formats`` contract
-      only: ``formats=None`` never decodes GIF.
+      (``decode_gif``).
 
     ``formats`` (r12) is the caller's format-inventory CONTRACT: a
     pipeline that knows its media table holds only certain formats
-    passes the subset, and the plan contains ONLY those formats'
-    decoders. Rows whose actual format falls outside the declared
-    set null out. When both codec and uncompressed formats are
-    declared, a signature filter splits the input into the codec
-    stage and the expression projection, unioned back (the source
-    is scanned once per branch). Default ``None`` decodes every
-    format but GIF.
+    passes the subset; rows whose actual format falls outside the
+    declared set null out. Default ``None`` decodes every format but
+    GIF: GIF is decoded only when declared.
     """
     if formats is None:
         fs = set(_DECODE_FORMATS) - {"gif"}
@@ -1588,54 +1540,32 @@ def decode_pixels(
                 f"decode_pixels: unknown formats {sorted(unknown)}; "
                 f"supported: {_DECODE_FORMATS}"
             )
-    decoders = {}
-    if "png" in fs:
-        decoders["png"] = partial(
+    decoders = {
+        "png": partial(
             decode_png,
             fixed_huffman=png_fixed_huffman,
             dynamic_huffman=png_dynamic_huffman,
             filters=png_filters,
             palette=png_palette,
             depth16=png_16bit,
-        )
-    if "gif" in fs:
-        decoders["gif"] = decode_gif
-    rest = fs - set(decoders)
-    if not decoders:
-        return _decode_pixels_uncompressed(media, payload_col, rest)
+        ),
+        "gif": decode_gif,
+        **{f: partial(decode_media, fmt=f) for f in ("bmp", "bmp8", "ppm", "pgm")},
+    }
+    decoders = {f: d for f, d in decoders.items() if f in fs}
 
     def image_rows(_media_id, payload):
-        for fmt, decode in decoders.items():
-            if payload is not None and payload.startswith(_CODEC_SIGS[fmt]):
-                try:
-                    return [(fmt, *decode(payload))]
-                except Exception:  # the null row is the reject report
-                    break
-        return [(None, None, None, None)]
+        fmt = _image_format(payload)
+        if fmt in decoders:
+            try:
+                return [(fmt, *decoders[fmt](payload))]
+            except Exception:  # the null row is the reject report
+                pass
+        return [(None,) * 4]
 
-    if not rest:
-        return _arrow_stage(
-            media.select("media_id", payload_col), _IMAGE_FIELDS, image_rows
-        )
-    p = F.col(payload_col)
-    is_codec = F.lit(False)
-    for fmt in decoders:
-        sig = _CODEC_SIGS[fmt]
-        is_codec = is_codec | (
-            F.hex(F.substring(p, 1, len(sig))) == sig.hex().upper()
-        )
-    # null payloads must route to the expression branch (where they
-    # null out), not vanish: coalesce the signature test to false
-    is_codec = F.coalesce(is_codec, F.lit(False))
-    plain = _decode_pixels_uncompressed(
-        media.where(~is_codec), payload_col, rest
+    return _arrow_stage(
+        media.select("media_id", payload_col), _IMAGE_FIELDS, image_rows
     )
-    coded = _arrow_stage(
-        media.where(is_codec).select("media_id", payload_col),
-        _IMAGE_FIELDS,
-        image_rows,
-    )
-    return plain.unionByName(coded)
 
 
 def synthesize_payloads(frame: DataFrame, encode) -> DataFrame:
@@ -1692,159 +1622,6 @@ def _arrow_stage(frame: DataFrame, fields, rows_of) -> DataFrame:
     return frame.mapInArrow(run, schema)
 
 
-def _decode_pixels_uncompressed(
-    media: DataFrame, payload_col: str, formats
-) -> DataFrame:
-    """The uncompressed-format decode plan (BMP-24 / BMP-8 paletted /
-    PPM / PGM) — one projection. The dispatch chain is built from
-    ONLY the declared ``formats``' branches (r13): undeclared formats
-    null out (their ``ok`` predicate never enters the chain) and their
-    decode expressions are absent from the plan."""
-    p = F.col(payload_col)
-    is_bmp = (F.length(p) >= 54) & (F.hex(F.substring(p, 1, 2)) == "424D")
-    is_ppm = (F.length(p) >= 9) & (F.hex(F.substring(p, 1, 3)) == "50360A")
-    is_pgm = (F.length(p) >= 9) & (F.hex(F.substring(p, 1, 3)) == "50350A")
-
-    # --- BMP (shared header fields) ---
-    b_off = _le32(p, 11)
-    b_w = _le32(p, 19)
-    b_h = _le32(p, 23)
-    b_hdr_ok = (
-        is_bmp
-        & (_le16(p, 27) == 1)
-        & (_le32(p, 31) == 0)
-        & (b_h > 0)
-        & (b_w > 0)
-    )
-    b_ok = b_hdr_ok & (_le16(p, 29) == 24)
-    # rows padded to a 4-byte stride: 3w bytes (24-bit), w (8-bit)
-    b_stride = b_w * 3 + F.pmod(-b_w * 3, F.lit(4))
-
-    def bmp_row(r):
-        # output row r (top-down) reads source row h-1-r; byte j of
-        # the RGB output maps to source byte px·3 + (2 − channel)
-        return F.transform(
-            F.sequence(F.lit(0), b_w * 3 - 1),
-            lambda j: _u8(
-                p,
-                b_off
-                + (b_h - 1 - r) * b_stride
-                + (F.floor(j / F.lit(3)).cast("bigint") * 3)
-                + (F.lit(2) - F.pmod(j, F.lit(3)))
-                + 1,
-            ),
-        )
-
-    bmp_pixels = F.flatten(
-        F.transform(F.sequence(F.lit(0), b_h - 1), bmp_row)
-    )
-
-    # --- BMP 8-bit paletted (r9) ---
-    nclr = _le32(p, 47)
-    pal_n = F.when(nclr == 0, F.lit(256)).otherwise(nclr)
-    b8_stride = b_w + F.pmod(-b_w, F.lit(4))
-
-    def _b8_idx(q):
-        # palette index of pixel q (top-down order) from the
-        # bottom-up padded index rows
-        r_t = F.floor(q / b_w).cast("bigint")
-        px = F.pmod(q, b_w)
-        return _u8(p, b_off + (b_h - 1 - r_t) * b8_stride + px + 1)
-
-    b8_ok = (
-        b_hdr_ok
-        # r10 (advice): the fixed-offset palette read (55 + idx*4) and
-        # the biClrUsed read at 47 assume a 40-byte BITMAPINFOHEADER;
-        # V4/V5 DIBs place the palette after their larger header, so
-        # anything but 40 nulls out instead of decoding header bytes
-        & (_le32(p, 15) == 40)
-        & (_le16(p, 29) == 8)
-        & (b_off >= F.lit(54) + pal_n * 4)
-        # an index past biClrUsed reads bytes outside the palette —
-        # invalid, whole image nulls out (matches decode_media's raise)
-        & ~F.exists(
-            F.sequence(F.lit(0), b_w * b_h - 1),
-            lambda q: _b8_idx(q) >= pal_n,
-        )
-    )
-
-    def bmp8_byte(k):
-        # output byte k of the top-down RGB array: pixel q, channel c;
-        # index byte from the bottom-up padded row, then the BGR0
-        # palette entry (B at +0, G at +1, R at +2 — channel c reads
-        # offset 2-c)
-        q = F.floor(k / F.lit(3)).cast("bigint")
-        c = F.pmod(k, F.lit(3))
-        r_t = F.floor(q / b_w).cast("bigint")
-        px = F.pmod(q, b_w)
-        idx = _u8(p, b_off + (b_h - 1 - r_t) * b8_stride + px + 1)
-        return _u8(p, F.lit(55) + idx * 4 + (F.lit(2) - c))
-
-    bmp8_pixels = F.transform(
-        F.sequence(F.lit(0), b_w * b_h * 3 - 1), bmp8_byte
-    )
-
-    # --- PPM ---
-    hdr_len = F.least(F.length(p), F.lit(32))
-    hdr = F.array_join(
-        F.transform(
-            F.sequence(F.lit(1), hdr_len), lambda i: F.char(_u8(p, i))
-        ),
-        "",
-    )
-    m = F.regexp_extract(hdr, r"^(P6\s\d+\s\d+\s255\s)", 1)
-    p_ok = is_ppm & (F.length(m) > 0)
-    p_w = F.regexp_extract(hdr, r"^P6\s(\d+)\s", 1).cast("int")
-    p_h = F.regexp_extract(hdr, r"^P6\s\d+\s(\d+)\s", 1).cast("int")
-    p_off = F.length(m)  # header is pure ASCII: chars == bytes
-    ppm_pixels = F.transform(
-        F.sequence(F.lit(0), p_w * p_h * 3 - 1),
-        lambda k: _u8(p, p_off + k + 1),
-    )
-
-    # --- PGM (P5, r9): gray expanded to R=G=B ---
-    gm = F.regexp_extract(hdr, r"^(P5\s\d+\s\d+\s255\s)", 1)
-    g_ok = is_pgm & (F.length(gm) > 0)
-    g_w = F.regexp_extract(hdr, r"^P5\s(\d+)\s", 1).cast("int")
-    g_h = F.regexp_extract(hdr, r"^P5\s\d+\s(\d+)\s", 1).cast("int")
-    g_off = F.length(gm)
-    pgm_pixels = F.transform(
-        F.sequence(F.lit(0), g_w * g_h * 3 - 1),
-        lambda k: _u8(p, g_off + F.floor(k / F.lit(3)).cast("bigint") + 1),
-    )
-
-    branches = [
-        ("bmp", b_ok, b_w, b_h, bmp_pixels),
-        ("bmp8", b8_ok, b_w, b_h, bmp8_pixels),
-        ("ppm", p_ok, p_w, p_h, ppm_pixels),
-        ("pgm", g_ok, g_w, g_h, pgm_pixels),
-    ]
-    branches = [b for b in branches if b[0] in formats]
-
-    def chain(val_of):
-        out = None
-        for name, ok, w, h, px in branches:
-            v = val_of(name, w, h, px)
-            out = F.when(ok, v) if out is None else out.when(ok, v)
-        # an empty declared set (e.g. formats=()) degenerates to
-        # all-null columns, never a decode
-        return out if out is not None else F.lit(None)
-
-    fmt = chain(lambda name, w, h, px: F.lit(name))
-    width = chain(lambda name, w, h, px: w)
-    height = chain(lambda name, w, h, px: h)
-    pixels = chain(lambda name, w, h, px: px)
-    if not branches:
-        pixels = F.lit(None).cast("array<int>")
-    return media.select(
-        "media_id",
-        fmt.cast("string").alias("img_format"),
-        width.cast("int").alias("width"),
-        height.cast("int").alias("height"),
-        pixels.alias("pixels"),
-    )
-
-
 def _header_payload(media_id: int, w: int, h: int) -> bytes:
     """The header stream of ``synthesize_header_media`` for one id:
     JPEG for ``id % 3 == 0`` (SOI, a JFIF APP0, one DQT segment with
@@ -1863,7 +1640,7 @@ def _header_payload(media_id: int, w: int, h: int) -> bytes:
         )
     if media_id % 3 == 1:
         return (
-            _CODEC_SIGS["png"] + bytes.fromhex("0000000D49484452")
+            _PNG_MAGIC + bytes.fromhex("0000000D49484452")
             + struct.pack(">II", w, h) + bytes.fromhex("0802000000DEADBEEF")
         )
     sig = b"GIF87a" if media_id % 2 == 0 else b"GIF89a"
@@ -2743,8 +2520,7 @@ def decode_gif_frames(
     """ANIMATED GIF decode: ONE ROW PER FRAME — (media_id,
     gif_format, width, height, n_frames, frame_idx, pixels) — the GIF
     sibling of ``decode_y4m_frames``. Runs ``decode_gif_anim`` once
-    per payload in the Arrow-batched stage ``decode_pixels`` uses for
-    PNG and GIF. A structural failure (any exception: signature,
+    per payload in the module's Arrow stage. A structural failure (any exception: signature,
     screen, truncated or over-cap block stream, missing trailer)
     keeps one all-null row, so the operator is total; a per-frame
     failure (descriptor geometry, bad mcs, a corrupt LZW stream, an

@@ -121,9 +121,9 @@ def q_e6_pixel_decode(spark, sf_dir):
     spec-compliant BMP (even ids) / PPM (odd ids) binaries are
     encoded from the closed-form pixel formula (Python encoders in
     ``synthesize_decodable_media``'s Arrow stage), then decoded back
-    by the pure-Spark byte-expression decoder (``decode_pixels`` —
-    undoes BMP's bottom-up rows, BGR order, 4-byte stride; parses the
-    PPM ASCII header). The oracle recomputes the pixels directly from
+    by ``decode_pixels`` (the stdlib ``decode_media`` in the same
+    Arrow stage — undoes BMP's bottom-up rows, BGR order, 4-byte
+    stride; parses the PPM ASCII header). The oracle recomputes the pixels directly from
     the formula, so any layout mistake on EITHER side of the round
     trip mismatches. Pixels are hex-packed to a scalar column (r10 —
     the r9 array-valued shape ERRORed in the driver's pandas
@@ -145,7 +145,8 @@ def q_e6_pixel_decode_paletted(spark, sf_dir):
     """Pixel decode for the r9 uncompressed additions: 8-bit PALETTED
     BMP (even ids — index rows bottom-up at 1-byte stride padding,
     BGR0 palette lookup) and binary PGM P5 (odd ids — grayscale
-    expanded to R=G=B). Same closed-form trap as e6_pixel_decode: the
+    expanded to R=G=B), decoded by ``decode_media`` in
+    ``decode_pixels``'s Arrow stage. Same closed-form trap as e6_pixel_decode: the
     oracle recomputes RGB straight from the pixel/palette formulas,
     so the round trip only matches if the decoder undoes the real
     file layout including the palette indirection. Hex-packed scalar
@@ -606,9 +607,9 @@ def q_e6_wav_decode(spark, sf_dir):
     images to the 'audio' kind): tiny spec-compliant 8-bit mono PCM
     WAV binaries are encoded from the closed-form sample formula
     (``encode_wav`` in ``synthesize_decodable_audio``'s Arrow stage),
-    then decoded back by the pure-Spark byte-expression parser
-    (``decode_samples`` — RIFF/WAVE/fmt/data chunk layout read from
-    the actual bytes). The oracle recomputes the samples straight
+    then decoded back by ``decode_samples`` (the stdlib
+    ``decode_audio`` in the same Arrow stage — RIFF/WAVE/fmt/data
+    chunk layout read from the actual bytes). The oracle recomputes the samples straight
     from the formula, so a header-layout mistake on either side of
     the round trip mismatches. Samples hex-packed (the driver-safe
     scalar shape, gate-rotation-ready)."""
@@ -635,9 +636,9 @@ def q_e6_y4m_decode(spark, sf_dir):
     image r8/r9, audio + video r10): tiny spec-compliant mono
     YUV4MPEG2 streams encoded from the closed-form luma formula
     (``encode_y4m`` in ``synthesize_decodable_video``'s Arrow
-    stage), then decoded back frame-by-frame by the pure-Spark chunk
-    parser (``decode_y4m_frames`` — variable-length ASCII header,
-    per-frame FRAME markers verified). One row per frame, luma hex-packed
+    stage), then decoded back frame-by-frame by ``decode_y4m_frames``
+    (the stdlib ``decode_video`` in the same Arrow stage —
+    variable-length ASCII header, per-frame FRAME markers verified). One row per frame, luma hex-packed
     (driver-safe scalar shape)."""
     from decision_tree_stuff_spark.operators.multimodal import (
         decode_y4m_frames,

@@ -39,7 +39,6 @@ _SLOW_TESTS = frozenset(
     (
         "test_audit.py::test_audit_matches_per_stage_counts",
         "test_classifier.py::test_lr_discriminates_separable_labels",
-        "test_classifier.py::test_lr_fused_equals_loop",
         "test_classifier.py::test_lr_joined_path_matches_dense_bitwise",
         "test_classifier.py::test_lr_rounding_contract_is_partitioning_independent",
         "test_clustering.py::test_components_match_union_find",

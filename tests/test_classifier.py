@@ -140,29 +140,3 @@ def test_lr_empty_corpus_raises(spark):
     docs = spark.createDataFrame([], "doc_id bigint, text string, y int")
     with pytest.raises(ValueError, match="empty"):
         lr_fit(docs, "y", n_buckets=8, iters=1)
-
-
-def test_lr_fused_equals_loop(spark):
-    """r14 optimization: the fused single-action dense fit must
-    produce bit-identical weights to the pre-r14 per-iteration
-    collect loop (kept as ``_lr_fit_dense_loop``) — same BIGINT
-    micro-unit arithmetic, same IEEE double update ops in the same
-    order."""
-    from decision_tree_stuff_spark.operators.classifier import (
-        _lr_fit_dense_fused,
-        _lr_fit_dense_loop,
-    )
-
-    rows = [
-        (i, f"tok{i % 13} tok{(i * 3) % 17} tok{(i * 5) % 11}", i % 2)
-        for i in range(70)
-    ] + [(70, "", 1), (71, None, 0)]
-    docs = spark.createDataFrame(rows, "doc_id bigint, text string, y int")
-    for iters in (1, 4):
-        fused = _lr_fit_dense_fused(
-            docs, "y", 32, iters, 0.3, "doc_id", "text", 6, True
-        )
-        loop = _lr_fit_dense_loop(
-            docs, "y", 32, iters, 0.3, "doc_id", "text", 6, True
-        )
-        assert fused == loop, iters

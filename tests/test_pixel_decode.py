@@ -1,7 +1,7 @@
-"""E-6 pixel decode (multimodal.py): the pure-Spark BMP/PPM decoder
-against a HAND-CRAFTED golden BMP (external bytes, not our encoder),
-the encode→decode round trip vs the closed-form pixel formula, and
-the Python single-payload decoder's agreement with the Spark path.
+"""E-6 media decode (multimodal.py): the Spark decode stage against
+HAND-CRAFTED golden files (external bytes, not our encoders), the
+encode→decode round trips vs the closed-form formulas, and the
+stdlib single-payload decoders' agreement with the Spark output.
 """
 
 from __future__ import annotations
@@ -844,33 +844,46 @@ def test_encode_png_oversize_raises_instead_of_corrupt(spark):
 
 
 def test_decode_formats_contract(spark):
-    """r12: the ``formats`` inventory contract — a declared subset
-    prunes the plan (no union / no PNG expressions when png is
-    excluded) while matching auto-dispatch output exactly; rows
-    outside the declared set null out rather than mis-decode; unknown
-    names raise."""
+    """r12: the ``formats`` inventory contract. Every declared set is
+    ONE Arrow stage over the input (one MapInArrow, no Union); rows of
+    a declared format decode exactly as auto-dispatch does, rows whose
+    format is declared out null out, and unknown names raise."""
     import pytest
 
+    from decision_tree_stuff_spark.operators.multimodal import (
+        _DECODE_FORMATS,
+    )
+
     docs = spark.createDataFrame([(i,) for i in range(1, 9)], "doc_id bigint")
-    media = synthesize_decodable_media(docs)  # bmp even / ppm odd
+    # bmp even / ppm odd, rebuilt as local rows so the only Python
+    # stage in a plan is the decoder's
+    media = spark.createDataFrame(
+        synthesize_decodable_media(docs).select("media_id", "payload").collect(),
+        "media_id bigint, payload binary",
+    )
 
-    auto = {r["media_id"]: r for r in decode_pixels(media).collect()}
-    hinted = {
-        r["media_id"]: r
-        for r in decode_pixels(media, formats=("bmp", "ppm")).collect()
-    }
-    assert {m: (r["img_format"], r["width"], list(r["pixels"]))
-            for m, r in auto.items()} == \
-           {m: (r["img_format"], r["width"], list(r["pixels"]))
-            for m, r in hinted.items()}
+    def decoded(formats):
+        return {
+            r["media_id"]: (r["img_format"], r["width"], r["height"],
+                            None if r["pixels"] is None else list(r["pixels"]))
+            for r in decode_pixels(media, formats=formats).collect()
+        }
 
-    # the hinted plan is the single projection — no Union, no Filter
-    plan = decode_pixels(
-        media, formats=("bmp", "ppm")
-    )._jdf.queryExecution().executedPlan().toString()
-    assert "Union" not in plan and "png" not in plan.lower()
+    auto = decoded(None)
+    assert {f for f, *_ in auto.values()} == {"bmp", "ppm"}
+    null = (None, None, None, None)
+    for formats in (("bmp", "ppm"), ("bmp",), ("ppm",), ("png",),
+                    ("png", "ppm"), ("gif", "bmp"), _DECODE_FORMATS, ()):
+        plan = decode_pixels(
+            media, formats=formats
+        )._jdf.queryExecution().executedPlan().toString()
+        assert plan.count("MapInArrow") == 1, (formats, plan)
+        assert "Union" not in plan, formats
+        assert decoded(formats) == {
+            m: r if r[0] in formats else null for m, r in auto.items()
+        }, formats
 
-    # png-only media under a png-only hint: single plan, decodes
+    # png-only media under a png-only contract decodes
     png_media = synthesize_decodable_media(docs, formats=("png", "png"))
     got = {
         r["media_id"]: r["img_format"]
@@ -878,64 +891,51 @@ def test_decode_formats_contract(spark):
     }
     assert set(got.values()) == {"png"}
 
-    # a declared-out format nulls instead of decoding: bmp rows under
-    # a png-only contract
-    out = {
-        r["media_id"]: r["img_format"]
-        for r in decode_pixels(media, formats=("png",)).collect()
-    }
-    assert set(out.values()) == {None}
-
     with pytest.raises(ValueError, match="unknown formats"):
         decode_pixels(media, formats=("bmp", "jpeg2000"))
 
-    # r13 (advice fix): pruning is PER-FORMAT, not just png/non-png —
-    # a ('bmp',) contract on a bmp/ppm mix nulls the ppm rows (their
-    # branch is absent) and the plan carries no ppm machinery (the P6
-    # header regex) at all
-    only_bmp = {
-        r["media_id"]: r["img_format"]
-        for r in decode_pixels(media, formats=("bmp",)).collect()
-    }
-    assert {m: f for m, f in only_bmp.items() if f is not None} == {
-        m: "bmp" for m, r in auto.items() if r["img_format"] == "bmp"
-    }
-    assert {f for m, f in only_bmp.items()
-            if auto[m]["img_format"] == "ppm"} == {None}
-    # the ppm/pgm machinery is the header regexp walk; with only bmp
-    # declared no regexp_extract survives in the plan (the P6/P5
-    # strings visible in the plan text belong to the synthesize-side
-    # payload construction, not the decoder)
-    bplan = decode_pixels(
-        media, formats=("bmp",)
-    )._jdf.queryExecution().executedPlan().toString()
-    assert "regexp_extract" not in bplan
-    # and the declared rows decode identically to auto-dispatch
-    got_b = {
-        m: list(r["pixels"])
-        for m, r in (
-            (rr["media_id"], rr)
-            for rr in decode_pixels(media, formats=("bmp",)).collect()
-        )
-        if r["pixels"] is not None
-    }
-    want_b = {
-        m: list(r["pixels"])
-        for m, r in auto.items()
-        if r["img_format"] == "bmp"
-    }
-    assert got_b == want_b
 
-    # mixed contract including png still prunes the non-png branch
-    # per-format: ('png', 'ppm') on bmp/ppm media decodes ppm only
-    mixed = {
-        r["media_id"]: r["img_format"]
-        for r in decode_pixels(media, formats=("png", "ppm")).collect()
+def test_truncated_uncompressed_images_null_out(spark):
+    """A payload too short for its header's w×h pixels is rejected by
+    ``decode_media`` and nulls out in Spark — not a short pixel list in
+    Python and a full-length array with null holes in Spark. A PPM/PGM
+    header must end within ``_PNM_HEADER_CAP`` (32) bytes on both."""
+    from decision_tree_stuff_spark.operators import multimodal as mm
+    from decision_tree_stuff_spark.operators.multimodal import (
+        encode_bmp,
+        encode_pgm,
+        encode_ppm,
+    )
+
+    whole = {
+        "ppm": encode_ppm(3, 4, 3),
+        "pgm": encode_pgm(3, 4, 3),
+        "bmp": encode_bmp(3, 4, 3),
     }
-    assert {f for m, f in mixed.items()
-            if auto[m]["img_format"] == "bmp"} == {None}
-    assert {f for m, f in mixed.items()
-            if auto[m]["img_format"] == "ppm"} == {"ppm"}
+    cut = {f: p[:-5] for f, p in whole.items()}
+    for f, p in cut.items():
+        with pytest.raises(ValueError, match="truncated"):
+            decode_media(p, f)
+    assert mm._PNM_HEADER_CAP == 32
+    head = b"P6\n%s 3\n255\n"
+    at_cap = head % b"4".rjust(22, b"0") + bytes(36)
+    past_cap = head % b"4".rjust(23, b"0") + bytes(36)
+    assert (len(at_cap) - 36, len(past_cap) - 36) == (32, 33)
+    assert decode_media(at_cap, "ppm") == (4, 3, [0] * 36)
+    with pytest.raises(ValueError, match="header"):
+        decode_media(past_cap, "ppm")
+    payloads = [*whole.values(), *cut.values(), at_cap, past_cap]
+    media = spark.createDataFrame(
+        list(enumerate(payloads)), "media_id bigint, payload binary"
+    )
+    got = {
+        r["media_id"]: (r["img_format"], r["width"], r["pixels"])
+        for r in decode_pixels(media).collect()
+    }
+    assert [got[i][0] for i in range(len(payloads))] == [
+        "ppm", "pgm", "bmp", None, None, None, "ppm", None
+    ]
+    assert all(got[i] == (None, None, None) for i in (3, 4, 5, 7))
 
 
 # --- fixed-Huffman deflate PNG (r12) ------------------------------------
