@@ -10,8 +10,8 @@ times the training recursion itself (driver-coordinated multi-job).
 Noise protocol (r13, r12 verdict task 8): the box has a documented
 ±30-50% cross-session noise band (BASELINE.md). Round notes quote
 `ratio_ex_dominant` FIRST; any row whose round-over-round delta
-exceeds the ±50% band must be re-timed same-session min-of-3 (the
-scripts/drift_ab_r11.py template) BEFORE it enters the round notes as
+exceeds the ±50% band must be re-timed same-session min-of-3
+(interleaved old/new runs) BEFORE it enters the round notes as
 a regression or an improvement — cross-session deltas on untouched
 plans are presumed noise until a same-session A/B says otherwise.
 The parsed-line fields themselves are unchanged.
@@ -367,13 +367,6 @@ def main() -> None:
     t0 = time.time()
     _noop_write(dt.transform(base))
     timings["tree_transform"] = round(time.time() - t0, 3)
-
-    t0 = time.time()
-    dt_lw = DecisionTree(
-        DecisionTreeParams([], "class", "mean", "entropy", max_depth=4)
-    )
-    dt_lw.fit(base.select(*FEATURES, "class"), strategy="level_wise")
-    timings["tree_fit_level_wise"] = round(time.time() - t0, 3)
 
     def _drain_session_garbage() -> None:
         # Spark's ContextCleaner releases finished shuffles/broadcasts

@@ -20,7 +20,10 @@ Polars) Spark-first:
   Child (row-count, class-sum) stats come back exactly from the split
   search, so pure/stopped children fit with ZERO additional jobs; the
   reference runs three extra scalar passes per node
-  (dtree.py:206,211-213,219).
+  (dtree.py:206,211-213,219). This is the only fit plan: a PLANET-style
+  level-wise plan (one pass per depth, fewer jobs) re-scanned and
+  re-routed every row at every level and fit 2x slower on the
+  ``perfbench`` ``tree`` workload, so it was deleted (ROADMAP item 2).
 
 Semantic quirks preserved (SURVEY.md §2.4): Q-1 unweighted impurity,
 Q-2 empty-side optimism, Q-4 entropy-gated stops regardless of split
@@ -310,12 +313,7 @@ class DecisionTree:
 
     # -- training ------------------------------------------------------
 
-    def fit(
-        self,
-        dataset: DataFrame,
-        prune: bool = False,
-        strategy: str = "depth_first",
-    ) -> None:
+    def fit(self, dataset: DataFrame, prune: bool = False) -> None:
         """Train — reference dtree.py:203-254 semantics.
 
         One fused aggregate computes (row-count, class-sum) — the
@@ -323,28 +321,7 @@ class DecisionTree:
         entropy query, height; dtree.py:206,211-213,219) in a single
         job; entropy and majority derive from those two numbers on the
         driver (labels are binary {0,1}).
-
-        ``strategy='level_wise'`` trains the identical tree with the
-        PLANET-style plan (2 jobs per depth instead of 2 per node —
-        see plans/level_wise.py for the crossover analysis).
-
-        Selection rule (measured, SCALING_r09.md): pick level_wise
-        when ``max_depth >= 6`` AND the frame is beyond bench scale
-        (millions of rows) — 2^d per-node passes lose to d per-level
-        passes once both the node count and per-pass data cost grow
-        (sf10/depth 6: 36.8 s vs 45.6 s). Depth-first wins shallow
-        trees and small frames (its per-node jobs are sub-second). At
-        cluster scale the choice is unambiguous: depth-first launches
-        2^d full scans, level_wise launches d.
         """
-        if strategy == "level_wise":
-            from decision_tree_stuff_spark.plans import fit_level_wise
-
-            fitted = fit_level_wise(self._params, dataset, prune=prune)
-            self._root = fitted._root
-            self._entropy = fitted._entropy
-            return
-        assert strategy == "depth_first", f"unknown strategy {strategy!r}"
         class_name = self._params.class_column
         # min/max ride along in the same job to validate the binary
         # {0,1} label assumption loudly — non-binary labels would
@@ -505,9 +482,9 @@ class DecisionTree:
             self._root.right = self._right_subtree.learned_tree  # type: ignore[union-attr]
 
     def leaf_classes(self) -> List[int]:
-        """Reference dtree.py:256-260. Trees adopted whole (level-wise
-        fit, ``from_dict``) carry the full structure in ``_root``
-        without subtree wrappers — walk the node graph directly then,
+        """Reference dtree.py:256-260. Trees adopted whole
+        (``from_dict``) carry the full structure in ``_root`` without
+        subtree wrappers — walk the node graph directly then,
         same left-to-right order as the wrapper recursion."""
         if isinstance(self._root, LeafNode):
             return [self._root.label]

@@ -43,10 +43,6 @@ class _HasTreeParams(Params):
         Params._dummy(), "maxDepth", "max depth; -1 = unlimited",
         typeConverter=TypeConverters.toInt,
     )
-    strategy = Param(
-        Params._dummy(), "strategy", "depth_first | level_wise",
-        typeConverter=TypeConverters.toString,
-    )
     prune = Param(
         Params._dummy(), "prune", "collapse uniform subtrees after fit",
         typeConverter=TypeConverters.toBoolean,
@@ -66,7 +62,6 @@ class DecisionTreeStuffClassifier(Estimator, _HasTreeParams):
         minSplitSamples: int = 0,
         minSplitEntropy: float = 0.0,
         maxDepth: int = -1,
-        strategy: str = "depth_first",
         prune: bool = False,
     ):
         super().__init__()
@@ -77,7 +72,6 @@ class DecisionTreeStuffClassifier(Estimator, _HasTreeParams):
             minSplitSamples=0,
             minSplitEntropy=0.0,
             maxDepth=-1,
-            strategy="depth_first",
             prune=False,
         )
         self._set(**self._input_kwargs)
@@ -93,11 +87,7 @@ class DecisionTreeStuffClassifier(Estimator, _HasTreeParams):
             max_depth=self.getOrDefault("maxDepth"),
         )
         tree = DecisionTree(params)
-        tree.fit(
-            dataset,
-            prune=self.getOrDefault("prune"),
-            strategy=self.getOrDefault("strategy"),
-        )
+        tree.fit(dataset, prune=self.getOrDefault("prune"))
         return DecisionTreeStuffModel(tree)
 
 

@@ -344,10 +344,11 @@ def with_image_header_meta(
 
 
 def _le32(payload, pos: int):
-    """Little-endian uint32 at 1-based offset ``pos``."""
-    return (
-        _le16(payload, pos) + _le16(payload, pos + 2) * F.lit(65536)
-    ).cast("bigint")
+    """Little-endian uint32 at 1-based offset ``pos``. The high half
+    widens to bigint BEFORE the multiply: an int product overflows
+    (ARITHMETIC_OVERFLOW under ANSI) once the value reaches 2^31."""
+    high = _le16(payload, pos + 2).cast("bigint")
+    return _le16(payload, pos) + high * F.lit(65536)
 
 
 def with_audio_header_meta(

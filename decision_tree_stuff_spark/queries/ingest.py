@@ -62,7 +62,6 @@ def ingest_stages(
     spark,
     sf_dir,
     checkpoint_mode: str = "local",
-    barrier_mode: str = "rows",
 ):
     """The pipeline as ordered ``(name, DataFrame -> DataFrame)``
     stages over ``documents`` — shared by the gate query (composed
@@ -76,40 +75,18 @@ def ingest_stages(
     (requires ``setCheckpointDir``; the right switch for a multi-hour
     100 TB ingest where one preemption must not restart the whole
     pipeline — production Dolma-style runs materialize intermediate
-    shards between phases for exactly this reason).
-
-    ``barrier_mode`` (r11, r10 verdict task 9 — the documented
-    SCALING_r10 lever): ``'rows'`` checkpoints the surviving rows
-    INCLUDING the raw text (~0.5 GB materialized at sf10p);
-    ``'ids'`` checkpoints only the kept id set and re-derives the
-    rows by joining the raw parquet scan back — the barrier then
-    stores 8 bytes/doc instead of the text, at the price of one extra
-    scan + join per barrier. Both modes produce the identical
-    manifest (pinned in tests/test_ingest_batch.py); the sf10p A/B
-    (SCALING_r11.md) records which wins at scale."""
+    shards between phases for exactly this reason). A barrier stores
+    the surviving rows including the raw text."""
     if checkpoint_mode not in ("local", "reliable"):
         raise ValueError(
             f"checkpoint_mode must be 'local' or 'reliable', got "
             f"{checkpoint_mode!r}"
-        )
-    if barrier_mode not in ("rows", "ids"):
-        raise ValueError(
-            f"barrier_mode must be 'rows' or 'ids', got {barrier_mode!r}"
         )
 
     def _checkpoint(df):
         if checkpoint_mode == "reliable":
             return df.checkpoint(eager=True)
         return df.localCheckpoint(eager=True)
-
-    def barrier(df):
-        if barrier_mode == "ids":
-            # both barriered stages are keep-type filters over raw
-            # document rows, so the kept-id set re-derives them from
-            # the (column-pruned, pushdown-eligible) scan exactly
-            kept = _checkpoint(df.select("doc_id"))
-            return _docs(spark, sf_dir).join(kept, "doc_id")
-        return _checkpoint(df)
 
     from decision_tree_stuff_spark.operators.clustering import (
         dedup_keep_collapsed,
@@ -145,7 +122,7 @@ def ingest_stages(
         )
         # barrier (see bloom below): gopher joins its keep set back
         # onto its input, so the LSH+CC pipeline would execute twice
-        return barrier(out)
+        return _checkpoint(out)
 
     def gopher(d):
         keep = gopher_rules(d, min_words=15).where("keep").select("doc_id")
@@ -179,7 +156,7 @@ def ingest_stages(
         # materialize between ingest phases anyway (Dolma writes
         # intermediate shards); the CC stage already runs build-time
         # jobs, so the row was never a literally-lazy plan.
-        return barrier(out)
+        return _checkpoint(out)
 
     def semantic(d):
         flagged = (

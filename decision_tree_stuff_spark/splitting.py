@@ -9,9 +9,10 @@ Re-expresses the reference split-search dataflow
 * ``compute_all_splits`` is the reference's melt → window-threshold →
   conditional-agg → score → sort program (splitting.py:116-146) as one
   declarative DataFrame plan, oracle-checkable in ANSI SQL.
-* ``score_all_splits_wide`` is the scale path used by ``fit``: two
-  shuffle-free wide-aggregation passes (k features → one row of 4k
-  aggregates) instead of exploding rows×k through an unpivot + window.
+* ``score_all_splits_wide`` is the split search of ``fit``, called
+  once per node of the depth-first recursion: two shuffle-free
+  wide-aggregation passes (k features → one row of 4k aggregates)
+  instead of exploding rows×k through an unpivot + window.
   At 100 TB the unpivot path shuffles rows×features rows and hashes
   them into k heavily-skewed window partitions; the wide-agg path is
   two map-side-combined scans with a single-row result.
@@ -372,24 +373,6 @@ def chunked_agg_row(
     out: Dict[str, Any] = {}
     for i in range(0, len(aggs), chunk):
         out.update(df.agg(*aggs[i : i + chunk]).first().asDict())
-    return out
-
-
-def chunked_groupby_agg_rows(
-    df: DataFrame,
-    key: str,
-    aggs: List[Column],
-    chunk: Optional[int] = None,
-) -> Dict[Any, Dict[str, Any]]:
-    """``df.groupBy(key).agg(*aggs).collect()`` as ⌈len/chunk⌉ jobs,
-    merged into {key: row-dict} — the wide-feature path for the
-    level-wise planner (keys must be consistent across chunks, which
-    holds for any deterministic grouping column)."""
-    chunk = chunk or AGG_CHUNK_COLUMNS
-    out: Dict[Any, Dict[str, Any]] = {}
-    for i in range(0, len(aggs), chunk):
-        for r in df.groupBy(key).agg(*aggs[i : i + chunk]).collect():
-            out.setdefault(r[key], {}).update(r.asDict())
     return out
 
 

@@ -92,7 +92,11 @@ def materialized_size_bytes(df: DataFrame):
     the size-conditional broadcast decision the planner cannot.
 
     Returns bytes (mem + disk) or None when the frame is not a plain
-    checkpoint scan / the storage info is unavailable.
+    checkpoint scan, the storage info is unavailable, or the size is
+    not the whole frame's: zero stored bytes, or fewer cached
+    partitions than the RDD has (after a lost block the byte total no
+    longer describes the frame, and broadcasting a frame of unknown
+    size could OOM the driver — unknown size means no broadcast).
     """
     try:
         plan = df._jdf.queryExecution().analyzed()
@@ -101,7 +105,10 @@ def materialized_size_bytes(df: DataFrame):
         rdd_id = plan.rdd().id()
         for info in df.sparkSession.sparkContext._jsc.sc().getRDDStorageInfo():
             if info.id() == rdd_id:
-                return int(info.memSize()) + int(info.diskSize())
+                size = int(info.memSize()) + int(info.diskSize())
+                if size == 0 or info.numCachedPartitions() < info.numPartitions():
+                    return None
+                return size
     except Exception:  # py4j hiccup — caller falls back to no hint
         return None
     return None
@@ -139,12 +146,8 @@ def broadcast_if_small(df: DataFrame, size_hint_of: DataFrame = None):
     Scale-safe by construction: the hint only fires when the bytes
     are actually small, so a 100 TB edge list keeps its shuffle join.
     """
-    import os
-
     from pyspark.sql import functions as F
 
-    if os.environ.get("SPARK_GRAFT_NO_SIZE_HINT", "0") == "1":
-        return df  # A/B kill-switch / escape hatch
     src = size_hint_of if size_hint_of is not None else df
     size = materialized_size_bytes(src)
     if size is None:

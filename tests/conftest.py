@@ -34,7 +34,9 @@ SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 # cost). test_e7b_scale_smoke carries its own inline marker. The PNG
 # and GIF tests were re-measured after decode, and then payload
 # synthesis, moved to the Arrow-batched Python stage; those now under
-# 10 s left the list.
+# 10 s left the list. test_properties::test_fit_matches_python_oracle
+# (18.4 s call on local[4]) is kept in the default run on purpose: it
+# is the independent oracle for the one decision-tree fit plan.
 _SLOW_TESTS = frozenset(
     (
         "test_audit.py::test_audit_matches_per_stage_counts",
@@ -50,12 +52,10 @@ _SLOW_TESTS = frozenset(
         "test_forest.py::test_forest_fit_is_deterministic",
         "test_ingest_batch.py::test_bench_members_never_survive",
         "test_ingest_batch.py::test_funnel_audit_matches_independent_counts",
-        "test_ingest_batch.py::test_ids_barrier_mode_identical_manifest",
         "test_ingest_batch.py::test_packed_layout_is_gap_free",
         "test_ingest_batch.py::test_reliable_checkpoint_mode_identical_manifest",
         "test_ingest_pipeline.py::test_stream_ingest_bloom_semantic_match_e12_stages",
         "test_ingest_pipeline.py::test_stream_ingest_incremental_dedup_stage",
-        "test_level_wise.py::test_level_wise_gates_and_prune",
         "test_null_robustness.py::test_r7_lm_and_classifier_ops_handle_null_and_empty",
         "test_null_robustness.py::test_r7_selection_ops_handle_null_and_empty",
         "test_null_robustness.py::test_unigram_encode_oracle_parity_on_null_text",
@@ -67,12 +67,11 @@ _SLOW_TESTS = frozenset(
         "test_oracle_parity.py::test_oracle_parity[e3_kmeans_assign]",
         "test_oracle_parity.py::test_oracle_parity[e7b_minhash_dedup_keep]",
         "test_plans.py::test_pq_encode_is_shuffle_free_projection",
-        "test_properties.py::test_fit_matches_python_oracle",
         "test_registry.py::test_gate_schemas_are_driver_canonicalizable",
         "test_regression_tree.py::test_gbt_training_loss_decreases",
         "test_similarity_quality.py::test_ivf_pq_full_probe_equals_plain_pq",
         "test_similarity_quality.py::test_pq_candidates_cover_exact_neighbors",
-        "test_wide_features.py::test_chunked_fit_identical_both_strategies",
+        "test_wide_features.py::test_chunked_fit_identical",
     )
 )
 

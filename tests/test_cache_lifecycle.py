@@ -1,7 +1,7 @@
 """Cache-lifecycle pins for the r14 replay caches (r14 advice + r14
 verdict task 7).
 
-Three families of claim:
+Four families of claim:
 
 1. Release-on-drop: the ``temperature_sample`` counts cache
    (default-on) and the ``bm25_topk`` tf cache (opt-in) must leave the
@@ -19,6 +19,8 @@ Three families of claim:
    unpersisting before execution, which leaves the output correct but
    replays the subtree. A regression (dropped keepalive, re-wrapped
    result) turns these red.
+4. Size-hint fail-safety: ``broadcast_if_small`` must not broadcast a
+   checkpoint whose stored size covers only part of its partitions.
 """
 
 from __future__ import annotations
@@ -198,3 +200,56 @@ def test_e12_executed_plan_keeps_cache_scans(spark, sf_dir):
 MIN_IMTS_RETRIEVAL = 8
 MIN_IMTS_JACCARD = 2
 MIN_IMTS_E12 = 4
+
+
+def test_broadcast_if_small_skips_partially_cached_checkpoint(spark):
+    """A checkpoint that lost a block has no trustworthy stored size:
+    the block manager's byte total no longer describes the frame (on
+    Spark 4.1 a removal even ADDS the removed block's bytes again, so
+    4 equal blocks of B read 5B). The size must read as unknown and
+    the frame must come back without a broadcast hint, even at a
+    threshold that the stale byte total fits under."""
+    import time
+
+    from decision_tree_stuff_spark.utils import (
+        broadcast_if_small,
+        materialized_size_bytes,
+        release_local_checkpoint,
+    )
+
+    df = (
+        spark.range(0, 4000, numPartitions=4)
+        .select("id", F.repeat(F.lit("x"), 50).alias("pad"))
+        .localCheckpoint(eager=True)
+    )
+    full = materialized_size_bytes(df)
+    assert full and full > 0
+    jvm = spark.sparkContext._jvm
+    rdd_id = df._jdf.queryExecution().analyzed().rdd().id()
+
+    def storage_info():
+        for info in spark.sparkContext._jsc.sc().getRDDStorageInfo():
+            if info.id() == rdd_id:
+                return info
+        return None
+
+    jvm.org.apache.spark.SparkEnv.get().blockManager().removeBlock(
+        jvm.org.apache.spark.storage.RDDBlockId(rdd_id, 0), True
+    )
+    deadline = time.time() + 30
+    while storage_info().numCachedPartitions() == 4 and time.time() < deadline:
+        time.sleep(0.1)  # block updates reach the status store async
+    info = storage_info()
+    assert (info.numCachedPartitions(), info.numPartitions()) == (3, 4)
+    stale = int(info.memSize()) + int(info.diskSize())
+    assert stale > 0
+
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    spark.conf.set(key, str(max(stale, full)))
+    try:
+        assert materialized_size_bytes(df) is None
+        assert broadcast_if_small(df) is df
+    finally:
+        spark.conf.set(key, old)
+        release_local_checkpoint(df)

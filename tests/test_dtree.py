@@ -261,17 +261,6 @@ def test_strict_feature_columns_restricts_fit(heterodf):
     used = attrs_used(dt.learned_tree, set())
     assert used <= {"y_coord"}, used
 
-    # level-wise strategy honors the same restriction
-    dt_lw = DecisionTree(
-        DecisionTreeParams(
-            ["y_coord"], "color", "midpoint", "entropy",
-            strict_feature_columns=True,
-        )
-    )
-    dt_lw.fit(heterodf, strategy="level_wise")
-    assert attrs_used(dt_lw.learned_tree, set()) <= {"y_coord"}
-    assert dt_lw.dict() == dt.dict()
-
 
 def test_strict_feature_columns_validates_names(heterodf):
     for bad in (["nope"], ["color"], []):

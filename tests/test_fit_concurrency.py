@@ -91,8 +91,7 @@ def test_deep_path_tree_no_thread_explosion(spark, monkeypatch):
     assert len(dt.leaf_classes()) == 13
 
 
-@pytest.mark.parametrize("strategy", ["depth_first", "level_wise"])
-def test_interior_label_values_rejected(spark, strategy):
+def test_interior_label_values_rejected(spark):
     """{0, 0.5, 1} passes a min/max-only guard yet would train a
     silently-wrong tree — the fused aggregate must count interior
     values and refuse."""
@@ -101,14 +100,5 @@ def test_interior_label_values_rejected(spark, strategy):
     )
     dt = DecisionTree(PARAMS)
     with pytest.raises(ValueError, match="binary"):
-        dt.fit(df, strategy=strategy)
+        dt.fit(df)
 
-
-def test_leaf_classes_after_level_wise_fit(spark):
-    df = _alternating(spark, 8)
-    dt = DecisionTree(PARAMS)
-    dt.fit(df)
-    lw = DecisionTree(PARAMS)
-    lw.fit(df, strategy="level_wise")
-    assert lw.leaf_classes() == dt.leaf_classes()
-    assert lw._entropy == dt._entropy

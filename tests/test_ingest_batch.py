@@ -82,28 +82,6 @@ def test_reliable_checkpoint_mode_identical_manifest(spark, tmp_path):
             sc._jsc.sc().setCheckpointDir(None)
 
 
-def test_ids_barrier_mode_identical_manifest(spark):
-    """r11 (r10 verdict task 9): barrier_mode is a storage-shape
-    knob, not a semantics knob — 'ids' (checkpoint the kept id set,
-    re-derive rows from the scan) must produce the exact manifest
-    'rows' does."""
-    import pytest
-
-    with pytest.raises(ValueError, match="barrier_mode"):
-        ingest_stages(spark, SF_DIR, barrier_mode="banana")
-
-    rows_mode = _docs(spark, SF_DIR)
-    for _, fn in ingest_stages(spark, SF_DIR, barrier_mode="rows"):
-        rows_mode = fn(rows_mode)
-    ids_mode = _docs(spark, SF_DIR)
-    for _, fn in ingest_stages(spark, SF_DIR, barrier_mode="ids"):
-        ids_mode = fn(ids_mode)
-    cols = ["doc_id", "lang", "n_tokens", "pack_id", "pack_offset"]
-    a = sorted(map(tuple, rows_mode.select(*cols).collect()))
-    b = sorted(map(tuple, ids_mode.select(*cols).collect()))
-    assert a == b and a
-
-
 def test_packed_layout_is_gap_free(spark):
     rows = sorted(
         q_e12_batch_ingest(spark, SF_DIR).collect(),

@@ -1,10 +1,9 @@
-"""MLlib facade + fit(strategy=) wiring tests."""
+"""MLlib facade wiring tests."""
 
 from __future__ import annotations
 
 from pyspark.ml import Pipeline
 
-from decision_tree_stuff_spark.dtree import DecisionTree, DecisionTreeParams
 from decision_tree_stuff_spark.ml import (
     DecisionTreeStuffClassifier,
     DecisionTreeStuffModel,
@@ -23,24 +22,6 @@ def test_estimator_in_pipeline(heterodf, tmp_path):
     model.save_json(p)
     again = DecisionTreeStuffModel.load_json(p)
     assert again.tree.dict()["nodes"] == model.tree.dict()["nodes"]
-
-
-def test_fit_strategy_level_wise_matches(heterodf):
-    params = DecisionTreeParams(["x_coord", "y_coord"], "color", "midpoint", "entropy")
-    a = DecisionTree(params)
-    a.fit(heterodf)
-    b = DecisionTree(params)
-    b.fit(heterodf, strategy="level_wise")
-    assert a.dict() == b.dict()
-
-
-def test_estimator_level_wise_strategy(heterodf):
-    est = DecisionTreeStuffClassifier(
-        classCol="color", splittingMethod="midpoint", strategy="level_wise"
-    )
-    model = est.fit(heterodf)
-    out = model.transform(heterodf)
-    assert all(r["prediction"] == r["color"] for r in out.collect())
 
 
 def test_forest_estimator_in_pipeline(heterodf, tmp_path):

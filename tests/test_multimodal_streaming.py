@@ -286,6 +286,10 @@ def test_audio_header_meta_parses_real_wav(spark):
         (1, bytearray(wav_bytes(16000, 1, 16))),
         (2, bytearray(wav_bytes(44100, 2, 24))),
         (3, bytearray(b"definitely not RIFF data here........")),
+        # rate fields at and past the int range: the LE32 read must
+        # widen before it multiplies, or the whole job overflows
+        (4, bytearray(wav_bytes(3_000_000_000, 1, 8))),
+        (5, bytearray(wav_bytes(2**31 - 1, 1, 8))),
     ]
     df = spark.createDataFrame(rows, "media_id bigint, payload binary")
     out = {
@@ -297,6 +301,8 @@ def test_audio_header_meta_parses_real_wav(spark):
     assert out[1] == ("wav", 16000, 1, 16)
     assert out[2] == ("wav", 44100, 2, 24)
     assert out[3] == (None, None, None, None)
+    assert out[4] == ("wav", None, 1, 8)
+    assert out[5] == ("wav", 2147483647, 1, 8)
 
 
 def test_image_header_meta_parses_real_jpeg(spark):

@@ -1,7 +1,7 @@
 """Wide-feature (>AGG_CHUNK_COLUMNS aggregate expressions) training:
 the chunked aggregation path must be invisible — identical candidate
-tables and identical trees, depth-first and level-wise, when the wide
-aggregates are forced to split across many small jobs."""
+tables and identical trees when the wide aggregates are forced to
+split across many small jobs."""
 
 from __future__ import annotations
 
@@ -11,7 +11,6 @@ import pytest
 
 from decision_tree_stuff_spark import splitting
 from decision_tree_stuff_spark.dtree import DecisionTree, DecisionTreeParams
-from decision_tree_stuff_spark.plans import fit_level_wise
 from decision_tree_stuff_spark.splitting import score_all_splits_wide
 
 N_FEATURES = 24
@@ -42,7 +41,7 @@ def test_chunked_scoring_identical(widedf):
     assert len(whole) == N_FEATURES
 
 
-def test_chunked_fit_identical_both_strategies(widedf, monkeypatch):
+def test_chunked_fit_identical(widedf, monkeypatch):
     params = DecisionTreeParams([], "class", "mean", "entropy", max_depth=3)
     baseline = DecisionTree(params)
     baseline.fit(widedf)
@@ -51,6 +50,3 @@ def test_chunked_fit_identical_both_strategies(widedf, monkeypatch):
     chunked_df = DecisionTree(params)
     chunked_df.fit(widedf)
     assert chunked_df.dict() == baseline.dict()
-
-    chunked_lw = fit_level_wise(params, widedf)
-    assert chunked_lw.dict()["nodes"] == baseline.dict()["nodes"]
